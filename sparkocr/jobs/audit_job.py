@@ -41,20 +41,20 @@ from pyspark.sql import SparkSession, functions as F
 
 
 def audit_state(spark: SparkSession, store: str) -> dict:
+    from sparkocr import storage
     from sparkocr.pipeline import corpus_state, lsh_store
 
+    lsh, content = lsh_store.tables(store), corpus_state.tables(store)
     out: dict = {"store": store}
     out["lsh"] = lsh_store.check_lsh_store(spark, store)
     out["content"] = corpus_state.check_content_state(spark, store)
 
     sig_ids = (
-        lsh_store._committed_rows(spark, store, lsh_store._sigs_table(store))
+        storage.committed_rows(spark, lsh, "sigs")
         .select("doc_id").distinct().withColumn("s", F.lit(1))
     )
     content_ids = (
-        corpus_state._committed_rows(
-            spark, store, corpus_state._byid_table(store)
-        )
+        storage.committed_rows(spark, content, "byid")
         .select("doc_id").distinct().withColumn("c", F.lit(1))
     )
     row = (
@@ -68,15 +68,10 @@ def audit_state(spark: SparkSession, store: str) -> dict:
     out["lsh_only_docs"] = int(row["lo"] or 0)
     out["content_without_sigs"] = int(row["co"] or 0)
 
-    lsh_commits = {
-        r.append_id
-        for r in spark.table(lsh_store._commits_table(store)).collect()
-    }
-    content_commits = spark.table(
-        corpus_state._commits_table(store)
-    ).collect()
+    content_commits = storage.commits(spark, content)
     out["pending_increments"] = sorted(
-        lsh_commits - {r.append_id for r in content_commits}
+        {r.append_id for r in storage.commits(spark, lsh)}
+        - {r.append_id for r in content_commits}
     )
     out["increments"] = max(int(r.ordinal) for r in content_commits)
 

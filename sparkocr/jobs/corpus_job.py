@@ -115,17 +115,15 @@ from pyspark.sql import functions as F
 _INC_SPAN = 1 << 47
 
 
-def _write_summary(out_dir: str, counts: dict) -> None:
-    """Persist the run's counts beside its corpus (atomic tmp+rename) —
-    the job-level lineage artifact, the corpus counterpart of
-    extract_job's per-bucket manifests. A consumer auditing a corpus
-    directory reads the funnel that produced it without the driver
-    log."""
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, "_summary.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(counts, f)
-    os.replace(tmp, os.path.join(out_dir, "_summary.json"))
+def _write_summary(spark, out_dir: str, counts: dict) -> None:
+    """Persist the run's counts beside its corpus (atomic tmp+rename,
+    through the Hadoop filesystem so any ``--out`` URI works) — the
+    job-level lineage artifact, the corpus counterpart of extract_job's
+    per-bucket manifests. A consumer auditing a corpus directory reads
+    the funnel that produced it without the driver log."""
+    from sparkocr.checkpoint import publish_json_atomic
+
+    publish_json_atomic(spark, f"{out_dir}/_summary.json", counts)
 
 
 def _thresholded_pairs(pair_fn, near_threshold: float):
@@ -430,7 +428,7 @@ def build_corpus(
                 build_content_state(empty, store)
                 counts["state_store"] = store
                 lap("state_build")
-            _write_summary(out_dir, counts)
+            _write_summary(spark, out_dir, counts)
             return counts
 
         exact = caching.register(dedup_corpus(docs))
@@ -508,7 +506,7 @@ def build_corpus(
             build_content_state(exact.select("doc_id", "text"), store)
             counts["state_store"] = store
             lap("state_build")
-    _write_summary(out_dir, counts)
+    _write_summary(spark, out_dir, counts)
     return counts
 
 
@@ -545,18 +543,13 @@ def increment_corpus(
         store_signatures,
     )
 
-    # validate the id UP FRONT: 'base' would match the bootstrap commit
-    # row below and silently skip the whole increment (the LSH append's
-    # own reserved-name guard is unreachable behind that skip), and a
-    # malformed id would otherwise run the expensive extract/dedup
-    # stages before dying at the append
-    from sparkocr.pipeline.ann_index import _APPEND_ID_RE
+    from sparkocr.storage import check_append_id
 
-    if not _APPEND_ID_RE.match(append_id or "") or append_id == "base":
-        raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
-            "and not be the reserved 'base'"
-        )
+    # validate the id UP FRONT: 'base' would match the bootstrap commit
+    # row below and silently skip the whole increment, and a malformed id
+    # would otherwise run the expensive extract/dedup stages before dying
+    # at the append
+    check_append_id(append_id)
 
     counts: dict = {"append_id": append_id}
     timings: dict[str, float] = {}
@@ -694,7 +687,7 @@ def increment_corpus(
         )
         counts["state_rows_appended"] = st["rows"]
         lap("state_append")
-    _write_summary(out_dir, counts)
+    _write_summary(spark, out_dir, counts)
     return counts
 
 

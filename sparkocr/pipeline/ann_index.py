@@ -64,6 +64,7 @@ from sparkocr.pipeline.similarity import (
     ivf_centroids_kmeans,
     lsh_signature_col,
 )
+from sparkocr.storage import APPEND_ID_RE
 
 
 def _write_meta(spark: SparkSession, path: str, **kv) -> None:
@@ -132,7 +133,6 @@ def _check_vectors_nonempty(spark: SparkSession, path: str, builder: str) -> Non
         raise
 
 
-_APPEND_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 _COMMIT_NAME_RE = re.compile(r"^([A-Za-z0-9][A-Za-z0-9._-]{0,127})\.json$")
 
 
@@ -286,9 +286,9 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
     quantizer — compact + rebuild periodically.
 
     Returns ``{"append_id", "rows", "skipped"}``."""
-    if not _APPEND_ID_RE.match(append_id or ""):
+    if not APPEND_ID_RE.match(append_id or ""):
         raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
+            f"append_id {append_id!r} must match {APPEND_ID_RE.pattern} "
             "(it names files and directories)"
         )
     spark = emb.sparkSession

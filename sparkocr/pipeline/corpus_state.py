@@ -20,14 +20,14 @@ Tables (warehouse-managed, like ``lsh_store``'s):
   (~3 columns/doc) so BOTH anti-joins are Exchange-free on the state
   side — one table can only be bucketed on one key.
 - ``{store}_content_commits`` — ``(append_id, attempt, rows,
-  ordinal)``: the commit log. Rows in the data tables are stamped with
-  a per-ATTEMPT token; only attempts recorded here are visible
-  (``append_lsh_store``'s discipline — a death mid-append leaves
-  invisible orphans, a retry lands exactly once, a committed retry is
-  a skipped no-op). ``ordinal`` numbers increments 1, 2, ... (base
-  build = 0) and drives per-increment pack-id namespacing.
-- ``{store}_content_meta`` — ``(n_buckets, content_v)``, written LAST:
-  a build that dies mid-way leaves a state every reader refuses.
+  ordinal)``: the commit log. ``ordinal`` numbers increments 1, 2, ...
+  (base build = 0) and drives per-increment pack-id namespacing.
+- ``{store}_content_meta`` — ``(n_buckets, content_v)``.
+
+Builds and appends follow ``storage``'s commit protocol (meta last,
+attempt-stamped rows, commit row last, orphans invisible), like
+``lsh_store``'s: a death mid-append leaves invisible orphans, a retry
+lands exactly once, a committed retry is a skipped no-op.
 
 The content hash is ``dedup._dedup_key()`` — the SAME definition
 ``exact_dedup`` groups on, so state membership and within-batch exact
@@ -37,20 +37,13 @@ Concurrency contract: increments are sequential (one at a time);
 retries of a crashed increment are safe. Two increments racing the
 same store could interleave ordinals — unsupported, like concurrent
 ``append_lsh_store`` calls.
-
-Known trade: this is the third instance of the bucketed-tables-with-
-commit-log discipline (``ann_index.append_to_index`` and ``lsh_store``
-are the others). The three differ in schema, meta, and what a commit
-covers, so the shared part is the IDEA more than code — but a future
-change to the discipline itself (attempt-stamp scheme, legacy-store
-handling) must be applied in all three places; their cross-referenced
-docstrings are the map.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from sparkocr import storage
 from sparkocr.pipeline.dedup import _dedup_key
 
 #: Version of the content-hash definition (dedup._dedup_key). Bump if
@@ -59,39 +52,17 @@ from sparkocr.pipeline.dedup import _dedup_key
 CONTENT_V = 1
 
 
-def _byhash_table(store: str) -> str:
-    return f"{store}_content_byhash"
-
-
-def _byid_table(store: str) -> str:
-    return f"{store}_content_byid"
-
-
-def _commits_table(store: str) -> str:
-    return f"{store}_content_commits"
-
-
-def _meta_table(store: str) -> str:
-    return f"{store}_content_meta"
+def tables(store: str) -> storage.TableStore:
+    """The state's tables: ``{store}_content_byhash``,
+    ``{store}_content_byid``, its commit log and meta row."""
+    return storage.TableStore(
+        f"{store}_content", f"content state {store!r}", "build_content_state"
+    )
 
 
 def read_content_meta(spark: SparkSession, store: str) -> dict:
-    """State parameters, or a loud error for a half-built state (meta is
-    written last)."""
-    try:
-        row = spark.table(_meta_table(store)).first()
-    except Exception as e:
-        row = None
-        err = e
-    else:
-        err = None
-    if row is None:
-        raise ValueError(
-            f"no complete content state named {store!r}: its meta table "
-            "is missing, unreadable, or empty — the build failed mid-way "
-            "or the name is wrong; rebuild with build_content_state"
-        ) from err
-    m = {k: int(v) for k, v in row.asDict().items()}
+    """State parameters, or a loud error for a half-built state."""
+    m = storage.read_meta(spark, tables(store))
     if m["content_v"] != CONTENT_V:
         raise ValueError(
             f"content state {store!r} was built under hash version "
@@ -101,79 +72,37 @@ def read_content_meta(spark: SparkSession, store: str) -> dict:
     return m
 
 
-def _commits(spark: SparkSession, store: str) -> list:
-    return spark.table(_commits_table(store)).collect()
-
-
-def _committed_rows(spark: SparkSession, store: str, table: str) -> DataFrame:
-    """The COMMITTED view of a state table (attempt-stamp filtered, stamp
-    dropped). The isin filter sits on the scan; bucketing survives."""
-    attempts = [r.attempt for r in _commits(spark, store)]
-    return (
-        spark.table(table)
-        .filter(F.col("append_id").isin(attempts))
-        .drop("append_id")
-    )
-
-
 def build_content_state(docs: DataFrame, store: str, n_buckets: int = 64) -> None:
     """Build (or rebuild) the state from a full corpus build's
-    exact-distinct docs. Meta is dropped first and written last; base
-    rows commit as append_id='base' with ordinal 0 (a rebuild resets the
-    commit log, so markers from a previous state never resurrect orphan
-    rows)."""
+    exact-distinct docs. Base rows commit with ordinal 0."""
     spark = docs.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {_meta_table(store)}")
-    rows = docs.select(
-        _dedup_key().alias("content_hash"),
-        "doc_id",
-        F.lit("base").alias("append_id"),
-    )
-    (
-        rows.repartition(n_buckets, "content_hash")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .format("parquet")
-        .saveAsTable(_byhash_table(store))
-    )
+    ts = tables(store)
+    storage.drop_meta(spark, ts)
+    rows = docs.select(_dedup_key().alias("content_hash"), "doc_id")
+    storage.write_rows(rows, ts, "byhash", n_buckets, "content_hash", storage.BASE)
     # derive the byid projection from reading byhash back (the text is
     # hashed once; this reads the 3-column relation, not the corpus)
-    (
-        spark.table(_byhash_table(store))
-        .select("doc_id", "content_hash", "append_id")
-        .repartition(n_buckets, "doc_id")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(_byid_table(store))
+    stored = spark.table(ts.table("byhash")).select("doc_id", "content_hash")
+    storage.write_rows(stored, ts, "byid", n_buckets, "doc_id", storage.BASE)
+    storage.write_commit(
+        spark, ts, storage.BASE, storage.BASE, stored.count(), ordinal=0
     )
-    n_base = spark.table(_byhash_table(store)).count()
-    spark.createDataFrame(
-        [("base", "base", n_base, 0)],
-        ["append_id", "attempt", "rows", "ordinal"],
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_commits_table(store))
-    spark.createDataFrame(
-        [(n_buckets, CONTENT_V)], ["n_buckets", "content_v"]
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_meta_table(store))
+    storage.write_meta(spark, ts, {"n_buckets": n_buckets, "content_v": CONTENT_V})
 
 
 def committed_ordinal(spark: SparkSession, store: str, append_id: str):
     """The committed ordinal for ``append_id``, or None if uncommitted —
     the "has this increment already fully run?" check."""
     read_content_meta(spark, store)
-    for r in _commits(spark, store):
-        if r.append_id == append_id:
-            return int(r.ordinal)
-    return None
+    done = storage.committed(spark, tables(store), append_id)
+    return None if done is None else int(done.ordinal)
 
 
 def next_ordinal(spark: SparkSession, store: str) -> int:
     """The ordinal the NEXT increment will commit under (1 + max
     committed). Deterministic across a crashed increment's retries as
     long as increments are sequential (see module contract)."""
-    return 1 + max(int(r.ordinal) for r in _commits(spark, store))
+    return 1 + max(int(r.ordinal) for r in storage.commits(spark, tables(store)))
 
 
 def filter_novel(
@@ -203,8 +132,8 @@ def filter_novel(
     caller's existing action, no extra job."""
     spark = docs.sparkSession
     read_content_meta(spark, store)
-    byhash = _committed_rows(spark, store, _byhash_table(store))
-    byid = _committed_rows(spark, store, _byid_table(store))
+    byhash = storage.committed_rows(spark, tables(store), "byhash")
+    byid = storage.committed_rows(spark, tables(store), "byid")
     mid = (
         docs.withColumn("content_hash", _dedup_key())
         .join(byhash.select("content_hash"), "content_hash", "left_anti")
@@ -219,70 +148,43 @@ def filter_novel(
     return mid.join(byid.select("doc_id"), "doc_id", "left_anti")
 
 
-def _write_commit(
-    spark: SparkSession, store: str, append_id: str, attempt: str,
-    n_rows: int, ordinal: int,
-) -> None:
-    """The commit row — appended LAST, in its own function so tests can
-    simulate a death in the commit window."""
-    spark.createDataFrame(
-        [(append_id, attempt, n_rows, ordinal)],
-        ["append_id", "attempt", "rows", "ordinal"],
-    ).coalesce(1).write.mode("append").saveAsTable(_commits_table(store))
-
-
 def append_content_state(
     docs: DataFrame, store: str, append_id: str, ordinal: int
 ) -> dict:
     """Append an increment's exact-distinct docs to the state,
-    exactly-once per ``append_id``: rows stamped per-attempt, commit row
-    (with the increment's ordinal) lands last, committed retry is a
-    skipped no-op. Returns ``{"append_id", "rows", "ordinal",
-    "skipped"}``."""
-    import uuid
-
-    spark = docs.sparkSession
-    m = read_content_meta(spark, store)
-    for r in _commits(spark, store):
-        if r.append_id == append_id:
-            return {
-                "append_id": append_id, "rows": int(r.rows),
-                "ordinal": int(r.ordinal), "skipped": True,
-            }
+    exactly-once per ``append_id`` under ``storage``'s commit protocol;
+    the commit row carries the increment's ordinal. Returns
+    ``{"append_id", "rows", "ordinal", "skipped"}``."""
     from sparkocr.pipeline import caching
 
-    attempt = f"{append_id}-{uuid.uuid4().hex[:12]}"
-    # hash once, cache the tiny 3-column increment relation, and feed
+    storage.check_append_id(append_id)
+    spark = docs.sparkSession
+    ts = tables(store)
+    m = read_content_meta(spark, store)
+    done = storage.committed(spark, ts, append_id)
+    if done is not None:
+        return {
+            "append_id": append_id, "rows": int(done.rows),
+            "ordinal": int(done.ordinal), "skipped": True,
+        }
+    attempt = storage.new_attempt(append_id)
+    # hash once, cache the tiny 2-column increment relation, and feed
     # BOTH projections (and the count) from the cache — re-reading the
     # state table filtered by attempt would scan state-sized data per
     # append. Scoped here: every consuming action happens inside.
     with caching.scope():
         rows = caching.register(
-            docs.select(
-                _dedup_key().alias("content_hash"),
-                "doc_id",
-                F.lit(attempt).alias("append_id"),
-            )
+            docs.select(_dedup_key().alias("content_hash"), "doc_id")
         )
-        (
-            rows.repartition(m["n_buckets"], "content_hash")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "content_hash")
-            .sortBy("content_hash")
-            .format("parquet")
-            .saveAsTable(_byhash_table(store))
+        storage.write_rows(
+            rows, ts, "byhash", m["n_buckets"], "content_hash", attempt
         )
-        (
-            rows.select("doc_id", "content_hash", "append_id")
-            .repartition(m["n_buckets"], "doc_id")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(_byid_table(store))
+        storage.write_rows(
+            rows.select("doc_id", "content_hash"), ts, "byid", m["n_buckets"],
+            "doc_id", attempt,
         )
         n = rows.count()
-    _write_commit(spark, store, append_id, attempt, n, ordinal)
+    storage.write_commit(spark, ts, append_id, attempt, n, ordinal=ordinal)
     return {
         "append_id": append_id, "rows": n, "ordinal": ordinal,
         "skipped": False,
@@ -296,19 +198,14 @@ def check_content_state(spark: SparkSession, store: str) -> dict:
     ``mismatched_docs`` counts doc_ids whose committed byhash/byid row
     counts differ (a broken append — rebuild)."""
     read_content_meta(spark, store)
-    byhash_all = spark.table(_byhash_table(store))
-    byid_all = spark.table(_byid_table(store))
-    attempts = [r.attempt for r in _commits(spark, store)]
-    orphans = int(
-        byhash_all.filter(~F.col("append_id").isin(attempts)).count()
-        + byid_all.filter(~F.col("append_id").isin(attempts)).count()
-    )
+    ts = tables(store)
+    orphans = storage.orphan_rows(spark, ts, ("byhash", "byid"))
     h = (
-        _committed_rows(spark, store, _byhash_table(store))
+        storage.committed_rows(spark, ts, "byhash")
         .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_h"))
     )
     i = (
-        _committed_rows(spark, store, _byid_table(store))
+        storage.committed_rows(spark, ts, "byid")
         .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_i"))
     )
     mismatched = int(

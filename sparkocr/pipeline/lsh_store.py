@@ -9,23 +9,18 @@ with no corpus-sized shuffle:
 
   {store}_sigs    (doc_id, mh_0..mh_{n_perm-1}, append_id)  bucketed by doc_id
   {store}_bands   (doc_id, bkey, append_id)                 bucketed by bkey
-  {store}_commits one row per committed append: (append_id, attempt,
-                  rows) — the base build commits as append_id='base';
-                  ``attempt`` is the per-invocation token stamped onto
-                  that append's rows
-  {store}_meta    single row: n_perm, band_rows, k, n_buckets
-                  (written LAST — a missing meta marks a half-built
-                  store, mirroring ann_index's completeness discipline)
+  {store}_commits (append_id, attempt, rows): one row per committed
+                  build (append_id='base') or append
+  {store}_meta    single row: n_perm, band_rows, k, n_buckets, sig_v,
+                  max_chars, hash_kind
 
-Appends follow ann_index.append_to_index's exactly-once discipline:
-every appended row is stamped with its ``append_id``, the commit row
-lands LAST, and readers see only rows whose append_id is committed — a
-death between the sigs and bands appends (or mid-append) leaves
-invisible orphan rows, never a half-visible increment, and a blind
-retry of a committed id is a no-op instead of a silent duplication.
-``check_lsh_store`` still audits the committed view and additionally
-counts orphan rows so crashed attempts stay observable until a rebuild
-purges them.
+Builds and appends follow ``storage``'s commit protocol (meta last,
+attempt-stamped rows, commit row last, orphans invisible): a death
+between the sigs and bands appends (or mid-append) leaves invisible
+orphan rows, never a half-visible increment, and a blind retry of a
+committed id is a no-op instead of a silent duplication.
+``check_lsh_store`` audits the committed view and counts the orphan
+rows, so crashed attempts stay observable until a rebuild purges them.
 
 Both tables are Spark native bucketed tables (``storage.py`` pattern —
 the Parquet stand-in for Iceberg ``bucket(...)``): hash-partitioned on
@@ -58,6 +53,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from sparkocr import storage
 from sparkocr.pipeline import caching
 from sparkocr.pipeline.dedup import (
     BAND_ROWS,
@@ -74,21 +70,26 @@ from sparkocr.pipeline.dedup import (
 )
 
 
+def tables(store: str) -> storage.TableStore:
+    """The store's tables: ``{store}_sigs``, ``{store}_bands``, its
+    commit log and meta row (see module docstring)."""
+    return storage.TableStore(store, f"LSH store {store!r}", "build_lsh_store")
+
+
 def _meta_max_chars(m: dict) -> int | None:
     """The stored signatured-prefix cap: 0 encodes None (uncapped) in the
     all-int meta row. Increments MUST replay the build's cap — a mixed-cap
     store would give long docs different signatures per append."""
-    return m.get("max_chars", 0) or None
+    return m["max_chars"] or None
 
 
 def _meta_hash_kind(m: dict) -> str:
     """The stored shingle→integer construction, int-encoded in the
-    all-int meta row (0 = "md5", 1 = "rolling"; stores from before the
-    column default to md5, which is what they were built with).
-    Increments MUST replay the build's kind — the two constructions'
-    signatures never collide, so a mixed store would silently drop every
-    cross-append candidate pair."""
-    return "rolling" if m.get("hash_kind", 0) == 1 else "md5"
+    all-int meta row (0 = "md5", 1 = "rolling"). Increments MUST replay
+    the build's kind — the two constructions' signatures never collide,
+    so a mixed store would silently drop every cross-append candidate
+    pair."""
+    return "rolling" if m["hash_kind"] == 1 else "md5"
 
 
 _HASH_KIND_CODE = {"md5": 0, "rolling": 1}
@@ -99,70 +100,13 @@ def _require_sig_v(m: dict, store: str) -> None:
     different signature algorithm (meta ``sig_v`` vs the running
     engine's ``dedup.MH_SIG_V``): mixed-algorithm signatures never
     collide, so the join would silently drop every cross-increment
-    candidate pair instead of failing. Stores from before the version
-    column default to 1."""
-    stored = m.get("sig_v", 1)
-    if stored != MH_SIG_V:
+    candidate pair instead of failing."""
+    if m["sig_v"] != MH_SIG_V:
         raise ValueError(
             f"LSH store {store!r} was built with signature algorithm "
-            f"v{stored}, but this engine computes v{MH_SIG_V} — rebuild "
+            f"v{m['sig_v']}, but this engine computes v{MH_SIG_V} — rebuild "
             "with build_lsh_store before appending or mining increments"
         )
-
-
-def _sigs_table(store: str) -> str:
-    return f"{store}_sigs"
-
-
-def _bands_table(store: str) -> str:
-    return f"{store}_bands"
-
-
-def _meta_table(store: str) -> str:
-    return f"{store}_meta"
-
-
-def _commits_table(store: str) -> str:
-    return f"{store}_commits"
-
-
-def _committed_ids(spark: SparkSession, store: str) -> list[str] | None:
-    """Committed ATTEMPT tokens (the values stamped onto rows), or None
-    for a legacy store (built before the commit discipline: no commits
-    table, rows unstamped) — readers then take every row, exactly as the
-    old code did. Rows are stamped per-ATTEMPT rather than per-append_id
-    so a retry of a crashed append cannot accidentally commit the dead
-    attempt's rows along with its own.
-
-    Only a MISSING commits table means "legacy": the existence check is
-    explicit, so a transient read failure (metastore hiccup, permission,
-    concurrent DDL) propagates instead of being misdiagnosed as a
-    half-migrated store — the old blanket ``except`` turned a retryable
-    error into a 'rebuild the store' instruction (and made
-    ``_orphan_rows`` count every committed row as an orphan)."""
-    if not spark.catalog.tableExists(_commits_table(store)):
-        return None
-    return [r.attempt for r in spark.table(_commits_table(store)).collect()]
-
-
-def _committed_rows(spark: SparkSession, store: str, table: str) -> DataFrame:
-    """The COMMITTED view of a store table: rows whose append_id has a
-    commit row, with the stamp column dropped so downstream plans are
-    unchanged. The isin filter sits on the scan (no Exchange added;
-    bucketing survives a Filter), and the committed-id list is one tiny
-    driver-side read — bounded by the number of appends ever run."""
-    df = spark.table(table)
-    if "append_id" not in df.columns:
-        return df  # legacy store: everything visible
-    ids = _committed_ids(spark, store)
-    if ids is None:
-        # stamped rows but no commits table: half-migrated store —
-        # refuse, a guess either way silently changes the pair set
-        raise ValueError(
-            f"LSH store {store!r} has stamped rows but no commits table — "
-            "rebuild with build_lsh_store"
-        )
-    return df.filter(F.col("append_id").isin(ids)).drop("append_id")
 
 
 def _band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
@@ -196,23 +140,8 @@ def _band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
 
 
 def read_store_meta(spark: SparkSession, store: str) -> dict:
-    """Store parameters, or a loud error for a half-built store (meta is
-    written last, so a missing — or registered-but-EMPTY — meta table
-    means a build died mid-way)."""
-    try:
-        row = spark.table(_meta_table(store)).first()
-    except Exception as e:
-        row = None
-        err = e
-    else:
-        err = None
-    if row is None:
-        raise ValueError(
-            f"no complete LSH store named {store!r}: its meta table is "
-            "missing, unreadable, or empty — the build failed mid-way or "
-            "the name is wrong; rebuild with build_lsh_store"
-        ) from err
-    return {k: int(v) for k, v in row.asDict().items()}
+    """Store parameters, or a loud error for a half-built store."""
+    return storage.read_meta(spark, tables(store))
 
 
 def build_lsh_store(
@@ -231,11 +160,8 @@ def build_lsh_store(
     materialized to the sigs table first and the bands table derives
     from reading that table back (a 100x-smaller input than the text).
 
-    Meta is dropped first and written last: a build that dies in between
-    leaves a store every reader refuses, never a probeable half-store.
-    Base rows commit as append_id='base' (a rebuild also resets the
-    commits table, so markers from the previous store's appends never
-    resurrect orphan rows).
+    Under ``storage``'s commit protocol a build that dies mid-way leaves
+    a store every reader refuses, never a probeable half-store.
 
     ``sigs``: optionally the docs' precomputed ``minhash_signatures``
     frame — a full corpus build that ALSO mines near-dup pairs over the
@@ -248,47 +174,23 @@ def build_lsh_store(
     if hash_kind not in _HASH_KIND_CODE:
         raise ValueError(f"unknown minhash hash_kind {hash_kind!r}")
     spark = docs.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {_meta_table(store)}")
-    (
-        (
-            sigs
-            if sigs is not None
-            else minhash_signatures(docs, n_perm, k, max_chars, hash_kind)
-        )
-        .withColumn("append_id", F.lit("base"))
-        .repartition(n_buckets, "doc_id")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(_sigs_table(store))
+    ts = tables(store)
+    storage.drop_meta(spark, ts)
+    if sigs is None:
+        sigs = minhash_signatures(docs, n_perm, k, max_chars, hash_kind)
+    storage.write_rows(sigs, ts, "sigs", n_buckets, "doc_id", storage.BASE)
+    stored = spark.table(ts.table("sigs")).drop(storage.STAMP)
+    storage.write_rows(
+        _band_keys(stored, n_perm, band_rows), ts, "bands", n_buckets, "bkey",
+        storage.BASE,
     )
-    (
-        _band_keys(
-            spark.table(_sigs_table(store)).drop("append_id"),
-            n_perm,
-            band_rows,
-        )
-        .withColumn("append_id", F.lit("base"))
-        .repartition(n_buckets, "bkey")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "bkey")
-        .sortBy("bkey")
-        .format("parquet")
-        .saveAsTable(_bands_table(store))
-    )
-    n_base = spark.table(_sigs_table(store)).count()
-    spark.createDataFrame(
-        [("base", "base", n_base)], ["append_id", "attempt", "rows"]
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_commits_table(store))
-    spark.createDataFrame(
-        # meta is an all-int row (read_store_meta int-casts every field):
-        # max_chars=None (uncapped) encodes as 0, hash_kind as its code
-        [(n_perm, band_rows, k, n_buckets, MH_SIG_V, max_chars or 0,
-          _HASH_KIND_CODE[hash_kind])],
-        ["n_perm", "band_rows", "k", "n_buckets", "sig_v", "max_chars",
-         "hash_kind"],
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_meta_table(store))
+    storage.write_commit(spark, ts, storage.BASE, storage.BASE, stored.count())
+    # max_chars=None (uncapped) encodes as 0, hash_kind as its code
+    storage.write_meta(spark, ts, {
+        "n_perm": n_perm, "band_rows": band_rows, "k": k,
+        "n_buckets": n_buckets, "sig_v": MH_SIG_V, "max_chars": max_chars or 0,
+        "hash_kind": _HASH_KIND_CODE[hash_kind],
+    })
 
 
 def store_signatures(docs: DataFrame, store: str) -> DataFrame:
@@ -315,21 +217,14 @@ def append_lsh_store(
     skip_existing: bool = True,
 ) -> dict:
     """Append an increment's signatures and band keys to the store, with
-    the STORED parameters (never re-derived). Exactly-once per
-    ``append_id`` (ann_index.append_to_index's discipline): appended rows
-    are stamped with the id, the commit row lands LAST, and readers see
-    only committed ids — so a death between the two appends (or
-    mid-append) leaves invisible orphan rows rather than docs with
-    signatures but no bands, a retry of the crashed id appends fresh
-    rows and commits them (the orphans stay invisible; ``check_lsh_store``
-    counts them, a rebuild purges them), and a blind retry of a
-    COMMITTED id is a skipped no-op instead of a silent duplication.
-
-    Rows are stamped with a per-ATTEMPT token (``append_id-<nonce>``),
-    not the bare append_id, and the commit row records which attempt
-    completed — otherwise a retry's commit would resurrect the crashed
-    attempt's orphan rows (same stamp) and every increment doc would
-    surface twice.
+    the STORED parameters (never re-derived), exactly-once per
+    ``append_id`` under ``storage``'s commit protocol: a death between
+    the two appends (or mid-append) leaves invisible orphan rows rather
+    than docs with signatures but no bands, a retry of the crashed id
+    appends fresh rows and commits them (the orphans stay invisible;
+    ``check_lsh_store`` counts them, a rebuild purges them), and a blind
+    retry of a COMMITTED id is a skipped no-op instead of a silent
+    duplication.
 
     ``sigs``: optionally the increment's ``store_signatures`` output,
     computed once by a caller that also runs ``incremental_lsh_pairs``
@@ -351,37 +246,15 @@ def append_lsh_store(
     Returns ``{"append_id", "rows", "skipped", "n_existing"}`` —
     ``rows`` counts what was actually appended, ``n_existing`` what the
     guard excluded."""
-    import uuid
-
-    from sparkocr.pipeline.ann_index import _APPEND_ID_RE
-
-    if not _APPEND_ID_RE.match(append_id or "") or append_id == "base":
-        raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
-            "and not be the reserved 'base'"
-        )
+    storage.check_append_id(append_id)
     spark = new_docs.sparkSession
+    ts = tables(store)
     m = read_store_meta(spark, store)
     _require_sig_v(m, store)
-    if "append_id" not in spark.table(_sigs_table(store)).columns:
-        raise ValueError(
-            f"LSH store {store!r} predates the append-commit discipline "
-            "(rows are unstamped) — rebuild with build_lsh_store before "
-            "appending"
-        )
-    if not spark.catalog.tableExists(_commits_table(store)):
-        # same half-migrated state every reader path refuses: stamped
-        # rows (checked above) but the commits table is gone — a raw
-        # TABLE_OR_VIEW_NOT_FOUND here would name neither the store nor
-        # the remedy
-        raise ValueError(
-            f"LSH store {store!r} has stamped rows but no commits table "
-            "— rebuild with build_lsh_store before appending"
-        )
-    for r in spark.table(_commits_table(store)).collect():
-        if r.append_id == append_id:
-            return {"append_id": append_id, "rows": int(r.rows), "skipped": True}
-    attempt = f"{append_id}-{uuid.uuid4().hex[:12]}"
+    done = storage.committed(spark, ts, append_id)
+    if done is not None:
+        return {"append_id": append_id, "rows": int(done.rows), "skipped": True}
+    attempt = storage.new_attempt(append_id)
     # every consuming action happens inside this function, so the
     # signature cache is scoped here instead of leaking to the caller's
     # release (a daily driver looping appends would otherwise accumulate
@@ -399,36 +272,17 @@ def append_lsh_store(
         )
         n_existing = 0
         if skip_existing:
-            existing = _committed_rows(
-                spark, store, _sigs_table(store)
-            ).select("doc_id")
+            existing = storage.committed_rows(spark, ts, "sigs").select("doc_id")
             n_before = sig.count()
             sig = caching.register(sig.join(existing, "doc_id", "left_anti"))
             n_existing = n_before - sig.count()
-        (
-            sig.withColumn("append_id", F.lit(attempt))
-            .repartition(m["n_buckets"], "doc_id")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(_sigs_table(store))
-        )
-        (
-            _band_keys(sig, m["n_perm"], m["band_rows"])
-            .withColumn("append_id", F.lit(attempt))
-            .repartition(m["n_buckets"], "bkey")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "bkey")
-            .sortBy("bkey")
-            .format("parquet")
-            .saveAsTable(_bands_table(store))
+        storage.write_rows(sig, ts, "sigs", m["n_buckets"], "doc_id", attempt)
+        storage.write_rows(
+            _band_keys(sig, m["n_perm"], m["band_rows"]), ts, "bands",
+            m["n_buckets"], "bkey", attempt,
         )
         rows = sig.count()
-    # the COMMIT: one tiny row, written only after both appends landed
-    spark.createDataFrame(
-        [(append_id, attempt, rows)], ["append_id", "attempt", "rows"]
-    ).coalesce(1).write.mode("append").saveAsTable(_commits_table(store))
+    storage.write_commit(spark, ts, append_id, attempt, rows)
     return {
         "append_id": append_id, "rows": rows, "skipped": False,
         "n_existing": n_existing,
@@ -455,9 +309,10 @@ def check_lsh_store(spark: SparkSession, store: str) -> dict:
       purges them. Nonzero orphans with a clean committed view is the
       expected aftermath of a crash + successful retry."""
     m = read_store_meta(spark, store)
+    ts = tables(store)
     n_bands = m["n_perm"] // m["band_rows"]
-    sigs = _committed_rows(spark, store, _sigs_table(store))
-    bands = _committed_rows(spark, store, _bands_table(store))
+    sigs = storage.committed_rows(spark, ts, "sigs")
+    bands = storage.committed_rows(spark, ts, "bands")
     sig_counts = sigs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sig"))
     band_counts = bands.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_band"))
     joined = sig_counts.join(band_counts, "doc_id", "full_outer").select(
@@ -475,25 +330,8 @@ def check_lsh_store(spark: SparkSession, store: str) -> dict:
         ).alias("band_mismatch_docs"),
     ).first()
     out = {k: int(v) for k, v in row.asDict().items()}
-    out["orphan_rows"] = _orphan_rows(spark, store)
+    out["orphan_rows"] = storage.orphan_rows(spark, ts, ("sigs", "bands"))
     return out
-
-
-def _orphan_rows(spark: SparkSession, store: str) -> int:
-    """Total UNcommitted rows across both store tables (0 for a legacy
-    unstamped store, where the concept does not exist). A store with
-    only ONE stamped table (manual surgery / half migration) still has
-    its stamped side audited — the old mid-loop early return threw away
-    the sigs count whenever just the bands table was unstamped. The
-    committed-id list is collected once for both tables."""
-    dfs = [spark.table(t) for t in (_sigs_table(store), _bands_table(store))]
-    stamped = [df for df in dfs if "append_id" in df.columns]
-    if not stamped:
-        return 0
-    ids = _committed_ids(spark, store) or []
-    return sum(
-        df.filter(~F.col("append_id").isin(ids)).count() for df in stamped
-    )
 
 
 def incremental_lsh_pairs(
@@ -579,7 +417,7 @@ def incremental_lsh_pairs(
     bands_new = _band_keys(sig_new, n_perm, m["band_rows"]).join(sig_new, "doc_id")
 
     new_ids = sig_new.select("doc_id")
-    store_bands = _committed_rows(spark, store, _bands_table(store)).join(
+    store_bands = storage.committed_rows(spark, tables(store), "bands").join(
         F.broadcast(new_ids), "doc_id", "left_anti"
     )
     carry_capped = min_est is not None and bucket_max is not None
@@ -666,7 +504,7 @@ def incremental_lsh_pairs(
             .select("id1", "id2", est)
         )
 
-    old_sigs = _committed_rows(spark, store, _sigs_table(store)).select(
+    old_sigs = storage.committed_rows(spark, tables(store), "sigs").select(
         "doc_id", *ys
     )
     no_pre = bands_new.select(F.col("doc_id").alias("new_id"), "bkey", *xs, *nc).join(

@@ -68,6 +68,23 @@ def test_corpus_job_end_to_end(spark, tiny_transcripts, bench_file, tmp_path):
     assert caching.live_count() == 0  # scope released everything
 
 
+def test_summary_lands_beside_corpus_for_uri_out_dir(
+    spark, tiny_transcripts, tmp_path
+):
+    """A URI ``out_dir`` (here ``file://``; HDFS/S3 ``--out`` alike) gets
+    its ``_summary.json`` beside ``corpus/``, not in a stray tree named
+    after the URI under the working directory."""
+    import json
+
+    from sparkocr.jobs.corpus_job import build_corpus
+
+    out = tmp_path / "uri_out"
+    counts = build_corpus(spark, tiny_transcripts, out.as_uri(), min_words=3)
+    assert (out / "corpus").is_dir()
+    with open(out / "_summary.json") as f:
+        assert json.load(f) == counts
+
+
 def test_corpus_job_without_bench(spark, tiny_transcripts, tmp_path):
     from sparkocr.jobs.corpus_job import build_corpus
 

@@ -189,12 +189,27 @@ def test_increments_end_to_end(spark, base_built):
     assert not (sets[1] & sets[2])
 
 
+def _content_commit_fails(real):
+    """``storage.write_commit`` that dies in the content state's commit
+    window only: the increment's LSH append still commits."""
+
+    from sparkocr.pipeline.corpus_state import tables
+
+    def write_commit(spark, ts, *a, **kw):
+        if ts == tables(STORE):
+            raise RuntimeError("simulated death in the commit window")
+        return real(spark, ts, *a, **kw)
+
+    return write_commit
+
+
 def test_crash_before_commit_retries_exactly_once(spark, base_built):
     """A death in the content-commit window leaves NO committed state
     (orphan rows invisible); retrying the same append-id completes and
     commits exactly once."""
+    from sparkocr import storage
     from sparkocr.jobs.corpus_job import increment_corpus
-    from sparkocr.pipeline import caching, corpus_state
+    from sparkocr.pipeline import caching
     from sparkocr.pipeline.corpus_state import (
         check_content_state,
         committed_ordinal,
@@ -206,19 +221,15 @@ def test_crash_before_commit_retries_exactly_once(spark, base_built):
     )
     inc_out = str(root / "crash_out")
 
-    real = corpus_state._write_commit
-
-    def boom(*a, **kw):
-        raise RuntimeError("simulated death in the commit window")
-
-    corpus_state._write_commit = boom
+    real = storage.write_commit
+    storage.write_commit = _content_commit_fails(real)
     try:
         with pytest.raises(RuntimeError, match="simulated"):
             increment_corpus(
                 spark, inc_in, inc_out, STORE, "dayX", min_words=1
             )
     finally:
-        corpus_state._write_commit = real
+        storage.write_commit = real
         caching.release_all()
     assert committed_ordinal(spark, STORE, "dayX") is None
     audit = check_content_state(spark, STORE)
@@ -243,25 +254,36 @@ def test_crash_before_commit_retries_exactly_once(spark, base_built):
 def test_reserved_and_malformed_append_ids_refused(spark, base_built, tmp_path):
     """'base' would match the bootstrap commit row and silently skip the
     whole increment; malformed ids would die late at the LSH append
-    after the expensive stages — both are refused up front."""
+    after the expensive stages — both are refused up front, by the job
+    and by both state stores' appends."""
     from sparkocr.jobs.corpus_job import increment_corpus
+    from sparkocr.pipeline.corpus_state import append_content_state
+    from sparkocr.pipeline.lsh_store import append_lsh_store
 
     inc_in = _write(spark, str(tmp_path / "r_in.parquet"), {"r1": _text(70)})
+    docs = spark.createDataFrame(
+        [(7001, _text(70))], "doc_id long, text string"
+    )
     for bad in ("base", "day 1", ""):
         with pytest.raises(ValueError, match="append_id"):
             increment_corpus(
                 spark, inc_in, str(tmp_path / "r_out"), STORE, bad,
                 min_words=1,
             )
+        with pytest.raises(ValueError, match="append_id"):
+            append_lsh_store(docs, STORE, bad)
+        with pytest.raises(ValueError, match="append_id"):
+            append_content_state(docs, STORE, bad, 50)
 
 
 def test_audit_job_flags_unretried_crash(spark, base_built, tmp_path, monkeypatch):
     """audit_state: healthy on consistent state; a crashed increment
     that committed its LSH append but not its content state shows as
     lsh_only_docs (and unhealthy) until the retry heals it."""
+    from sparkocr import storage
     from sparkocr.jobs.audit_job import audit_state
     from sparkocr.jobs.corpus_job import increment_corpus
-    from sparkocr.pipeline import caching, corpus_state
+    from sparkocr.pipeline import caching
 
     ok = audit_state(spark, STORE)
     assert ok["healthy"], ok
@@ -271,8 +293,7 @@ def test_audit_job_flags_unretried_crash(spark, base_built, tmp_path, monkeypatc
     inc_in = _write(spark, str(tmp_path / "a_in.parquet"), {"a1": _text(80)})
     out = str(tmp_path / "a_out")
     monkeypatch.setattr(
-        corpus_state, "_write_commit",
-        lambda *a, **kw: (_ for _ in ()).throw(RuntimeError("boom")),
+        storage, "write_commit", _content_commit_fails(storage.write_commit)
     )
     with pytest.raises(RuntimeError):
         increment_corpus(spark, inc_in, out, STORE, "dayA", min_words=1)

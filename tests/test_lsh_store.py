@@ -106,63 +106,157 @@ def test_incremental_correct_after_append(spark, docs, store):
         caching.release_all()
 
 
-def test_crashed_append_is_invisible_and_retry_safe(spark, docs, store):
-    """Simulate a death BETWEEN the sigs and bands appends (stamped sigs
-    rows, no commit row): the orphan rows are invisible to pairs and the
-    committed audit, the orphan counter reports them, and retrying the
-    same append_id lands the increment exactly once."""
-    from pyspark.sql import functions as F
+_STATE = ("sigs", "bands", "meta", "commits", "content_byhash",
+          "content_byid", "content_commits", "content_meta")
+_CRASHES = [(which, k) for which in ("lsh", "content") for k in (1, 2, 3)]
 
-    from sparkocr.pipeline import caching
-    from sparkocr.pipeline.dedup import minhash_signatures
-    from sparkocr.pipeline.lsh_store import (
-        append_lsh_store,
-        check_lsh_store,
-        incremental_lsh_pairs,
-        read_store_meta,
+
+def _drop_state(spark, name):
+    for t in _STATE:
+        spark.sql(f"DROP TABLE IF EXISTS {name}_{t}")
+
+
+def _fail_kth_write(monkeypatch, k):
+    """Make the k-th call of the shared store writes (the bucketed data
+    writes and the commit row, in call order) die. Returns the row
+    counts the writes before it landed."""
+    from sparkocr import storage
+
+    landed = []
+
+    def failing(real, rows_of):
+        def write(*a, **kw):
+            if len(landed) + 1 == k:
+                raise RuntimeError(f"simulated death at write {k}")
+            real(*a, **kw)
+            landed.append(rows_of(*a))
+
+        return write
+
+    monkeypatch.setattr(
+        storage, "write_bucketed",
+        failing(storage.write_bucketed, lambda df, *_: df.count()),
     )
+    monkeypatch.setattr(
+        storage, "write_commit", failing(storage.write_commit, lambda *_: 0)
+    )
+    return landed
 
-    name, old, new = store
-    try:
-        m = read_store_meta(spark, name)
-        before_pairs = _pairs(incremental_lsh_pairs(new, name, bucket_max=None))
-        before_health = check_lsh_store(spark, name)
-        # the crash: sigs append lands stamped, bands + commit never run
-        (
-            minhash_signatures(new, m["n_perm"], m["k"])
-            .withColumn("append_id", F.lit("crash1"))
-            .repartition(m["n_buckets"], "doc_id")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(f"{name}_sigs")
-        )
-        caching.release_all()
-        crashed = check_lsh_store(spark, name)
-        assert crashed["orphan_rows"] == new.count()
-        # the committed view is untouched: same docs, zero anomalies
-        assert {k: v for k, v in crashed.items() if k != "orphan_rows"} == {
-            k: v for k, v in before_health.items() if k != "orphan_rows"
+
+@pytest.fixture(scope="module")
+def crash_state(spark, docs):
+    """Both state stores of one name over 36 docs, 4 buckets — the pair
+    a base corpus build leaves. Each crash case appends its own 4 docs."""
+    from sparkocr.pipeline import caching
+    from sparkocr.pipeline.corpus_state import build_content_state
+    from sparkocr.pipeline.lsh_store import build_lsh_store
+
+    name = "crash_state_t"
+    base = docs.filter("doc_id < 36")
+    build_lsh_store(base, name, n_buckets=4)
+    build_content_state(base, name, n_buckets=4)
+    caching.release_all()
+    yield name
+    _drop_state(spark, name)
+
+
+@pytest.mark.parametrize("which,k", _CRASHES)
+def test_crashed_append_is_invisible_and_retry_safe(
+    spark, docs, crash_state, monkeypatch, which, k
+):
+    """A death at the k-th write of an append (its data tables, then its
+    commit row) leaves the committed view and the audit's anomaly counts
+    unchanged, with exactly the rows written so far as invisible orphans;
+    a same-id retry lands the increment once and a second retry is a
+    skipped no-op."""
+    from sparkocr import storage
+    from sparkocr.jobs.audit_job import audit_state
+    from sparkocr.pipeline import caching, corpus_state, lsh_store
+
+    name = crash_state
+    lo = 36 + 4 * _CRASHES.index((which, k))
+    new = docs.filter(f"doc_id >= {lo} and doc_id < {lo + 4}")
+    if which == "lsh":
+        ts, names = lsh_store.tables(name), ("sigs", "bands")
+
+        def append(aid):
+            return lsh_store.append_lsh_store(new, name, aid)
+
+        def check():
+            return lsh_store.check_lsh_store(spark, name)
+    else:
+        ts, names = corpus_state.tables(name), ("byhash", "byid")
+        ordinal = corpus_state.next_ordinal(spark, name)
+
+        def append(aid):
+            return corpus_state.append_content_state(new, name, aid, ordinal)
+
+        def check():
+            return corpus_state.check_content_state(spark, name)
+
+    def view():
+        return {
+            n: sorted(tuple(r) for r in storage.committed_rows(spark, ts, n).collect())
+            for n in names
         }
-        assert _pairs(
-            incremental_lsh_pairs(new, name, bucket_max=None)
-        ) == before_pairs
-        # the retry: same append_id runs fresh and commits exactly once
-        r = append_lsh_store(new, name, "crash1")
-        assert not r["skipped"] and r["rows"] == new.count()
-        healed = check_lsh_store(spark, name)
-        assert healed["dup_sig_docs"] == 0 and healed["band_mismatch_docs"] == 0
-        assert healed["docs"] == docs.count()
-        assert healed["orphan_rows"] == new.count()  # debris, invisible
-        with pytest.raises(ValueError, match="reserved"):
-            append_lsh_store(new, name, "base")
+
+    def anomalies(audit):
+        return {a: v for a, v in audit.items() if a != "orphan_rows"}
+
+    before, before_audit = view(), check()
+    aid = f"crash_{which}_{k}"
+    landed = _fail_kth_write(monkeypatch, k)
+    with pytest.raises(RuntimeError, match="simulated"):
+        append(aid)
+    monkeypatch.undo()
+    caching.release_all()
+    crashed = check()
+    assert view() == before
+    assert anomalies(crashed) == anomalies(before_audit)
+    assert crashed["orphan_rows"] - before_audit["orphan_rows"] == sum(landed)
+    assert audit_state(spark, name)["healthy"]
+
+    r = append(aid)
+    caching.release_all()
+    assert not r["skipped"] and r["rows"] == 4
+    healed = view()
+    # sigs and byhash hold one row per doc; the audit below pins the rest
+    assert len(healed[names[0]]) == len(before[names[0]]) + 4
+    assert all(set(before[n]) <= set(healed[n]) for n in names)
+    assert append(aid)["skipped"]
+    assert anomalies(check()) == {
+        **anomalies(before_audit),
+        **({"docs": before_audit["docs"] + 4} if which == "lsh" else {}),
+    }
+    assert audit_state(spark, name)["healthy"]
+
+
+@pytest.mark.parametrize("which,k", _CRASHES)
+def test_crashed_build_is_refused(spark, docs, monkeypatch, which, k):
+    """A rebuild that dies at any write before its meta row leaves a
+    store every reader refuses with the rebuild instruction."""
+    from sparkocr.pipeline import caching, corpus_state, lsh_store
+
+    build, read_meta = {
+        "lsh": (lsh_store.build_lsh_store, lsh_store.read_store_meta),
+        "content": (
+            corpus_state.build_content_state, corpus_state.read_content_meta
+        ),
+    }[which]
+    name = f"crash_build_{which}_{k}"
+    base = docs.filter("doc_id < 20")
+    try:
+        build(base, name, n_buckets=4)
+        read_meta(spark, name)
+        _fail_kth_write(monkeypatch, k)
+        with pytest.raises(RuntimeError, match="simulated"):
+            build(base, name, n_buckets=4)
+        monkeypatch.undo()
+        with pytest.raises(ValueError, match="rebuild"):
+            read_meta(spark, name)
     finally:
         caching.release_all()
-        from sparkocr.pipeline.lsh_store import build_lsh_store
-
-        build_lsh_store(old, name, n_buckets=8)
-        caching.release_all()
+        _drop_state(spark, name)
 
 
 def test_store_side_joins_are_exchange_free(spark, store):

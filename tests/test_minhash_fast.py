@@ -179,9 +179,8 @@ def test_store_records_and_replays_rolling_kind(spark):
             spark.sql(f"DROP TABLE IF EXISTS {name}_{t}")
 
 
-def test_meta_without_hash_kind_defaults_md5():
+def test_meta_hash_kind_codes():
     from sparkocr.pipeline.lsh_store import _meta_hash_kind
 
-    assert _meta_hash_kind({"n_perm": 12}) == "md5"
     assert _meta_hash_kind({"hash_kind": 0}) == "md5"
     assert _meta_hash_kind({"hash_kind": 1}) == "rolling"

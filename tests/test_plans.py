@@ -83,12 +83,12 @@ def test_pricing_summary_column_pruning(spark):
 def test_bucketed_table_makes_assembly_shuffle_free(spark, tiny_transcripts):
     from sparkocr.assemble import assemble_docs_cli
     from sparkocr.extract.dispatch import extract_turns
-    from sparkocr.storage import read_turns_bucketed, save_turns_bucketed
+    from sparkocr.storage import save_turns_bucketed
 
     turns = extract_turns(spark.read.parquet(tiny_transcripts), min_parallelism=0)
     save_turns_bucketed(turns, "turns_bucketed_test", n_buckets=4)
     try:
-        bucketed = read_turns_bucketed(spark, "turns_bucketed_test")
+        bucketed = spark.table("turns_bucketed_test")
         # single-phase assembly (pure groupBy conv_id) over the bucketed
         # table must read co-located buckets: NO Exchange anywhere
         plan = _plan(assemble_docs_cli(bucketed, two_phase=False))
