@@ -567,7 +567,7 @@ def near_dups_indexed(
     and drops capped buckets from the increment side — which caps both
     joins, since every pair needs an increment-side row. Drops are
     observable via ``cap_metrics`` (``dedup.cap_metrics_get``)."""
-    from sparkocr.pipeline.dedup import _require_cap, cap_hot_buckets
+    from sparkocr.pipeline.dedup import _require_cap, cap_hot_buckets, combined_counts
 
     _require_cap(bucket_max, cap_metrics)
     m = _read_meta(spark, path)
@@ -606,15 +606,9 @@ def near_dups_indexed(
         # the cap branch reads `old` twice (counts + join): cache the
         # pruned scan so the partition listing + anti-join run once
         old = caching.register(old)
-        counts_new = sig_new.groupBy("sig").agg(F.count(F.lit(1)).alias("bn_new"))
-        counts_old = old.groupBy("sig").agg(F.count(F.lit(1)).alias("bn_old"))
-        totals = counts_new.join(counts_old, "sig", "left").select(
-            "sig",
-            (F.col("bn_new") + F.coalesce("bn_old", F.lit(0))).alias("bn"),
-        )
         sig_new = cap_hot_buckets(
             sig_new, ["sig"], bucket_max, cap_metrics,
-            counts=totals, broadcast_small=True,
+            counts=combined_counts(sig_new, old, ["sig"]), broadcast_small=True,
         )
 
     def _pairs(a, b, strict):

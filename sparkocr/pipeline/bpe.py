@@ -196,12 +196,15 @@ def count_text(text: str | None, ranks: dict[tuple[bytes, bytes], int]) -> int |
     return sum(encode_len(w.encode("utf-8"), ranks) for w in text.split())
 
 
+#: word -> token count under the default merges table — the only table
+#: ``_count_batch`` counts with, so a cached count is never stale
 _WORD_CACHE: dict[str, int] = {}
 
 
-def _count_batch(texts: pd.Series, ranks) -> pd.Series:
+def _count_batch(texts: pd.Series) -> pd.Series:
     out = []
     cache = _WORD_CACHE
+    ranks = load_default_ranks()
     for t in texts:
         if t is None:
             out.append(None)
@@ -229,6 +232,6 @@ def bpe_token_count_col(text_col: str = "text"):
 
     @F.pandas_udf("long")
     def _bpe_count(s: pd.Series) -> pd.Series:
-        return _count_batch(s, load_default_ranks())
+        return _count_batch(s)
 
     return _bpe_count(F.col(text_col))

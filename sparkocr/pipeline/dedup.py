@@ -12,6 +12,18 @@ At scale: exact dedup is a single hash-aggregate; LSH turns the quadratic
 near-dup problem into groupBy(band)+equi-join, which AQE skew-splits if one
 band is hot; shingle explosion multiplies rows ~n_chars/stride so we shingle
 *after* column pruning (doc_id + text only).
+
+MinHash-LSH candidate pairs have one algebra, shared by the full operator
+(``lsh_candidate_pairs``) and the incremental one over a persisted store
+(``lsh_store.incremental_lsh_pairs``): ``band_keys`` turns signatures into
+(doc_id, bkey) band rows; ``cap_hot_buckets`` drops buckets over
+``bucket_max`` (counted over the corpus, or for an increment over old∪new
+by ``combined_counts``); ``band_pairs`` joins band rows on bkey, counts
+each pair's matching bands, prunes pairs that cannot reach ``min_est``
+(``min_band_matches``, corrected by ``capped_band_rows`` for the matches a
+cap hid), and verifies the rest against both signatures
+(``est_jaccard_col``). The full operator runs ``band_pairs`` once as a
+self-join; the increment runs it twice, new-new and new-old.
 """
 
 from __future__ import annotations
@@ -288,8 +300,7 @@ def jaccard_pairs(
 
 
 def check_band_divisibility(n_perm: int, band_rows: int) -> None:
-    """Shared by the full LSH operator and the incremental store — ONE
-    copy of the validation so the S-curve contract cannot drift."""
+    """Reject a band layout that would silently drop permutations."""
     if n_perm % band_rows != 0:
         raise ValueError(
             f"n_perm={n_perm} not divisible by band_rows={band_rows}: the "
@@ -299,11 +310,8 @@ def check_band_divisibility(n_perm: int, band_rows: int) -> None:
 
 
 def est_jaccard_col(n_perm: int):
-    """The estimate column both LSH paths emit: fraction of agreeing
-    minhashes over x_i / y_i signature-column pairs, rounded to 6
-    places. ONE definition — ``lsh_store.incremental_lsh_pairs``'
-    documented exact agreement with ``lsh_candidate_pairs`` depends on
-    the two never drifting."""
+    """The LSH estimate column: fraction of agreeing minhashes over
+    x_i / y_i signature-column pairs, rounded to 6 places."""
     agree = sum(
         F.when(F.col(f"x_{i}") == F.col(f"y_{i}"), 1).otherwise(0)
         for i in range(n_perm)
@@ -428,6 +436,142 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
+    """(doc_id, bkey) rows, one per band: bkey = "<band>:<md5 of the
+    band's comma-joined minhash values>". THE band join key: one string
+    column carries the whole equi-join, so the LSH store's bands table
+    can be bucketed on it."""
+    n_bands = n_perm // band_rows
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.concat(
+                        F.lit(f"{b}:"),
+                        F.md5(
+                            F.concat_ws(
+                                ",",
+                                *[
+                                    F.col(f"mh_{b * band_rows + r}")
+                                    for r in range(band_rows)
+                                ],
+                            )
+                        ),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bkey"),
+    )
+
+
+def combined_counts(new: DataFrame, old: DataFrame, keys: list[str]) -> DataFrame:
+    """An increment's combined old∪new bucket membership: for every
+    bucket (``keys``) the increment ``new`` touches, its row count plus
+    ``old``'s, as column ``bn`` — the ``counts`` frame
+    ``cap_hot_buckets`` takes. Only touched buckets can produce pairs,
+    so the frame is increment-sized; ``old`` aggregates on its own
+    (Exchange-free when it is a table bucketed on ``keys``)."""
+
+    def count(df: DataFrame, name: str) -> DataFrame:
+        return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(name))
+
+    return count(new, "bn_new").join(count(old, "bn_old"), keys, "left").select(
+        *keys, (F.col("bn_new") + F.coalesce("bn_old", F.lit(0))).alias("bn")
+    )
+
+
+def capped_band_rows(bands: DataFrame, counts: DataFrame, cap: int) -> DataFrame:
+    """(doc_id, n_capped): per doc of ``bands``, how many of its band
+    rows sit in a bucket whose ``counts`` exceed ``cap``. A capped bucket
+    hides its members' collisions from the band-match count, so a doc's
+    n_capped bounds the matches the cap can hide from any pair it is in
+    — the prune's correction in ``band_pairs``."""
+    hot = counts.filter(F.col("bn") > cap).select("bkey")
+    return (
+        bands.join(F.broadcast(hot), "bkey", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_capped"))
+    )
+
+
+def band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    n_perm: int,
+    band_rows: int,
+    min_est: float | None,
+    capped: DataFrame | None,
+    self_join: bool,
+) -> DataFrame:
+    """THE LSH candidate-pair algebra: join the (doc_id, bkey) band rows
+    ``a`` and ``b`` on the band key, count each pair's matching bands,
+    prune, then verify against the signatures (``sig_a`` for ``a``'s
+    docs, ``sig_b`` for ``b``'s). Output ``(id1, id2, est_jaccard)``
+    with id1 < id2.
+
+    ``self_join``: ``a`` and ``b`` are the same rows and each pair is
+    taken once (a.doc_id < b.doc_id); otherwise ``a`` is an increment
+    probing disjoint old rows ``b``.
+
+    ``min_est`` None keeps every candidate (one distinct on the pair).
+    Set, the pair dedup becomes a count of matching bands ``_m`` (same
+    shuffle), pairs that cannot reach ``min_band_matches`` drop before
+    the verify join — a near-dup family's single-band collisions never
+    reach it — and only ``est_jaccard >= min_est`` returns. ``capped``
+    (``capped_band_rows`` of ``a``'s docs) keeps the prune exact under a
+    hot-bucket cap: the bound is applied to ``_m`` plus the matches the
+    cap may have hidden — the smaller n_capped of the two docs for a
+    self-join, and ``a``'s doc's own n_capped otherwise (the cap drops
+    buckets from ``a``, so a hidden match always needs that doc's
+    dropped row)."""
+    cond = F.col("a.bkey") == F.col("b.bkey")
+    if self_join:
+        cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
+    cand = a.alias("a").join(b.alias("b"), cond).select(
+        F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2")
+    )
+    if min_est is None:
+        cand = cand.distinct()
+    else:
+        cand = cand.groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("_m"))
+        matches = F.col("_m")
+        if capped is not None:
+            sides = ("id1", "id2") if self_join else ("id1",)
+            for c in sides:
+                cand = cand.join(
+                    capped.select(
+                        F.col("doc_id").alias(c), F.col("n_capped").alias(f"_nc_{c}")
+                    ),
+                    c,
+                    "left",
+                )
+            ncs = [F.coalesce(f"_nc_{c}", F.lit(0)) for c in sides]
+            matches = matches + (F.least(*ncs) if self_join else ncs[0])
+        m_min = min_band_matches(n_perm, band_rows, min_est)
+        cand = cand.filter(matches >= m_min).select("id1", "id2")
+    xs = sig_a.select(
+        F.col("doc_id").alias("id1"),
+        *[F.col(f"mh_{i}").alias(f"x_{i}") for i in range(n_perm)],
+    )
+    ys = sig_b.select(
+        F.col("doc_id").alias("id2"),
+        *[F.col(f"mh_{i}").alias(f"y_{i}") for i in range(n_perm)],
+    )
+    ids = (
+        ["id1", "id2"]
+        if self_join
+        else [F.least("id1", "id2").alias("id1"), F.greatest("id1", "id2").alias("id2")]
+    )
+    out = cand.join(xs, "id1").join(ys, "id2").select(*ids, est_jaccard_col(n_perm))
+    if min_est is not None:
+        out = out.filter(F.col("est_jaccard") >= min_est)
+    return out
+
+
 def lsh_candidate_pairs(
     docs: DataFrame, n_perm: int = N_PERM, band_rows: int = BAND_ROWS, k: int = SHINGLE,
     bucket_max: int = 10_000,
@@ -437,8 +581,9 @@ def lsh_candidate_pairs(
     min_est: float | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH: band signatures → bucket equi-join → candidate pairs
-    with estimated similarity = fraction of agreeing minhashes.
+    """MinHash-LSH over the whole corpus: ``band_pairs`` as a self-join
+    of the corpus' band rows → candidate pairs with estimated similarity
+    = fraction of agreeing minhashes.
 
     ``min_est``: when set, only pairs with ``est_jaccard >= min_est``
     are returned, and the band-match-count pigeonhole prune
@@ -459,13 +604,9 @@ def lsh_candidate_pairs(
     that can actually clear the threshold. ``None`` keeps the full
     candidate set (the catalog/oracle contract).
 
-    Interaction with ``bucket_max``: a capped bucket hides its members'
-    collisions from the band-match count, so the prune bound is applied
-    to ``_m + min(n_capped(id1), n_capped(id2))`` — each doc's count of
-    band rows that fell in capped buckets bounds how many matches the
-    caps could have hidden from this pair. Result-identity with the
-    default-path-then-filter composition therefore holds under capping
-    too (pinned by test_min_est_exact_when_cap_hides_collisions). With
+    Interaction with ``bucket_max``: ``band_pairs``' capped-bucket
+    correction keeps the prune result-identical under capping too
+    (pinned by test_min_est_exact_when_cap_hides_collisions). With
     BOTH ``min_est`` and ``bucket_max`` set the operator goes EAGER: a
     driver-paced probe checks whether any bucket is actually hot and
     builds the correction plan only then — the zero-hot common case
@@ -501,63 +642,27 @@ def lsh_candidate_pairs(
         if sigs is not None
         else caching.register(minhash_signatures(docs, n_perm, k, max_chars, hash_kind))
     )
-    n_bands = n_perm // band_rows
-    bands = sig.select(
-        "doc_id",
-        *[
-            F.md5(
-                F.concat_ws(",", *[F.col(f"mh_{b * band_rows + r}") for r in range(band_rows)])
-            ).alias(f"band_{b}")
-            for b in range(n_bands)
-        ],
-    )
-    # stack bands: (doc_id, band_id, band_hash) then self-join per bucket
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band_{b}").alias("bh"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", F.col("e.band_id").alias("band_id"), F.col("e.bh").alias("bh"))
-    capped_docs = None
+    bands = band_keys(sig, n_perm, band_rows)
+    capped = None
     if min_est is not None and bucket_max is not None:
-        # the prune counts OBSERVED collisions, but a capped bucket hides
-        # its members' collisions: a pair matching in a capped band and a
-        # kept band shows _m=1 and would be wrongly pruned (the default
-        # path keeps it via the surviving bucket). Correction: count each
-        # doc's band rows that fell in capped buckets (n_capped); the
-        # pair's TRUE match count is at most _m + min(nc1, nc2), and
-        # pruning on that upper bound is exact again. Measure-then-plan
-        # (the asof_join/extract_turns discipline, and the reason this
-        # operator goes eager here): one cheap probe asks whether ANY
-        # bucket is hot — on the common no-hot-bucket corpus the answer
-        # costs a sub-second aggregate off the cached signatures and the
-        # prune keeps its zero-overhead plan (an unconditional carry was
-        # measured SLOWER than not pruning at all: the per-band-row nc
-        # attach re-shuffled the band table); only when a cap will
-        # actually fire does the correction join onto the PAIR aggregate
-        # (two nc lookups on the deduped pairs, AQE-sized — capped-doc
-        # membership starts at bucket_max rows, so pathological floods
-        # fall back to shuffle joins on the rare path).
-        counts = stacked.groupBy("band_id", "bh").agg(
-            F.count(F.lit(1)).alias("bn")
-        )
-        hot = counts.filter(F.col("bn") > bucket_max).select("band_id", "bh")
-        any_hot = hot.limit(1).count() > 0
+        # Measure-then-plan (the asof_join/extract_turns discipline, and
+        # the reason this operator goes eager here): one cheap probe asks
+        # whether ANY bucket is hot — on the common no-hot-bucket corpus
+        # the answer costs a sub-second aggregate off the cached
+        # signatures and the prune keeps its zero-overhead plan (an
+        # unconditional carry was measured SLOWER than not pruning at
+        # all: the per-band-row attach re-shuffled the band table); only
+        # when a cap will actually fire does the correction join onto
+        # the PAIR aggregate (n_capped lookups on the deduped pairs,
+        # AQE-sized — capped-doc membership starts at bucket_max rows, so
+        # pathological floods fall back to shuffle joins on the rare path).
+        counts = bands.groupBy("bkey").agg(F.count(F.lit(1)).alias("bn"))
+        any_hot = counts.filter(F.col("bn") > bucket_max).limit(1).count() > 0
         if any_hot:
-            capped_docs = (
-                stacked.join(F.broadcast(hot), ["band_id", "bh"], "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_capped"))
-            )
+            capped = capped_band_rows(bands, counts, bucket_max)
         if any_hot or cap_metrics is not None:
-            stacked = cap_hot_buckets(
-                stacked, ["band_id", "bh"], bucket_max, cap_metrics,
-                counts=counts,
+            bands = cap_hot_buckets(
+                bands, ["bkey"], bucket_max, cap_metrics, counts=counts
             )
         # else: the probe just proved NO bucket exceeds the cap, so the
         # semi-join against the kept-keys set is an identity — skip it
@@ -566,54 +671,11 @@ def lsh_candidate_pairs(
         # asked for no cap telemetry: with cap_metrics the Observation
         # must ride the returned plan, which requires the join.
     elif bucket_max is not None:
-        stacked = cap_hot_buckets(stacked, ["band_id", "bh"], bucket_max, cap_metrics)
-    a, b = stacked.alias("a"), stacked.alias("b")
-    raw = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-    if min_est is None:
-        cand = raw.distinct()
-    else:
-        # same shuffle as the distinct (hash-aggregate on the pair key,
-        # one extra long per group), but the group count = the pair's
-        # band-match count — the pigeonhole prune falls out for free
-        m_min = min_band_matches(n_perm, band_rows, min_est)
-        grouped = raw.groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("_m"))
-        if capped_docs is not None:
-            nc1 = capped_docs.select(
-                F.col("doc_id").alias("id1"), F.col("n_capped").alias("_nc1")
-            )
-            nc2 = capped_docs.select(
-                F.col("doc_id").alias("id2"), F.col("n_capped").alias("_nc2")
-            )
-            cand = (
-                grouped.join(nc1, "id1", "left")
-                .join(nc2, "id2", "left")
-                .filter(
-                    F.col("_m")
-                    + F.least(
-                        F.coalesce("_nc1", F.lit(0)),
-                        F.coalesce("_nc2", F.lit(0)),
-                    )
-                    >= m_min
-                )
-                .select("id1", "id2")
-            )
-        else:
-            cand = grouped.filter(F.col("_m") >= m_min).select("id1", "id2")
-    s1 = sig.select(F.col("doc_id").alias("id1"), *[F.col(f"mh_{i}").alias(f"x_{i}") for i in range(n_perm)])
-    s2 = sig.select(F.col("doc_id").alias("id2"), *[F.col(f"mh_{i}").alias(f"y_{i}") for i in range(n_perm)])
-    out = (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .select("id1", "id2", est_jaccard_col(n_perm))
+        bands = cap_hot_buckets(bands, ["bkey"], bucket_max, cap_metrics)
+    return band_pairs(
+        bands, bands, sig, sig, n_perm, band_rows, min_est, capped,
+        self_join=True,
     )
-    if min_est is not None:
-        out = out.filter(F.col("est_jaccard") >= min_est)
-    return out
 
 
 def _finish_on_driver(
@@ -803,7 +865,9 @@ def dup_clusters(
     input, a 20k-doc random-id template chain, used 25).
 
     ``stats``: optional dict the run fills in place — ``n_edges`` (after
-    symmetrization/dedup), ``mode`` (``"driver"`` or ``"distributed"``),
+    symmetrization/dedup), ``edge_bytes`` (the estimated collected-edge
+    footprint the byte budget checks), ``mode`` (``"driver"`` or
+    ``"distributed"``),
     ``rounds`` (distributed propagation rounds executed; 0 for an
     edgeless graph or the driver finisher), and ``n_changed_last``
     (labels changed in the final round; 0 on convergence). The driver
@@ -874,14 +938,12 @@ def dup_clusters(
         # symmetrized-count form double-counted and refused graphs the
         # driver handles comfortably: the measured 5.5M-collected-edge
         # graph is ~88 MB and union-finds in 7-10 s)
-        driver_ok = (
-            n_edges <= driver_max_edges
-            and (n_edges // 2) * pair_bytes <= DRIVER_MAX_BYTES
-        )
+        edge_bytes = (n_edges // 2) * pair_bytes
+        driver_ok = n_edges <= driver_max_edges and edge_bytes <= DRIVER_MAX_BYTES
         if stats is not None:
             stats.update(
-                n_edges=n_edges, rounds=0, n_changed_last=0,
-                mode="driver" if driver_ok else "distributed",
+                n_edges=n_edges, edge_bytes=edge_bytes, rounds=0,
+                n_changed_last=0, mode="driver" if driver_ok else "distributed",
             )
         if n_edges == 0:
             # answer = the singleton labelling, built WITHOUT referencing
@@ -989,10 +1051,12 @@ def neardup_corpus(
     the keep set. The two are set-identical (keep = roots + untouched =
     docs - drops), but the drop side is bounded by the edge-touched
     node count — tiny next to the corpus — so under the driver
-    clustering mode it is explicitly broadcast and the corpus-sized
-    ``docs`` frame (which carries full text) is never shuffled; the
-    keep-set formulation shuffled the whole corpus through a sort-merge
-    join whenever the optimizer could not prove the keep side small.
+    clustering mode, when its byte bound is within
+    ``spark.sql.autoBroadcastJoinThreshold``, it is explicitly broadcast
+    and the corpus-sized ``docs`` frame (which carries full text) is
+    never shuffled; the keep-set formulation shuffled the whole corpus
+    through a sort-merge join whenever the optimizer could not prove the
+    keep side small.
     Null-``id_col`` docs are dropped either way (they matched nothing
     in the semi join; here they are filtered explicitly), preserving
     the original contract."""
@@ -1001,11 +1065,12 @@ def neardup_corpus(
     drops = labels.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
-    if stats.get("mode") == "driver":
-        # driver mode proved the edge graph small (count + byte budget):
-        # the drop set is at most the edge-touched nodes, already
-        # materialized on the driver — broadcast it so the corpus scan
-        # stays shuffle-free
+    # the drop set holds at most the edge-touched nodes, two ids per
+    # undirected edge, so the collected-edge estimate bounds its bytes:
+    # broadcast it (the corpus scan stays shuffle-free) only when that
+    # bound is within the session's broadcast threshold
+    conf = docs.sparkSession._jsparkSession.sessionState().conf()
+    if stats["mode"] == "driver" and stats["edge_bytes"] <= conf.autoBroadcastJoinThreshold():
         drops = F.broadcast(drops)
     return docs.filter(F.col(id_col).isNotNull()).join(
         drops, id_col, "left_anti"

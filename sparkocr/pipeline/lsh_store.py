@@ -31,15 +31,17 @@ corpus text) plus shuffles of increment-sized data only — versus the
 full re-mine's shingle explode over the corpus text (~100x the bytes)
 and two corpus-sized shuffles.
 
-``incremental_lsh_pairs(new_docs, ...)`` emits every candidate pair
-touching at least one new document (new-new and new-old), with the same
-``est_jaccard`` definition as ``lsh_candidate_pairs`` — the two agree
-exactly on shared pairs (differential-tested). Run it BEFORE or AFTER
-appending the increment: store rows whose doc_id appears in ``new_docs``
-are excluded from the "old" side either way.
+The bands table holds ``dedup.band_keys`` rows, and
+``incremental_lsh_pairs(new_docs, ...)`` runs ``dedup``'s candidate-pair
+algebra (see that module's docstring) twice — the increment against
+itself and against the bands table — so it emits every pair of the full
+re-mine that touches a new document, with the same ``est_jaccard``
+(differential-tested). Run it BEFORE or AFTER appending the increment:
+store rows whose doc_id appears in ``new_docs`` are excluded from the
+"old" side either way.
 
-Signatures use ``dedup.minhash_signatures`` (this module calls it) with
-the build's ``hash_kind`` — ``"md5"`` (engine-portable default) or
+Signatures use ``dedup.minhash_signatures`` with the build's
+``hash_kind`` — ``"md5"`` (engine-portable default) or
 ``"rolling"`` (the Arrow fast path, ``minhash_fast``) — recorded in
 meta and replayed by every recompute path; the meta row also records
 the signature algorithm version (``sig_v`` = ``dedup.MH_SIG_V``), and
@@ -62,10 +64,12 @@ from sparkocr.pipeline.dedup import (
     N_PERM,
     SHINGLE,
     _require_cap,
+    band_keys,
+    band_pairs,
     cap_hot_buckets,
+    capped_band_rows,
     check_band_divisibility,
-    est_jaccard_col,
-    min_band_matches,
+    combined_counts,
     minhash_signatures,
 )
 
@@ -109,33 +113,11 @@ def _require_sig_v(m: dict, store: str) -> None:
         )
 
 
-def _band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
-    """(doc_id, bkey) rows, one per band: bkey = "<band_id>:<md5 of the
-    band's minhash values>" — the single-column form of
-    ``lsh_candidate_pairs``' (band_id, bh) join key, so one bucketed
-    column carries the whole equi-join."""
-    n_bands = n_perm // band_rows
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{b}:"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"mh_{b * band_rows + r}")
-                                    for r in range(band_rows)
-                                ],
-                            )
-                        ),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bkey"),
+def _replay_signatures(docs: DataFrame, m: dict) -> DataFrame:
+    """The docs' minhash signatures under the store's meta ``m``: the
+    build's parameters replayed, never re-derived."""
+    return minhash_signatures(
+        docs, m["n_perm"], m["k"], _meta_max_chars(m), _meta_hash_kind(m)
     )
 
 
@@ -181,7 +163,7 @@ def build_lsh_store(
     storage.write_rows(sigs, ts, "sigs", n_buckets, "doc_id", storage.BASE)
     stored = spark.table(ts.table("sigs")).drop(storage.STAMP)
     storage.write_rows(
-        _band_keys(stored, n_perm, band_rows), ts, "bands", n_buckets, "bkey",
+        band_keys(stored, n_perm, band_rows), ts, "bands", n_buckets, "bkey",
         storage.BASE,
     )
     storage.write_commit(spark, ts, storage.BASE, storage.BASE, stored.count())
@@ -195,8 +177,8 @@ def build_lsh_store(
 
 def store_signatures(docs: DataFrame, store: str) -> DataFrame:
     """The docs' minhash signatures computed with the STORE's parameters
-    (never re-derived) — exactly the frame ``append_lsh_store`` and
-    ``incremental_lsh_pairs`` each build internally. Compute it ONCE
+    (never re-derived) — the frame ``append_lsh_store`` and
+    ``incremental_lsh_pairs`` each build when not given one. Compute it ONCE
     (and cache it) when calling both for the same increment and pass it
     via their ``sigs=`` parameter: the signature pass is the increment's
     dominant compute at corpus scale, and the default paths pay it
@@ -204,9 +186,7 @@ def store_signatures(docs: DataFrame, store: str) -> DataFrame:
     spark = docs.sparkSession
     m = read_store_meta(spark, store)
     _require_sig_v(m, store)
-    return minhash_signatures(
-        docs, m["n_perm"], m["k"], _meta_max_chars(m), _meta_hash_kind(m)
-    )
+    return _replay_signatures(docs, m)
 
 
 def append_lsh_store(
@@ -263,12 +243,7 @@ def append_lsh_store(
         sig = (
             sigs
             if sigs is not None
-            else caching.register(
-                minhash_signatures(
-                    new_docs, m["n_perm"], m["k"], _meta_max_chars(m),
-                    _meta_hash_kind(m),
-                )
-            )
+            else caching.register(_replay_signatures(new_docs, m))
         )
         n_existing = 0
         if skip_existing:
@@ -278,7 +253,7 @@ def append_lsh_store(
             n_existing = n_before - sig.count()
         storage.write_rows(sig, ts, "sigs", m["n_buckets"], "doc_id", attempt)
         storage.write_rows(
-            _band_keys(sig, m["n_perm"], m["band_rows"]), ts, "bands",
+            band_keys(sig, m["n_perm"], m["band_rows"]), ts, "bands",
             m["n_buckets"], "bkey", attempt,
         )
         rows = sig.count()
@@ -342,13 +317,12 @@ def incremental_lsh_pairs(
     min_est: float | None = None,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs touching at least one NEW document:
-    new-new (self-join of the increment's band keys — increment-sized)
-    and new-old (increment band keys joined against the store's bands
-    table — Exchange-free on the store side, the bands table is bucketed
-    by bkey). Output ``(id1, id2, est_jaccard)`` with id1 < id2, the
-    same estimate definition as ``lsh_candidate_pairs``
-    (``dedup.est_jaccard_col`` — one shared construction).
+    """Candidate near-dup pairs touching at least one NEW document, by
+    ``dedup.band_pairs`` twice: new-new (self-join of the increment's
+    band keys — increment-sized) and new-old (increment band keys
+    joined against the store's bands table — Exchange-free on the store
+    side, the bands table is bucketed by bkey). Output
+    ``(id1, id2, est_jaccard)`` with id1 < id2.
 
     Store rows whose doc_id appears in the increment are excluded from
     the old side (broadcast anti-join on the increment's ids), so the
@@ -356,98 +330,58 @@ def incremental_lsh_pairs(
     ``append_lsh_store`` for the same increment.
 
     ``bucket_max`` caps a band bucket's COMBINED membership (store + the
-    increment itself) before either join, and the capped bucket is
-    dropped from BOTH sides — the same total-membership semantics as
-    ``lsh_candidate_pairs`` over old∪new, so the two operators agree
-    under equal caps, and a boilerplate cluster arriving INSIDE one
-    increment (a crawler re-fetching a template 10^5 times in a day)
-    cannot make the new-new self-join quadratic either. The store-side
-    counts aggregate is Exchange-free on the bucketed table; the
-    combined totals are increment-sized (every relevant bucket is one
-    the increment touches). Capped drops are observable via
-    ``cap_metrics`` (``dedup.cap_metrics_get``).
+    increment itself, ``dedup.combined_counts``) before either join,
+    and the capped bucket is dropped from BOTH sides — the same
+    total-membership semantics as ``lsh_candidate_pairs`` over old∪new,
+    so the two operators agree under equal caps, and a boilerplate
+    cluster arriving INSIDE one increment (a crawler re-fetching a
+    template 10^5 times in a day) cannot make the new-new self-join
+    quadratic either. Capped drops are observable via ``cap_metrics``
+    (``dedup.cap_metrics_get``).
 
     Scale shape: per increment, two columnar scans of the bands table
     (the counts aggregate and the join probe — two plan branches, both
-    Exchange-free) and one of the sigs table; every shuffle moves
-    increment-sized or pair-sized data. The increment is assumed
-    broadcastable (its id set and band keys ride broadcast hints —
-    roughly ≤10^8 docs); for a corpus-scale backfill, chunk the
-    increment into broadcastable slices or rebuild the store.
+    Exchange-free) and one of the sigs table (the new-old verify joins
+    it on its bucket key); every shuffle moves increment-sized or
+    pair-sized data. The increment is assumed broadcastable (its id set
+    and band keys ride broadcast hints — roughly ≤10^8 docs); for a
+    corpus-scale backfill, chunk the increment into broadcastable
+    slices or rebuild the store.
 
     ``min_est``: the same thresholded-prune contract as
-    ``lsh_candidate_pairs(min_est=...)`` — only pairs with
-    ``est_jaccard >= min_est`` return, and the band-match pigeonhole
-    prune runs inside the pair-dedup aggregates so a near-dup FAMILY's
-    single-band collisions never reach the signature verify. Capped
-    buckets hide collisions here too; the bound adds the NEW doc's
-    capped-bucket count (a hidden match always needs the new side's
-    dropped row — for new-new pairs the min of the two new docs').
-    Computing the capped-bucket set reuses the combined-totals branch
-    (one more thin Exchange-free store-counts scan, only when
-    ``min_est`` AND ``bucket_max`` are both set).
+    ``lsh_candidate_pairs(min_est=...)``. Capped buckets hide
+    collisions here too; the bound adds the NEW doc's capped-bucket
+    count (a hidden match always needs the new side's dropped row — for
+    new-new pairs the min of the two new docs'). Computing it reuses
+    the combined counts (one more thin Exchange-free store-counts scan,
+    only when ``min_est`` AND ``bucket_max`` are both set).
 
     ``sigs``: optionally the increment's ``store_signatures`` output —
     compute once, cache, and share with ``append_lsh_store`` (the
     caller owns its caching; it must be built against THIS store).
 
-    Differential-tested
-    ≡ the full operator's min_est output restricted to new-touching
-    pairs."""
+    Differential-tested ≡ the full operator's output restricted to
+    new-touching pairs, with and without ``min_est``."""
     spark = new_docs.sparkSession
     m = read_store_meta(spark, store)
     _require_sig_v(m, store)
     _require_cap(bucket_max, cap_metrics)
-    n_perm = m["n_perm"]
-    # signature columns ride along with the band keys (the increment is
-    # small): new-new pairs then carry BOTH signatures out of the join,
-    # and new-old pairs need only one store-sigs join for the old side.
-    # A caller that also appends this increment passes sigs= (its own
-    # cached store_signatures frame) so the signature pass runs once.
+    n_perm, band_rows = m["n_perm"], m["band_rows"]
     sig_new = (
         sigs
         if sigs is not None
-        else caching.register(
-            minhash_signatures(
-                new_docs, n_perm, m["k"], _meta_max_chars(m),
-                _meta_hash_kind(m),
-            )
-        )
+        else caching.register(_replay_signatures(new_docs, m))
     )
-    bands_new = _band_keys(sig_new, n_perm, m["band_rows"]).join(sig_new, "doc_id")
-
-    new_ids = sig_new.select("doc_id")
-    store_bands = storage.committed_rows(spark, tables(store), "bands").join(
-        F.broadcast(new_ids), "doc_id", "left_anti"
+    bands_new = band_keys(sig_new, n_perm, band_rows)
+    ts = tables(store)
+    store_bands = storage.committed_rows(spark, ts, "bands").join(
+        F.broadcast(sig_new.select("doc_id")), "doc_id", "left_anti"
     )
-    carry_capped = min_est is not None and bucket_max is not None
+    capped = None
     if bucket_max is not None:
-        # combined bucket heat: store members (Exchange-free agg over the
-        # bucketed table) + increment members, summed per touched bucket.
-        # Only buckets the increment touches can produce pairs, so the
-        # totals frame is increment-sized and rides broadcast semi-joins
-        # onto both inputs.
-        counts_new = bands_new.groupBy("bkey").agg(
-            F.count(F.lit(1)).alias("bn_new")
-        )
-        counts_store = store_bands.groupBy("bkey").agg(
-            F.count(F.lit(1)).alias("bn_store")
-        )
-        totals = counts_new.join(counts_store, "bkey", "left").select(
-            "bkey",
-            (F.col("bn_new") + F.coalesce("bn_store", F.lit(0))).alias("bn"),
-        )
-        if carry_capped:
-            # the prune's cap correction (see docstring): per new doc,
-            # how many of its band rows sit in capped buckets — hidden
-            # matches need the new side's dropped row, so this bounds
-            # them (same construction as lsh_candidate_pairs')
-            hot = totals.filter(F.col("bn") > bucket_max).select("bkey")
-            capped_docs = (
-                bands_new.join(F.broadcast(hot), "bkey", "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_capped"))
-            )
+        totals = combined_counts(bands_new, store_bands, ["bkey"])
+        if min_est is not None:
+            capped = capped_band_rows(bands_new, totals, bucket_max)
         # capping the INCREMENT side alone caps both joins: every pair
         # needs a new-side band row in the kept set, so no store-side
         # filter (a second consumer would also duplicate the observe
@@ -456,84 +390,13 @@ def incremental_lsh_pairs(
             bands_new, ["bkey"], bucket_max, cap_metrics,
             counts=totals, broadcast_small=True,
         )
-        if carry_capped:
-            bands_new = bands_new.join(
-                F.broadcast(capped_docs), "doc_id", "left"
-            ).withColumn("n_capped", F.coalesce("n_capped", F.lit(0)))
-    elif min_est is not None:
-        bands_new = bands_new.withColumn("n_capped", F.lit(0))
-
-    xs = [F.col(f"mh_{i}").alias(f"x_{i}") for i in range(n_perm)]
-    ys = [F.col(f"mh_{i}").alias(f"y_{i}") for i in range(n_perm)]
-    est = est_jaccard_col(n_perm)
-    m_min = (
-        min_band_matches(n_perm, m["band_rows"], min_est)
-        if min_est is not None
-        else None
+    old_sigs = storage.committed_rows(spark, ts, "sigs")
+    new_new = band_pairs(
+        bands_new, bands_new, sig_new, sig_new, n_perm, band_rows, min_est,
+        capped, self_join=True,
     )
-    nc = [F.col("n_capped")] if min_est is not None else []
-
-    a = bands_new.select("doc_id", "bkey", *xs, *nc).alias("a")
-    b = bands_new.select("doc_id", "bkey", *ys, *nc).alias("b")
-    nn_cols = [
-        F.col("a.doc_id").alias("id1"),
-        F.col("b.doc_id").alias("id2"),
-        *[F.col(f"a.x_{i}") for i in range(n_perm)],
-        *[F.col(f"b.y_{i}") for i in range(n_perm)],
-    ]
-    if min_est is not None:
-        nn_cols += [
-            F.col("a.n_capped").alias("_nc1"), F.col("b.n_capped").alias("_nc2")
-        ]
-    new_new = a.join(
-        b,
-        (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(*nn_cols)
-    if min_est is None:
-        new_new = new_new.dropDuplicates(["id1", "id2"]).select("id1", "id2", est)
-    else:
-        sig_cols = [f"x_{i}" for i in range(n_perm)] + [f"y_{i}" for i in range(n_perm)]
-        new_new = (
-            new_new.groupBy("id1", "id2")
-            .agg(
-                F.count(F.lit(1)).alias("_m"),
-                *[F.first(c).alias(c) for c in sig_cols + ["_nc1", "_nc2"]],
-            )
-            .filter(F.col("_m") + F.least("_nc1", "_nc2") >= m_min)
-            .select("id1", "id2", est)
-        )
-
-    old_sigs = storage.committed_rows(spark, tables(store), "sigs").select(
-        "doc_id", *ys
+    new_old = band_pairs(
+        bands_new, store_bands, sig_new, old_sigs, n_perm, band_rows, min_est,
+        capped, self_join=False,
     )
-    no_pre = bands_new.select(F.col("doc_id").alias("new_id"), "bkey", *xs, *nc).join(
-        store_bands.select(F.col("doc_id").alias("old_id"), "bkey"), "bkey"
-    )
-    if min_est is None:
-        no_dedup = no_pre.dropDuplicates(["new_id", "old_id"])
-    else:
-        x_cols = [f"x_{i}" for i in range(n_perm)]
-        no_dedup = (
-            no_pre.groupBy("new_id", "old_id")
-            .agg(
-                F.count(F.lit(1)).alias("_m"),
-                *[F.first(c).alias(c) for c in x_cols + ["n_capped"]],
-            )
-            .filter(F.col("_m") + F.col("n_capped") >= m_min)
-        )
-    new_old = (
-        no_dedup
-        # one store join for the old signature, on the sigs table's own
-        # bucket key — Exchange-free on the store side
-        .join(old_sigs.withColumnRenamed("doc_id", "old_id"), "old_id")
-        .select(
-            F.least("new_id", "old_id").alias("id1"),
-            F.greatest("new_id", "old_id").alias("id2"),
-            est,
-        )
-    )
-    out = new_new.unionByName(new_old)
-    if min_est is not None:
-        out = out.filter(F.col("est_jaccard") >= min_est)
-    return out
+    return new_new.unionByName(new_old)

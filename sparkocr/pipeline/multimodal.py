@@ -66,8 +66,10 @@ def _parse_bmp(payload: bytes):
     (row padding excluded), or ``None`` if the payload is not a valid
     BMP of this shape. STRICTNESS IS THE DISPATCH CONTRACT: the header's
     declared file size must equal the payload length and the pixel array
-    must fit exactly, so arbitrary text that happens to start with 'BM'
-    can never take this branch."""
+    (from the header's offset, ``stride * |height|`` bytes) must fit
+    inside the payload — trailing bytes after it are accepted — so
+    arbitrary text that happens to start with 'BM' can never take this
+    branch."""
     import struct
 
     import numpy as np

@@ -350,3 +350,33 @@ def test_byte_budget_counts_collected_rows(spark, monkeypatch):
     out = dedup.dup_clusters(pairs, stats=stats)
     assert stats["mode"] == "driver"
     assert out.count() == 2 * n
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_drop_set_broadcast_respects_session_threshold(spark):
+    """The driver mode broadcasts the drop set only while its byte bound
+    is within spark.sql.autoBroadcastJoinThreshold: at the default the
+    small graph's anti-join is a broadcast join, at -1 no broadcast is
+    planned — a drop set of millions of rows must not be forced onto
+    every executor — and the kept rows are the same either way."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in (1, 2, 3, 9)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(2, 1), (2, 3)], "id1 long, id2 long")
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        stats: dict = {}
+        out = neardup_corpus(docs, pairs, stats=stats)
+        assert stats["mode"] == "driver"
+        assert "BroadcastHashJoin" in _plan(out)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        stats = {}
+        out_off = neardup_corpus(docs, pairs, stats=stats)
+        assert stats["mode"] == "driver"
+        assert "Broadcast" not in _plan(out_off), _plan(out_off)
+        assert sorted(r["doc_id"] for r in out_off.collect()) == [1, 9]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)

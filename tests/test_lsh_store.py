@@ -689,3 +689,45 @@ def test_build_over_empty_input(spark, docs):
         for t in (f"{name}_sigs", f"{name}_bands", f"{name}_meta",
                   f"{name}_commits"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_incremental_min_est_exact_when_cap_hides_collisions(spark):
+    """The increment's counterpart of test_minhash's hidden-collision
+    case: new docs N1, N2 and store doc A share both bands (est 1.0),
+    but ten store fillers share band 0 too, pushing that bucket's
+    combined membership past bucket_max. Every pair then shows one
+    observed band match; the prune's capped-bucket correction (the new
+    doc's count for new-old pairs, the smaller of the two for new-new)
+    must keep them, so pruned == unpruned filtered at min_est."""
+    from sparkocr.pipeline import caching
+    from sparkocr.pipeline.lsh_store import build_lsh_store, incremental_lsh_pairs
+
+    cols = ["doc_id", "mh_0", "mh_1", "mh_2", "mh_3"]
+    old = spark.createDataFrame(
+        [("A", 1, 1, 2, 2)]
+        + [(f"F{i:02d}", 1, 1, 100 + i, 200 + i) for i in range(10)],
+        cols,
+    )
+    new = spark.createDataFrame([("N1", 1, 1, 2, 2), ("N2", 1, 1, 2, 2)], cols)
+    name = "lsh_store_hidden"
+    try:
+        build_lsh_store(old, name, n_perm=4, band_rows=2, n_buckets=2, sigs=old)
+        kw = dict(bucket_max=10, sigs=new)
+        default = {
+            (r.id1, r.id2): r.est_jaccard
+            for r in incremental_lsh_pairs(new, name, **kw).collect()
+            if r.est_jaccard >= 1.0
+        }
+        # fixture sanity: band 0 (13 members) capped, every pair
+        # survives via band 1 alone on the unpruned path
+        assert default == {("A", "N1"): 1.0, ("A", "N2"): 1.0, ("N1", "N2"): 1.0}
+        pruned = {
+            (r.id1, r.id2): r.est_jaccard
+            for r in incremental_lsh_pairs(new, name, **kw, min_est=1.0).collect()
+        }
+        assert pruned == default
+    finally:
+        caching.release_all()
+        for t in (f"{name}_sigs", f"{name}_bands", f"{name}_meta",
+                  f"{name}_commits"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
