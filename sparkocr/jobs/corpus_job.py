@@ -267,7 +267,9 @@ def _split_pack_write(
 ):
     """Hash-split, pack per split (pack ids offset per ``offsets``, one
     per train/val/test), join pack columns back, and write the corpus."""
-    from sparkocr.pipeline.dedup import hash_split
+    from pyspark.sql import Observation
+
+    from sparkocr.pipeline.dedup import cap_metrics_get, hash_split
     from sparkocr.pipeline.packing import pack_sequences
     from sparkocr.pipeline.textstats import ws_token_count_col
 
@@ -337,25 +339,31 @@ def _split_pack_write(
     packed = packed_parts[0]
     for part in packed_parts[1:]:
         packed = packed.unionByName(part)
-    # materialize the (tiny, id+counts-only) pack frame once: its agg
-    # provides the summary counts AND the corpus join below reuses the
-    # cache instead of re-running the three pack plans. Counting here is
-    # equivalent to re-reading the written corpus (each final doc gets
-    # exactly one pack row, so join rows == pack rows), minus one
-    # driver-paced re-read job — part of the serial floor the scaling
-    # decomposition measures.
-    packed = caching.register(packed)
-    stats = packed.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.count_distinct("pack_id").alias("packs"),
-    ).first()
-    corpus = (final.drop("n_ws_tokens") if drop_helper else final).join(
-        packed.select("doc_id", "n_tokens", "pack_id", "pack_pos"),
-        "doc_id",
+    # the summary counts ride the corpus write as an Observation, so the
+    # three pack plans run once, inside the write job, with no cached
+    # pack frame and no separate counting job. Each final doc gets
+    # exactly one pack row, so the written rows are the packed docs and
+    # every pack has exactly one pack_pos == 0 row. (Caching the pack
+    # frame would also pin its shuffle at spark.sql.shuffle.partitions:
+    # AQE does not re-partition a cached plan.)
+    obs = Observation("pack_counts")
+    corpus = (
+        (final.drop("n_ws_tokens") if drop_helper else final)
+        .join(
+            packed.select("doc_id", "n_tokens", "pack_id", "pack_pos"),
+            "doc_id",
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum((F.col("pack_pos") == 0).cast("long")).alias("packs"),
+        )
     )
     corpus.write.mode("overwrite").parquet(os.path.join(out_dir, "corpus"))
-    counts["packed_docs"] = int(stats["rows"])
-    counts["packs"] = int(stats["packs"])
+    # None: AQE pruned an empty relation together with the observation
+    stats = cap_metrics_get(obs) or {}
+    counts["packed_docs"] = int(stats.get("rows") or 0)
+    counts["packs"] = int(stats.get("packs") or 0)
     lap("split_pack_write")
 
 
@@ -536,7 +544,11 @@ def increment_corpus(
     records its kind and appends replay it, so an increment can never
     drift from the signatures it is compared against."""
     from sparkocr.pipeline import caching, corpus_state
-    from sparkocr.pipeline.dedup import dedup_corpus, dup_clusters
+    from sparkocr.pipeline.dedup import (
+        cap_metrics_get,
+        dedup_corpus,
+        dup_clusters,
+    )
     from sparkocr.pipeline.lsh_store import (
         append_lsh_store,
         incremental_lsh_pairs,
@@ -597,11 +609,15 @@ def increment_corpus(
         # "this stays 0"; a nonzero value is the observable alarm.
         # (Observation rides the novel.count() action above; with zero
         # input docs the observed subtree may be pruned before it runs,
-        # so short-circuit rather than block on an unfired observation.)
-        counts["byid_content_conflicts"] = (
-            int(fstats["after_byhash_obs"].get["n"]) - counts["novel_docs"]
+        # so short-circuit rather than block on an unfired observation.
+        # A None read means AQE pruned the observed subtree: no conflicts.)
+        byhash = (
+            cap_metrics_get(fstats["after_byhash_obs"])
             if counts["after_exact_dedup"]
-            else 0
+            else None
+        )
+        counts["byid_content_conflicts"] = (
+            int(byhash["n"]) - counts["novel_docs"] if byhash else 0
         )
         lap("state_filter")
 

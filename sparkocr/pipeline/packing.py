@@ -9,13 +9,15 @@ on everything before it), so this is the scale-correct two-level shape:
 1. documents are hash-assigned to ``n_groups`` independent streams
    (``pmod(xxhash64(doc_id), n_groups)`` — deterministic, partition-
    layout-independent, same trick as ``dedup.hash_split``);
-2. streams are shuffled to their owning partition and sorted there
-   (``repartition(group_id)`` + ``sortWithinPartitions``), then a
-   ``mapInPandas`` pass STREAMS the sorted Arrow batches through
+2. streams are hash-shuffled on ``group_id`` and sorted within each
+   partition (``repartition("group_id")`` + ``sortWithinPartitions``),
+   then a ``mapInPandas`` pass STREAMS the sorted Arrow batches through
    per-group running counters — true O(1) state per group, never a
    whole group materialized in one pandas frame (a group is ~corpus /
    n_groups rows; loading it would OOM an executor at the stated
-   scale).
+   scale). A partition holds any number of whole streams: the number
+   of partitions follows ``spark.sql.shuffle.partitions`` and AQE
+   coalescing, not ``n_groups``.
 
 Determinism: pack assignment is a pure function of the (doc_id,
 n_tokens) multiset, budget, and n_groups — independent of partitioning
@@ -96,9 +98,15 @@ def pack_sequences(
 
     Scale shape: one shuffle (the group repartition), per-partition sort,
     and a streaming map whose state is one counter per in-flight group.
-    Raising ``n_groups`` bounds any stream's length; greedy next-fit
-    loses at most one document's tokens per pack boundary regardless of
-    stream count."""
+    ``n_groups`` counts streams, not tasks: the shuffle hashes on the
+    group column without a partition count, so the session's shuffle
+    partitions and AQE coalescing size the Python map stage to the
+    data. Each Python task has a fixed cost (~0.2 CPU-s of worker setup
+    on a 4-core host) whatever its row count, so a partition per stream
+    would make small inputs pay ``n_groups`` of them. Raising
+    ``n_groups`` bounds any stream's length; greedy next-fit loses at
+    most one document's tokens per pack boundary regardless of stream
+    count."""
     if budget <= 0:
         raise ValueError(f"pack_sequences: budget must be positive, got {budget}")
     if n_groups <= 0:
@@ -135,7 +143,7 @@ def pack_sequences(
         .alias("n_tokens"),
         group_expr.cast("long").alias("group_id"),
     )
-    grouped = sized.repartition(n_groups, "group_id").sortWithinPartitions(
+    grouped = sized.repartition("group_id").sortWithinPartitions(
         "group_id", "doc_id", "n_tokens"
     )
 

@@ -128,6 +128,40 @@ def test_packs_never_cross_splits(spark, tiny_transcripts, tmp_path):
         assert sorted(m.pack_pos for m in members) == list(range(len(members)))
 
 
+def test_summary_pack_counts_match_written_corpus(
+    spark, tiny_transcripts, tmp_path
+):
+    """The summary's pack counts (observed on the corpus write) equal a
+    read-back of the written corpus."""
+    from pyspark.sql import functions as F
+
+    from sparkocr.jobs.corpus_job import build_corpus
+
+    out = str(tmp_path / "corpus_counts")
+    counts = build_corpus(spark, tiny_transcripts, out, budget=256, min_words=1)
+    got = spark.read.parquet(os.path.join(out, "corpus")).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_distinct("pack_id").alias("packs"),
+    ).first()
+    assert counts["packed_docs"] == got["rows"] > 0
+    assert counts["packs"] == got["packs"] > 0
+
+
+def test_quality_filter_dropping_everything_packs_nothing(
+    spark, tiny_transcripts, tmp_path
+):
+    """A quality floor above every document's word count leaves an empty
+    corpus write: the observed pack counts read 0 (AQE may prune the
+    observation with the empty relation) instead of raising or
+    blocking."""
+    from sparkocr.jobs.corpus_job import build_corpus
+
+    out = str(tmp_path / "corpus_nothing")
+    counts = build_corpus(spark, tiny_transcripts, out, min_words=10**9)
+    assert counts["after_quality_filter"] == 0
+    assert counts["packed_docs"] == counts["packs"] == 0
+
+
 def test_size_col_packs_by_regex_tokens(spark, tiny_transcripts, tmp_path):
     """The BPE seam end-to-end: --size-col n_word_tokens swaps the
     whitespace stand-in for the regex counter; every pack's n_tokens is

@@ -228,3 +228,70 @@ def test_id_offset_namespacing(spark, docs):
         pack_sequences(docs, BUDGET, n_groups=8, id_offset=-1)
     with pytest.raises(ValueError, match="overlap"):
         pack_sequences(docs, BUDGET, n_groups=8, id_offset=1 << 40)
+
+
+@pytest.mark.parametrize("coalesce", ["true", "false"])
+@pytest.mark.parametrize("partitions", [1, 3, 200])
+def test_packing_ignores_physical_layout(spark, docs, partitions, coalesce):
+    """Pack assignment does not depend on how many shuffle partitions the
+    group exchange gets or whether AQE coalesces them: a partition may
+    hold any number of whole streams."""
+    from sparkocr.pipeline.packing import pack_sequences
+
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": coalesce,
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        packed = pack_sequences(docs, BUDGET, n_groups=8).collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    rows = [(r.doc_id, r.n_tokens, r.group_id) for r in packed]
+    want = _oracle(rows, BUDGET, 8)
+    assert len(packed) == docs.count()
+    for r in packed:
+        assert (r.pack_id, r.pack_pos) == want[r.doc_id], r
+
+
+def test_pack_stage_tasks_follow_data_not_groups(spark):
+    """The group exchange hashes on the column without a partition
+    count, so AQE can coalesce it: 64 streams over ~300 docs run as at
+    most the session's 8 shuffle partitions, not one Python task per
+    stream (each Python task has a fixed setup cost)."""
+    from pyspark.sql import functions as F
+
+    from sparkocr.pipeline.packing import pack_sequences
+
+    src = spark.range(300).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 40).alias("sz")
+    )
+    packed = pack_sequences(src, BUDGET, n_groups=64, size_col="sz")
+    plan = packed._jdf.queryExecution().executedPlan().toString()
+    assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan
+
+    # the Python map stage is the one stage of the action that reads the
+    # group shuffle; its task count comes from the JVM status store
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+
+    def stages():
+        jsc.listenerBus().waitUntilEmpty()
+        seq = store.stageList(
+            None, False, False, sc._gateway.new_array(sc._gateway.jvm.double, 0),
+            None,
+        )
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {s.stageId() for s in stages()}
+    assert len(packed.collect()) == 300
+    readers = [
+        s for s in stages()
+        if s.stageId() not in seen and s.shuffleReadRecords() > 0
+    ]
+    assert len(readers) == 1, [s.stageId() for s in readers]
+    assert readers[0].numTasks() <= 8, readers[0].numTasks()
