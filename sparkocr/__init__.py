@@ -13,6 +13,14 @@ the hot path (all Python work happens inside pandas/Arrow batches via
 ``mapInPandas``/``pandas_udf``); doc assembly is pure JVM (window +
 ``array_sort`` + ``aggregate``); checkpoint/resume via per-bucket lineage
 manifests.
+
+Importing the package installs ``sparkocr.pyworker``'s zip-import fix, so
+that every Python worker which unpickles a sparkocr function stops
+re-reading ``pyspark.zip`` at the start of each later task.
 """
 
+from sparkocr import pyworker as _pyworker
+
 __version__ = "0.1.0"
+
+_pyworker.install()

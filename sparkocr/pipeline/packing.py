@@ -101,8 +101,9 @@ def pack_sequences(
     ``n_groups`` counts streams, not tasks: the shuffle hashes on the
     group column without a partition count, so the session's shuffle
     partitions and AQE coalescing size the Python map stage to the
-    data. Each Python task has a fixed cost (~0.2 CPU-s of worker setup
-    on a 4-core host) whatever its row count, so a partition per stream
+    data. Each Python task has a fixed cost (~0.05 CPU-s of worker setup
+    on a 4-core host, ``tools/pytask_cost.py``) whatever its row count,
+    so a partition per stream
     would make small inputs pay ``n_groups`` of them. Raising
     ``n_groups`` bounds any stream's length; greedy next-fit loses at
     most one document's tokens per pack boundary regardless of stream
