@@ -10,9 +10,10 @@ training-data pipeline needs.
 
 Design: DataFrame-first, fixed StructType schemas, no per-row Python UDFs on
 the hot path (all Python work happens inside pandas/Arrow batches via
-``mapInPandas``/``pandas_udf``); doc assembly is pure JVM (window +
-``array_sort`` + ``aggregate``); checkpoint/resume via per-bucket lineage
-manifests.
+``mapInPandas``/``pandas_udf``); doc assembly is pure JVM (``collect_list``
++ ``array_sort`` + ``aggregate`` in one grouped aggregate, no window);
+checkpoint/resume via one lineage manifest per extract run, with an entry
+per output bucket.
 
 Importing the package installs ``sparkocr.pyworker``'s zip-import fix, so
 that every Python worker which unpickles a sparkocr function stops

@@ -1,4 +1,4 @@
-"""Per-bucket lineage manifests + idempotent resume.
+"""One lineage manifest per extract run + idempotent resume.
 
 The north rule requires the job to checkpoint per partition with lineage
 (input fingerprint, rows in/out, extractor version) so a killed run resumes
@@ -6,34 +6,40 @@ without recomputing completed partitions. Spark batch jobs have no built-in
 partial resume, so we emulate the Iceberg-style snapshot/manifest surface on
 plain Parquet (SURVEY.md §7, "Iceberg absence" risk):
 
-- the output table is partitioned by ``bucket = pmod(xxhash64(conv_id), N)``
-  (the Parquet stand-in for Iceberg ``bucket(conv_id, N)``);
-- one JSON manifest per bucket records the input fingerprint — (row count,
-  bit_xor of xxhash64(conv_id, turn_idx, text)) computed in a single cheap
-  aggregate pass — plus rows in/out and the extractor version;
-- on start, buckets whose manifest matches the current fingerprint and
-  version are skipped; only pending buckets are filtered, extracted, and
-  (dynamically) overwritten.
+- the output table ``<out_dir>/data`` is partitioned by
+  ``bucket = pmod(xxhash64(conv_id), N)`` (the Parquet stand-in for Iceberg
+  ``bucket(conv_id, N)``);
+- one JSON file, ``<out_dir>/_manifest.json``, holds the extractor version
+  once and one entry per completed bucket: its input fingerprint (row
+  count, and the SUM of xxhash64 over conv_id, turn_idx, role, text and
+  tool, from a single aggregate pass) plus its rows out. Like an Iceberg
+  manifest list it is rewritten whole, at most once per run;
+- on start, buckets whose entry matches the current fingerprint under the
+  current extractor version are skipped; only pending buckets are
+  filtered, extracted, and (dynamically) overwritten.
 
 All fingerprinting is JVM expressions; no data leaves the executors except
 the per-bucket aggregate rows. Manifest IO goes through the Hadoop
 FileSystem API (not python ``open``), so ``out_dir`` may be any filesystem
 the cluster can reach — hdfs://, s3a://, or a plain local path — exactly
-like the data writes beside it. A crash between delete and rename of a
-manifest leaves it missing, which the resume logic already treats as
-pending: never wrong, at worst one recomputed bucket.
+like the data writes beside it. The manifest is published after the data
+write and its read-back, so a crash before the publish leaves the previous
+manifest, whose entries never cover a bucket this run rewrote with new
+content. A crash between delete and rename of the publish leaves the
+manifest missing, which the resume treats as every bucket pending: never
+wrong, at worst one full recompute.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
-from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkocr.extract.dispatch import EXTRACTOR_VERSION, extract_turns
+
+_ENTRY = ("input_rows", "input_hash", "rows_out")
 
 
 def _fs(spark: SparkSession, path_str: str):
@@ -54,34 +60,6 @@ def _fs(spark: SparkSession, path_str: str):
     except Exception:
         pass
     return jvm, fs, jpath
-
-
-def _active_spark(spark: SparkSession | None) -> SparkSession:
-    s = spark or SparkSession.getActiveSession()
-    if s is None:
-        raise RuntimeError("manifest IO needs an active SparkSession")
-    return s
-
-
-@dataclass
-class BucketManifest:
-    bucket: int
-    input_rows: int
-    input_hash: int
-    rows_out: int
-    extractor_version: str
-    status: str = "complete"
-
-
-_MANIFEST_NAME_RE = re.compile(r"^bucket=(\d+)\.json(\.tmp)?$")
-
-
-def _manifest_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "_manifests")
-
-
-def _manifest_path(out_dir: str, bucket: int) -> str:
-    return os.path.join(_manifest_dir(out_dir), f"bucket={bucket}.json")
 
 
 def read_json_fs(jvm, fs, path_str: str) -> dict:
@@ -122,33 +100,6 @@ def publish_json_atomic(spark: SparkSession, path_str: str, payload: dict) -> No
         raise IOError(f"json publish failed: rename {path_str}.tmp")
 
 
-def _read_manifest_fs(jvm, fs, path_str: str) -> BucketManifest | None:
-    """Read one manifest through an already-resolved FileSystem. Only the
-    read/parse is error-swallowed (unreadable manifest → pending bucket);
-    infrastructure failures around FS resolution stay loud in callers."""
-    try:
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(path_str)):
-            return None
-        return BucketManifest(**read_json_fs(jvm, fs, path_str))
-    except Exception:
-        return None  # unreadable manifest → treat bucket as pending
-
-
-def read_manifest(
-    out_dir: str, bucket: int, spark: SparkSession | None = None
-) -> BucketManifest | None:
-    spark = _active_spark(spark)  # outside any catch: misconfiguration is loud
-    jvm, fs, _ = _fs(spark, out_dir)
-    return _read_manifest_fs(jvm, fs, _manifest_path(out_dir, bucket))
-
-
-def write_manifest(
-    out_dir: str, m: BucketManifest, spark: SparkSession | None = None
-) -> None:
-    spark = _active_spark(spark)
-    publish_json_atomic(spark, _manifest_path(out_dir, m.bucket), asdict(m))
-
-
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
@@ -185,6 +136,20 @@ def input_fingerprints(df: DataFrame, n_buckets: int) -> dict[int, tuple[int, in
     return {r["bucket"]: (r["n"], int(r["h"])) for r in rows}
 
 
+def _read_manifest(jvm, fs, path_str: str) -> tuple[str | None, dict[int, tuple]]:
+    """(extractor_version, {bucket: (input_rows, input_hash, rows_out)}) of
+    the published manifest. Only the read/parse is error-swallowed: a
+    missing, unparseable or malformed manifest reads as (None, {}), i.e.
+    every bucket pending; FS resolution stays loud in the caller."""
+    try:
+        m = read_json_fs(jvm, fs, path_str)
+        return m["extractor_version"], {
+            int(b): tuple(int(e[k]) for k in _ENTRY) for b, e in m["buckets"].items()
+        }
+    except Exception:
+        return None, {}
+
+
 def run_extract_job(
     spark: SparkSession,
     input_path: str,
@@ -192,89 +157,38 @@ def run_extract_job(
     n_buckets: int = 32,
     force: bool = False,
 ) -> dict:
-    """Resumable extraction: transcripts parquet → turns_out parquet
-    partitioned by bucket, one lineage manifest per bucket.
+    """Resumable extraction: transcripts parquet → ``<out_dir>/data``
+    parquet partitioned by bucket, lineage in ``<out_dir>/_manifest.json``.
 
     Returns {"processed": [...], "skipped": [...], "rows_out": int}.
     """
     df = spark.read.parquet(input_path)
     fps = input_fingerprints(df, n_buckets)
-
-    # ONE manifest-directory listing (a per-bucket exists() probe is ~2
-    # remote calls each on object stores — thousands of sequential HEADs
-    # at n_buckets=1024 before any work starts); .json.tmp leftovers from
-    # a crash inside a publish window are swept here too
-    jvm, fs, _ = _fs(spark, out_dir)
-    glob_path = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(_manifest_dir(out_dir), "bucket=*.json*")
-    )
-    existing: set[int] = set()
-    live = set(fps)
-    statuses = [
-        (st, _MANIFEST_NAME_RE.match(st.getPath().getName()))
-        for st in fs.globStatus(glob_path) or []
-    ]
+    manifest = os.path.join(out_dir, "_manifest.json")
+    jvm, fs, _ = _fs(spark, manifest)
+    version, entries = _read_manifest(jvm, fs, manifest)
     # blast-radius guard: an EMPTY input (transient producer bug, empty
     # snapshot, typo'd path resolving to a _SUCCESS-only dir) makes every
-    # bucket look "vanished" — without this check the loop below would
-    # delete every manifest and every data partition of a completed table
-    # before returning {"processed": [], "skipped": []}. Deleting the
-    # whole output is only valid as an EXPLICIT decision (force=True).
-    # only PUBLISHED manifests (not orphaned .json.tmp from a crashed
-    # publish window) count as completed output worth protecting
-    if not fps and not force and any(
-        m is not None and not m.group(2) for _, m in statuses
-    ):
+    # bucket look "vanished" — without this check the job would delete
+    # every data partition of a completed table before returning
+    # {"processed": [], "skipped": []}. Deleting the whole output is only
+    # valid as an EXPLICIT decision (force=True).
+    if not fps and not force and entries:
         raise ValueError(
             f"input {input_path} resolves to zero rows but completed "
             f"buckets exist at {out_dir} — refusing to delete them; pass "
             "force=True if the table is intentionally now empty"
         )
-    for st, nm in statuses:
-        # strict name check: the glob also matches strays like
-        # bucket=3.json.bak or editor backups — skip them instead of
-        # aborting the whole job on int()
-        if nm is None:
-            continue
-        b = int(nm.group(1))
-        if nm.group(2):  # .tmp suffix
-            if b not in live:
-                fs.delete(st.getPath(), False)  # orphaned publish attempt
-            continue
-        if b not in live:
-            # bucket VANISHED from the input (all rows deleted): drop its
-            # stale manifest + data — neither pending nor skipped, and
-            # dynamic overwrite would never touch its partition
-            fs.delete(st.getPath(), False)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(out_dir, "data", f"bucket={b}")
-                ),
-                True,
-            )
-        else:
-            existing.add(b)
-
-    pending: list[int] = []
-    skipped: list[int] = []
-    for bucket, (n, h) in sorted(fps.items()):
-        m = (
-            _read_manifest_fs(jvm, fs, _manifest_path(out_dir, bucket))
-            if bucket in existing
-            else None
-        )
-        if (
-            not force
-            and m is not None
-            and m.status == "complete"
-            and (m.input_rows, m.input_hash) == (n, h)
-            and m.extractor_version == EXTRACTOR_VERSION
-        ):
-            skipped.append(bucket)
-        else:
-            pending.append(bucket)
-
-    rows_out_total = 0
+    skipped = [
+        b
+        for b, fp in sorted(fps.items())
+        if not force and version == EXTRACTOR_VERSION and entries.get(b, ())[:2] == fp
+    ]
+    pending = sorted(set(fps) - set(skipped))
+    # a bucket VANISHED from the input (all rows deleted) is neither
+    # pending nor skipped, and dynamic overwrite never touches its partition
+    vanished = sorted(set(entries) - set(fps))
+    committed = {b: entries[b] for b in skipped}
     if pending:
         src = with_bucket(df, n_buckets).filter(F.col("bucket").isin(pending))
         turns = extract_turns(src.select("conv_id", "turn_idx", "role", "text", "tool"))
@@ -298,18 +212,26 @@ def run_extract_job(
             .collect()
         }
         for b in pending:
-            n, h = fps[b]
-            rows_out = int(counts.get(b, 0))
-            rows_out_total += rows_out
-            write_manifest(
-                out_dir,
-                BucketManifest(
-                    bucket=b,
-                    input_rows=n,
-                    input_hash=h,
-                    rows_out=rows_out,
-                    extractor_version=EXTRACTOR_VERSION,
-                ),
-                spark,
-            )
-    return {"processed": pending, "skipped": skipped, "rows_out": rows_out_total}
+            committed[b] = (*fps[b], int(counts.get(b, 0)))
+    if pending or vanished:
+        publish_json_atomic(
+            spark,
+            manifest,
+            {
+                "extractor_version": EXTRACTOR_VERSION,
+                "buckets": {str(b): dict(zip(_ENTRY, committed[b])) for b in sorted(committed)},
+            },
+        )
+    # data deletes AFTER the publish: a crash between the two leaves a
+    # partition no entry covers, so a bucket that returns is recomputed,
+    # never skipped over deleted data
+    for b in vanished:
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(os.path.join(out_dir, "data", f"bucket={b}")),
+            True,
+        )
+    return {
+        "processed": pending,
+        "skipped": skipped,
+        "rows_out": sum(committed[b][2] for b in pending),
+    }

@@ -199,12 +199,11 @@ def _map_batches(markdown: bool = True, dedup_markdown: bool = False):
 
 def _scan_file_sizes(df) -> list[int] | None:
     """Byte sizes of the scan's input files, via ONE Hadoop ``listStatus``
-    per parent directory (the checkpoint.py manifest pattern — never a
-    per-file RPC). Returns None when the plan exposes no input files
-    (in-memory DataFrames, views) or the listing would be large
-    (>2048 files — only reachable below the 256-split widening cap when
-    many tiny files pack per split, where skew is impossible anyway);
-    callers treat None as "assume balanced"."""
+    per parent directory (never a per-file RPC). Returns None when the plan
+    exposes no input files (in-memory DataFrames, views) or the listing
+    would be large (>2048 files — only reachable below the 256-split
+    widening cap when many tiny files pack per split, where skew is
+    impossible anyway); callers treat None as "assume balanced"."""
     try:
         files = df.inputFiles()
     except Exception:

@@ -119,7 +119,7 @@ def _write_summary(spark, out_dir: str, counts: dict) -> None:
     """Persist the run's counts beside its corpus (atomic tmp+rename,
     through the Hadoop filesystem so any ``--out`` URI works) — the
     job-level lineage artifact, the corpus counterpart of extract_job's
-    per-bucket manifests. A consumer auditing a corpus directory reads
+    ``_manifest.json``. A consumer auditing a corpus directory reads
     the funnel that produced it without the driver log."""
     from sparkocr.checkpoint import publish_json_atomic
 

@@ -6,7 +6,8 @@ Usage:
         [--buckets 32] [--docs] [--force] [--master local[32]]
 
 Stage 1: resumable per-bucket extraction (sparkocr.checkpoint) — scan →
-MapInPandas extractor → bucket-partitioned parquet + lineage manifests.
+MapInPandas extractor → bucket-partitioned parquet + ``out/_manifest.json``
+(one lineage entry per bucket).
 Stage 2 (--docs): per-conversation assembly (pure JVM) → docs parquet.
 Prints a one-line JSON metrics summary.
 """

@@ -89,7 +89,8 @@ def pipeline_metrics(turns: DataFrame) -> DataFrame:
 
 
 def job_summary(turns: DataFrame, wall_sec: float | None = None) -> dict:
-    """Driver-side summary dict (lineage manifests embed a subset of this)."""
+    """Driver-side summary dict: row, truncation, error and char counts
+    over ``turns``, plus wall time and turns/s when ``wall_sec`` is given."""
     row = turns.agg(
         F.count(F.lit(1)).alias("rows_out"),
         F.sum(F.col("is_truncated").cast("int")).alias("n_truncated"),

@@ -4,7 +4,7 @@ Arrow on (all hot-path Python crosses as Arrow batches), AQE on (runtime
 coalesce + skew-join splitting), UTC session timezone (timestamps in
 fixtures are UTC), shuffle partitions scaled to parallelism. Iceberg is used
 when its runtime jar is present; otherwise the Parquet fallback with an
-explicit bucket column + JSON lineage manifests (sparkocr.checkpoint)
+explicit bucket column + a JSON lineage manifest (sparkocr.checkpoint)
 provides the same resume surface (SURVEY.md §7).
 """
 
@@ -19,7 +19,7 @@ from pyspark.sql import SparkSession
 def iceberg_available() -> bool:
     """True iff an iceberg-spark-runtime jar ships with this pyspark.
     Decides the table format at session build: Iceberg catalog when
-    present, plain parquet + sparkocr.checkpoint manifests otherwise."""
+    present, plain parquet + the sparkocr.checkpoint manifest otherwise."""
     try:
         import pyspark
 
@@ -96,7 +96,7 @@ def build_session(
     if iceberg_available():
         # local hadoop catalog `ice`; jobs address tables as ice.db.table.
         # Absent the jar (this sandbox), the parquet fallback with a bucket
-        # column + JSON lineage manifests provides the same resume surface.
+        # column + a JSON lineage manifest provides the same resume surface.
         wh = os.environ.get("SPARKOCR_ICEBERG_WAREHOUSE", "/tmp/sparkocr_warehouse")
         b = (
             b.config(

@@ -12,7 +12,7 @@ Shape: file-source ``readStream`` (fixed transcripts schema, required by
 streaming sources) → ``extract_turns`` (same hot path as batch; stateless,
 so no watermark needed) → parquet sink with a checkpoint location. The
 sink checkpoint gives exactly-once file-source progress tracking — the
-streaming counterpart of the batch job's per-bucket lineage manifests
+streaming counterpart of the batch job's lineage manifest
 (sparkocr.checkpoint). Doc assembly stays a downstream batch job over the
 sink table: a conversation only has a final assembly once its turns stop
 arriving, which is a business rule (session timeout), not a fixed

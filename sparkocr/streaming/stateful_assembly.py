@@ -5,7 +5,7 @@ chars out, seen turn_idx ranges) across micro-batches, so a turn replayed
 by an at-least-once upstream (the common failure mode of a 10^12-turn
 feed) is counted once, and each micro-batch emits the conversation's
 updated progress row. This is the streaming counterpart of the batch
-job's per-bucket manifests: batch resume dedups at file/bucket
+job's lineage manifest: batch resume dedups at file/bucket
 granularity, the stateful operator dedups at (conv_id, turn_idx)
 granularity inside the stream.
 

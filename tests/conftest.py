@@ -37,3 +37,22 @@ def tiny_transcripts(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("data") / "transcripts_tiny.parquet")
     write_transcripts(path, "tiny")
     return path
+
+
+@pytest.fixture
+def tiny_transcripts_without(spark, tiny_transcripts, tmp_path):
+    """Factory: the tiny transcripts minus every conversation whose
+    extract-job bucket (of ``n_buckets``) is in ``buckets``, as a new
+    parquet path."""
+    from pyspark.sql import functions as F
+
+    from sparkocr.checkpoint import with_bucket
+
+    def write(buckets, n_buckets=8):
+        path = str(tmp_path / f"without_{'_'.join(map(str, sorted(buckets)))}.parquet")
+        with_bucket(spark.read.parquet(tiny_transcripts), n_buckets).filter(
+            ~F.col("bucket").isin(list(buckets))
+        ).drop("bucket").write.parquet(path)
+        return path
+
+    return write

@@ -834,3 +834,189 @@ def test_near_dups_cap_counts_valid_rows_only(spark, emb, tmp_path):
         assert (12, 5_100_000, 1.0) in got  # the twin survives the cap
     finally:
         caching.release_all()
+
+
+# ---- crash matrix: every write of append_to_index and compact_index ------
+
+#: the delta parquet write, then the commit marker's publish (tmp create,
+#: final delete, rename)
+_APPEND_WRITES = 4
+#: the side-copy sweep, the side-copy write, the pending marker's publish
+#: (3), the swap (meta delete, vectors delete, rename), the folded
+#: append's drop (marker, delta), the meta write, the pending delete
+_COMPACT_WRITES = 12
+
+
+class _WriteCountingFs:
+    """A Hadoop FileSystem whose mutating calls report to ``hit`` first."""
+
+    def __init__(self, fs, hit):
+        self._fs, self._hit = fs, hit
+
+    def __getattr__(self, name):
+        attr = getattr(self._fs, name)
+        if name not in ("create", "delete", "rename"):
+            return attr
+
+        def call(*a):
+            self._hit(f"{name} {a[0]}")
+            return attr(*a)
+
+        return call
+
+
+def _fail_kth_write(monkeypatch, k):
+    """Make the k-th write of the ANN index code die before it runs:
+    parquet writes and the FileSystem create/delete/rename calls, in call
+    order (``k=None`` never dies). Returns the writes that ran."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from sparkocr import checkpoint
+
+    ran = []
+
+    def hit(what):
+        if len(ran) + 1 == k:
+            raise RuntimeError(f"simulated death at write {k}: {what}")
+        ran.append(what)
+
+    real_fs, real_parquet = checkpoint._fs, DataFrameWriter.parquet
+
+    def fs(spark, path_str):
+        jvm, inner, jpath = real_fs(spark, path_str)
+        return jvm, _WriteCountingFs(inner, hit), jpath
+
+    def parquet(self, path, *a, **kw):
+        hit(f"parquet {path}")
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(checkpoint, "_fs", fs)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return ran
+
+
+def _view(spark, path):
+    """Every vec_id a probe sees (sorted, duplicates kept), or None while
+    the index refuses probes mid-compact — which must then point the
+    operator at the resume."""
+    from pyspark.sql import functions as F
+
+    from sparkocr.pipeline import ann_index
+
+    try:
+        ann_index._read_meta(spark, path)
+    except ValueError as e:
+        assert "compact_index" in str(e), e
+        return None
+    scan = ann_index._scan_vectors(spark, path, F.lit(True))
+    return sorted(r.vec_id for r in scan.select("vec_id").collect())
+
+
+def _tree(path):
+    """Every path under ``path`` except part files (per-write UUIDs)."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, dirs, files in os.walk(path)
+        for n in dirs + files
+        if "part-" not in n
+    )
+
+
+@pytest.fixture(scope="module")
+def crash_emb(emb):
+    """48 vectors: every sig= directory is a file write, and the matrix
+    runs each write sequence 17 times."""
+    return emb.filter("vec_id < 48")
+
+
+@pytest.fixture(scope="module")
+def crash_index(spark, crash_emb, tmp_path_factory):
+    """An LSH index over the even vec_ids; a copy with the odd ones
+    appended as ``inc-a``; the tree a clean compact of that copy leaves."""
+    import shutil
+
+    from sparkocr.pipeline.ann_index import append_to_index, build_lsh_index, compact_index
+
+    root = tmp_path_factory.mktemp("ann_crash")
+    base, appended, compacted = (str(root / n) for n in ("base", "appended", "compacted"))
+    build_lsh_index(crash_emb.filter("vec_id % 2 = 0"), base)
+    shutil.copytree(base, appended)
+    append_to_index(crash_emb.filter("vec_id % 2 = 1"), appended, "inc-a")
+    shutil.copytree(appended, compacted)
+    compact_index(spark, compacted)
+    return base, appended, _tree(compacted)
+
+
+def test_crash_matrix_covers_every_write(spark, crash_emb, crash_index, tmp_path, monkeypatch):
+    import shutil
+
+    from sparkocr.pipeline.ann_index import append_to_index, compact_index
+
+    path = str(tmp_path / "idx")
+    shutil.copytree(crash_index[0], path)
+    ran = _fail_kth_write(monkeypatch, None)
+    append_to_index(crash_emb.filter("vec_id % 2 = 1"), path, "inc-a")
+    assert len(ran) == _APPEND_WRITES, ran
+    ran.clear()
+    compact_index(spark, path)
+    assert len(ran) == _COMPACT_WRITES, ran
+
+
+@pytest.mark.parametrize("k", range(1, _APPEND_WRITES + 1))
+def test_crashed_append_keeps_old_view_and_retry_lands_once(
+    spark, crash_emb, crash_index, tmp_path, monkeypatch, k
+):
+    """A death at the k-th write of an append leaves probes on the old
+    committed view; a same-id retry lands the rows once, and a second
+    retry is a skipped no-op."""
+    import shutil
+
+    from sparkocr.pipeline.ann_index import _committed_appends, append_to_index
+
+    base, appended, _ = crash_index
+    path = str(tmp_path / "idx")
+    shutil.copytree(base, path)
+    rest = crash_emb.filter("vec_id % 2 = 1")
+    before = _view(spark, path)
+    _fail_kth_write(monkeypatch, k)
+    with pytest.raises(RuntimeError, match="simulated"):
+        append_to_index(rest, path, "inc-a")
+    monkeypatch.undo()
+    assert _view(spark, path) == before
+
+    r = append_to_index(rest, path, "inc-a")
+    assert not r["skipped"] and r["rows"] == rest.count()
+    assert _view(spark, path) == _view(spark, appended)
+    assert append_to_index(rest, path, "inc-a")["skipped"]
+    assert [mk["append_id"] for mk in _committed_appends(spark, path)] == ["inc-a"]
+
+
+@pytest.mark.parametrize("k", range(1, _COMPACT_WRITES + 1))
+def test_crashed_compact_keeps_view_and_resume_lands_once(
+    spark, crash_index, tmp_path, monkeypatch, k
+):
+    """A death at the k-th write of a compact leaves probes on the same
+    rows (compaction moves rows, never changes them) or refusing with the
+    resume instruction, never a mix; the next compact_index call finishes
+    the fold once and leaves exactly what a clean compact leaves."""
+    import shutil
+
+    from sparkocr.pipeline.ann_index import _committed_appends, compact_index
+
+    _, appended, clean_tree = crash_index
+    path = str(tmp_path / "idx")
+    shutil.copytree(appended, path)
+    want = _view(spark, path)
+    _fail_kth_write(monkeypatch, k)
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_index(spark, path)
+    monkeypatch.undo()
+    assert _view(spark, path) in (want, None)
+
+    compact_index(spark, path)
+    assert _view(spark, path) == want
+    assert _committed_appends(spark, path) == []
+    assert _tree(path) == clean_tree
+    assert compact_index(spark, path) == {"compacted": 0, "rows": None}

@@ -8,11 +8,8 @@ import os
 
 import pytest
 
-from sparkocr.checkpoint import (
-    _manifest_path,
-    read_manifest,
-    run_extract_job,
-)
+from sparkocr.checkpoint import run_extract_job
+from sparkocr.extract.dispatch import EXTRACTOR_VERSION
 
 N_BUCKETS = 8
 
@@ -22,6 +19,18 @@ def first_run(spark, tiny_transcripts, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ckpt") / "out")
     result = run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
     return out, result
+
+
+def _manifest(out):
+    with open(os.path.join(out, "_manifest.json")) as f:
+        return json.load(f)
+
+
+def _edit_manifest(out, edit):
+    m = _manifest(out)
+    edit(m)
+    with open(os.path.join(out, "_manifest.json"), "w") as f:
+        json.dump(m, f)
 
 
 def _table(spark, out):
@@ -36,10 +45,13 @@ def test_first_run_processes_all(first_run):
     out, result = first_run
     assert result["skipped"] == []
     assert len(result["processed"]) >= 1
-    for b in result["processed"]:
-        m = read_manifest(out, b)
-        assert m is not None and m.status == "complete"
-        assert m.rows_out > 0 or m.input_rows >= 0
+    m = _manifest(out)
+    assert m["extractor_version"] == EXTRACTOR_VERSION
+    assert sorted(map(int, m["buckets"])) == sorted(result["processed"])
+    for e in m["buckets"].values():
+        assert set(e) == {"input_rows", "input_hash", "rows_out"}
+        assert e["rows_out"] == e["input_rows"] > 0  # one turn out per turn in
+    assert sum(e["rows_out"] for e in m["buckets"].values()) == result["rows_out"]
 
 
 def test_noop_rerun_skips_everything(spark, tiny_transcripts, first_run):
@@ -52,10 +64,9 @@ def test_noop_rerun_skips_everything(spark, tiny_transcripts, first_run):
 def test_resume_recomputes_only_invalidated(spark, tiny_transcripts, first_run):
     out, r1 = first_run
     before = _table(spark, out)
-    # simulate a kill after some buckets: drop two manifests
+    # simulate a lost commit for some buckets: drop two entries
     victims = sorted(r1["processed"])[:2]
-    for b in victims:
-        os.remove(_manifest_path(out, b))
+    _edit_manifest(out, lambda m: [m["buckets"].pop(str(b)) for b in victims])
     r2 = run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
     assert sorted(r2["processed"]) == victims
     assert set(r2["skipped"]) == set(r1["processed"]) - set(victims)
@@ -64,13 +75,10 @@ def test_resume_recomputes_only_invalidated(spark, tiny_transcripts, first_run):
 
 def test_version_bump_invalidates(spark, tiny_transcripts, first_run):
     out, r1 = first_run
-    b = sorted(r1["processed"])[0]
-    p = _manifest_path(out, b)
-    m = json.load(open(p))
-    m["extractor_version"] = "0-stale"
-    json.dump(m, open(p, "w"))
+    _edit_manifest(out, lambda m: m.update(extractor_version="0-stale"))
     r2 = run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
-    assert r2["processed"] == [b]
+    assert r2["processed"] == sorted(r1["processed"]) and r2["skipped"] == []
+    assert _manifest(out)["extractor_version"] == EXTRACTOR_VERSION
 
 
 def test_input_change_invalidates(spark, tmp_path, first_run):
@@ -91,40 +99,6 @@ def test_input_change_invalidates(spark, tmp_path, first_run):
     assert len(r2["processed"]) < len(r1["processed"])  # most buckets untouched
 
 
-def test_orphaned_tmp_manifests_swept(spark, tiny_transcripts, first_run):
-    # a crash inside the publish window leaves bucket=N.json.tmp; for a
-    # bucket no longer in the input it must be swept, not accumulate
-    out, _ = first_run
-    orphan = os.path.join(out, "_manifests", "bucket=9999.json.tmp")
-    with open(orphan, "w") as f:
-        f.write("{}")
-    run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
-    assert not os.path.exists(orphan)
-
-
-def test_stray_manifest_names_are_skipped(spark, tiny_transcripts, first_run):
-    # the manifest-directory glob (bucket=*.json*) also matches editor
-    # backups / partial-upload suffixes; they must be skipped, not abort
-    # the job with ValueError on int()
-    out, r1 = first_run
-    mdir = os.path.join(out, "_manifests")
-    strays = ["bucket=3.json.bak", "bucket=x.json", "bucket=2.json.tmp.old"]
-    for name in strays:
-        with open(os.path.join(mdir, name), "w") as f:
-            f.write("junk")
-    try:
-        r2 = run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
-        assert r2["processed"] == []
-        assert sorted(r2["skipped"]) == sorted(r1["processed"])
-        for name in strays:  # left alone, neither parsed nor deleted
-            assert os.path.exists(os.path.join(mdir, name))
-    finally:
-        for name in strays:
-            p = os.path.join(mdir, name)
-            if os.path.exists(p):
-                os.remove(p)
-
-
 def test_overwrite_mode_restored_after_job(spark, tiny_transcripts, first_run):
     # the job needs dynamic partition overwrite internally but must not
     # leave it set on the shared session (the caller's own later
@@ -142,8 +116,8 @@ def test_manifest_io_leaves_no_crc_sidecars(first_run):
     # wrapper (which would both litter .crc files and, if checksums were
     # instead globally disabled, kill corruption detection session-wide)
     out, _ = first_run
-    mdir = os.path.join(out, "_manifests")
-    assert not [f for f in os.listdir(mdir) if f.endswith(".crc")]
+    assert os.path.exists(os.path.join(out, "_manifest.json"))
+    assert not [f for f in os.listdir(out) if f.endswith(".crc")]
 
 
 def test_fingerprint_detects_even_multiplicity_change(spark):
@@ -167,7 +141,7 @@ def test_fingerprint_detects_even_multiplicity_change(spark):
 
 def test_empty_input_refuses_to_wipe_completed_output(spark, tiny_transcripts, tmp_path):
     """All buckets 'vanishing' at once (empty snapshot, typo'd input path)
-    must NOT silently delete every manifest and data partition of a
+    must NOT silently delete every data partition and manifest entry of a
     completed table — that is a force=True decision."""
     import os
 
@@ -185,12 +159,13 @@ def test_empty_input_refuses_to_wipe_completed_output(spark, tiny_transcripts, t
     with _pytest.raises(ValueError, match="refusing to delete"):
         run_extract_job(spark, empty, out, n_buckets=N_BUCKETS)
 
-    # orphaned publish attempts are NOT completed output: an out dir whose
-    # only manifest is a .json.tmp must not trigger the refusal
+    # a torn publish attempt is NOT completed output: an out dir whose
+    # only manifest file is a torn _manifest.json.tmp must not trigger
+    # the refusal
     out2 = str(tmp_path / "out_tmp_only")
-    os.makedirs(os.path.join(out2, "_manifests"))
-    with open(os.path.join(out2, "_manifests", "bucket=0.json.tmp"), "w") as f:
-        f.write("{}")
+    os.makedirs(out2)
+    with open(os.path.join(out2, "_manifest.json.tmp"), "w") as f:
+        f.write('{"extractor_version": ')
     r0 = run_extract_job(spark, empty, out2, n_buckets=N_BUCKETS)
     assert not r0["processed"] and not r0["skipped"]
     # nothing was touched: a rerun with the real input skips every bucket
@@ -200,6 +175,38 @@ def test_empty_input_refuses_to_wipe_completed_output(spark, tiny_transcripts, t
     # the explicit decision works and empties the table
     r2 = run_extract_job(spark, empty, out, n_buckets=N_BUCKETS, force=True)
     assert r2["rows_out"] == 0
+    assert _manifest(out)["buckets"] == {}
     assert not os.path.exists(os.path.join(out, "data")) or not [
         p for p in os.listdir(os.path.join(out, "data")) if p.startswith("bucket=")
     ]
+
+
+def test_one_manifest_publish_per_run(
+    spark, tiny_transcripts, tiny_transcripts_without, tmp_path, monkeypatch
+):
+    """Manifest traffic: a run publishes one file, and only when its
+    commit changes the manifest — not one file per bucket."""
+    from sparkocr import checkpoint
+
+    out = str(tmp_path / "out")
+    real = checkpoint.publish_json_atomic
+    calls = []
+
+    def counting(*a):
+        calls.append(a[1])
+        real(*a)
+
+    monkeypatch.setattr(checkpoint, "publish_json_atomic", counting)
+
+    def publishes(input_path):
+        calls.clear()
+        return run_extract_job(spark, input_path, out, n_buckets=N_BUCKETS), len(calls)
+
+    r, n = publishes(tiny_transcripts)
+    assert len(r["processed"]) == N_BUCKETS and n == 1
+    r, n = publishes(tiny_transcripts)
+    assert r["processed"] == [] and n == 0
+    # one bucket vanished, nothing pending: the pruned manifest only
+    r, n = publishes(tiny_transcripts_without([0]))
+    assert r["processed"] == [] and len(r["skipped"]) == N_BUCKETS - 1 and n == 1
+    assert set(calls) == {os.path.join(out, "_manifest.json")}
