@@ -16,7 +16,15 @@ plain Parquet (SURVEY.md §7, "Iceberg absence" risk):
   manifest list it is rewritten whole, at most once per run;
 - on start, buckets whose entry matches the current fingerprint under the
   current extractor version are skipped; only pending buckets are
-  filtered, extracted, and (dynamically) overwritten.
+  filtered, extracted, and (dynamically) overwritten;
+- each bucket is written by one task, so a run leaves one part file per
+  bucket it wrote. ``partitionBy`` alone writes one file per (map task,
+  bucket) pair, and the extract map stage runs as many tasks as the scan
+  has splits; the ``repartition("bucket")`` exchange after the extractor
+  (AQE coalesces it to the data) trades one shuffle of the extracted rows
+  for tasks-times-fewer files to create, chmod, read back and assemble;
+- a bucket partition on disk with no input rows is deleted, whether or not
+  the manifest still has its entry.
 
 All fingerprinting is JVM expressions; no data leaves the executors except
 the per-bucket aggregate rows. Manifest IO goes through the Hadoop
@@ -34,12 +42,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkocr.extract.dispatch import EXTRACTOR_VERSION, extract_turns
 
 _ENTRY = ("input_rows", "input_hash", "rows_out")
+_PARTITION_RE = re.compile(r"bucket=(\d+)")
 
 
 def _fs(spark: SparkSession, path_str: str):
@@ -150,6 +160,17 @@ def _read_manifest(jvm, fs, path_str: str) -> tuple[str | None, dict[int, tuple]
         return None, {}
 
 
+def _bucket_partitions(jvm, fs, data: str) -> set[int]:
+    """The N of every ``bucket=N`` directory under ``data`` (none when
+    ``data`` does not exist yet)."""
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(os.path.join(data, "bucket=*"))) or []
+    return {
+        int(m.group(1))
+        for st in found
+        if st.isDirectory() and (m := _PARTITION_RE.fullmatch(st.getPath().getName()))
+    }
+
+
 def run_extract_job(
     spark: SparkSession,
     input_path: str,
@@ -165,15 +186,17 @@ def run_extract_job(
     df = spark.read.parquet(input_path)
     fps = input_fingerprints(df, n_buckets)
     manifest = os.path.join(out_dir, "_manifest.json")
+    data = os.path.join(out_dir, "data")
     jvm, fs, _ = _fs(spark, manifest)
     version, entries = _read_manifest(jvm, fs, manifest)
+    on_disk = _bucket_partitions(jvm, fs, data)
     # blast-radius guard: an EMPTY input (transient producer bug, empty
     # snapshot, typo'd path resolving to a _SUCCESS-only dir) makes every
     # bucket look "vanished" — without this check the job would delete
     # every data partition of a completed table before returning
     # {"processed": [], "skipped": []}. Deleting the whole output is only
     # valid as an EXPLICIT decision (force=True).
-    if not fps and not force and entries:
+    if not fps and not force and (entries or on_disk):
         raise ValueError(
             f"input {input_path} resolves to zero rows but completed "
             f"buckets exist at {out_dir} — refusing to delete them; pass "
@@ -186,26 +209,30 @@ def run_extract_job(
     ]
     pending = sorted(set(fps) - set(skipped))
     # a bucket VANISHED from the input (all rows deleted) is neither
-    # pending nor skipped, and dynamic overwrite never touches its partition
-    vanished = sorted(set(entries) - set(fps))
+    # pending nor skipped, and dynamic overwrite never touches its
+    # partition. The listing also finds partitions no entry covers: a run
+    # that died between its pruned publish and the data delete left one
+    vanished = sorted((set(entries) | on_disk) - set(fps))
     committed = {b: entries[b] for b in skipped}
     if pending:
         src = with_bucket(df, n_buckets).filter(F.col("bucket").isin(pending))
         turns = extract_turns(src.select("conv_id", "turn_idx", "role", "text", "tool"))
         turns = with_bucket(turns, n_buckets)
-        # dynamic partition overwrite as a WRITE-SCOPED option, not a
+        # repartition AFTER extract_turns: the kernel stays in the
+        # scan-parallel map stage, and each bucket is written by one task.
+        # Dynamic partition overwrite as a WRITE-SCOPED option, not a
         # session conf: a set/restore around the job would race a second
         # run_extract_job on the same session (thread B's still-pending
         # write flips back to STATIC when thread A's finally fires —
         # static overwrite then deletes every bucket not in B's pending
         # set), and would silently retarget the caller's own concurrent
         # overwrite+partitionBy writes
-        turns.write.mode("overwrite").option(
+        turns.repartition("bucket").write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(os.path.join(out_dir, "data"))
+        ).partitionBy("bucket").parquet(data)
         counts = {
             r["bucket"]: r["n"]
-            for r in spark.read.parquet(os.path.join(out_dir, "data"))
+            for r in spark.read.parquet(data)
             .filter(F.col("bucket").isin(pending))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -226,10 +253,7 @@ def run_extract_job(
     # partition no entry covers, so a bucket that returns is recomputed,
     # never skipped over deleted data
     for b in vanished:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(os.path.join(out_dir, "data", f"bucket={b}")),
-            True,
-        )
+        fs.delete(jvm.org.apache.hadoop.fs.Path(os.path.join(data, f"bucket={b}")), True)
     return {
         "processed": pending,
         "skipped": skipped,

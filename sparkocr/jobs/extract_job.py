@@ -6,8 +6,9 @@ Usage:
         [--buckets 32] [--docs] [--force] [--master local[32]]
 
 Stage 1: resumable per-bucket extraction (sparkocr.checkpoint) — scan →
-MapInPandas extractor → bucket-partitioned parquet + ``out/_manifest.json``
-(one lineage entry per bucket).
+MapInPandas extractor → exchange on bucket → bucket-partitioned parquet,
+one file per bucket, + ``out/_manifest.json`` (one lineage entry per
+bucket).
 Stage 2 (--docs): per-conversation assembly (pure JVM) → docs parquet.
 Prints a one-line JSON metrics summary.
 """

@@ -182,3 +182,28 @@ def test_vanished_bucket_crash_before_data_delete_recomputes_on_return(
     r = run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
     assert r["processed"] == [victim]
     assert _state(spark, out) == clean
+
+
+def test_vanished_bucket_crash_before_data_delete_deleted_while_absent(
+    spark, tiny_transcripts, tiny_transcripts_without, tmp_path, monkeypatch
+):
+    """The same crash, but the bucket stays absent on the rerun. No
+    manifest entry names it any more and it has no input rows; the data
+    listing still finds its partition, so the rerun deletes it and ends
+    equal to a clean run over the input without it."""
+    victim = 3
+    without = tiny_transcripts_without([victim])
+    fresh = str(tmp_path / "fresh")
+    run_extract_job(spark, without, fresh, n_buckets=N_BUCKETS)
+    out = str(tmp_path / "out")
+    run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
+    monkeypatch.setattr(checkpoint, "publish_json_atomic", _crashing_publish("published"))
+    with pytest.raises(Crash):
+        run_extract_job(spark, without, out, n_buckets=N_BUCKETS)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(out, "data", f"bucket={victim}"))
+
+    r = run_extract_job(spark, without, out, n_buckets=N_BUCKETS)
+    assert r["processed"] == []
+    assert not os.path.exists(os.path.join(out, "data", f"bucket={victim}"))
+    assert _state(spark, out) == _state(spark, fresh)

@@ -210,3 +210,81 @@ def test_one_manifest_publish_per_run(
     r, n = publishes(tiny_transcripts_without([0]))
     assert r["processed"] == [] and len(r["skipped"]) == N_BUCKETS - 1 and n == 1
     assert set(calls) == {os.path.join(out, "_manifest.json")}
+
+
+@pytest.fixture(scope="module")
+def fresh_run(spark, tiny_transcripts, tmp_path_factory):
+    """(out dir, data rows in key order, parsed manifest) of one run into
+    an empty out dir at the session's default confs."""
+    out = str(tmp_path_factory.mktemp("fresh") / "out")
+    run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
+    return out, _rows(spark, out), _manifest(out)
+
+
+def _rows(spark, out):
+    return spark.read.parquet(os.path.join(out, "data")).orderBy("conv_id", "turn_idx").collect()
+
+
+def _part_files(out):
+    """{bucket partition dir name: its part files}."""
+    data = os.path.join(out, "data")
+    return {
+        d: [f for f in os.listdir(os.path.join(data, d)) if f.startswith("part-")]
+        for d in os.listdir(data)
+        if d.startswith("bucket=")
+    }
+
+
+def test_one_part_file_per_bucket(fresh_run):
+    """Each bucket is written by one task: one file per bucket, not one
+    per (map task, bucket) pair."""
+    out, _, _ = fresh_run
+    files = _part_files(out)
+    assert len(files) == N_BUCKETS
+    assert {d: len(f) for d, f in files.items()} == {d: 1 for d in files}
+
+
+@pytest.mark.parametrize("coalesce", ["true", "false"])
+@pytest.mark.parametrize("shuffle_partitions", ["1", "3", "200"])
+def test_output_ignores_physical_layout(
+    spark, tiny_transcripts, tmp_path, fresh_run, shuffle_partitions, coalesce
+):
+    """The write's exchange takes its partition count from the session:
+    the rows and the manifest must not depend on it."""
+    confs = {
+        "spark.sql.shuffle.partitions": shuffle_partitions,
+        "spark.sql.adaptive.coalescePartitions.enabled": coalesce,
+    }
+    before = {k: spark.conf.get(k) for k in confs}
+    out = str(tmp_path / "out")
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    _, rows, manifest = fresh_run
+    assert _rows(spark, out) == rows
+    assert _manifest(out) == manifest
+    assert all(len(f) == 1 for f in _part_files(out).values())
+
+
+def test_empty_input_refuses_to_wipe_partitions_without_manifest(
+    spark, tiny_transcripts, tmp_path
+):
+    """The refusal also covers bucket partitions no manifest names: with
+    the manifest lost, an empty input must not delete the data."""
+    import pyarrow.parquet as pq
+
+    from sparkocr import datagen
+
+    out = str(tmp_path / "out")
+    run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
+    os.remove(os.path.join(out, "_manifest.json"))
+    before = _part_files(out)
+    empty = str(tmp_path / "empty.parquet")
+    pq.write_table(datagen.SCHEMA.empty_table(), empty)
+    with pytest.raises(ValueError, match="refusing to delete"):
+        run_extract_job(spark, empty, out, n_buckets=N_BUCKETS)
+    assert _part_files(out) == before
