@@ -76,8 +76,8 @@ def read_json_fs(jvm, fs, path_str: str) -> dict:
     """Read and parse one small JSON file through an already-resolved
     FileSystem. LOUD: missing file / IO error / bad JSON all raise —
     callers that want swallow-to-None semantics (manifest resume) wrap it.
-    Shared by the manifest reader here and the ANN index's commit/pending
-    markers (one copy of the bulk-copy stream discipline to maintain)."""
+    Shared by the manifest reader here and the ANN index's versioned
+    manifests (one copy of the bulk-copy stream discipline to maintain)."""
     p = jvm.org.apache.hadoop.fs.Path(path_str)
     stream = fs.open(p)
     try:

@@ -25,6 +25,7 @@ per-payload work is the same string algebra the reference runs per page.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import Literal
 
 import pandas as pd
 
@@ -241,7 +242,7 @@ def _scan_file_sizes(df) -> list[int] | None:
 
 
 def extract_turns(
-    transcripts_df, min_parallelism: int | str = "auto", markdown: bool = True
+    transcripts_df, min_parallelism: Literal["auto", 0] = "auto", markdown: bool = True
 ):
     """transcripts DataFrame → per-turn extraction DataFrame.
 
@@ -261,7 +262,8 @@ def extract_turns(
     barely enough (< 2× cores) but the input files are byte-skewed, where
     the fattest split would otherwise serialize the stage. The shuffled
     bytes are the raw payload of a *small* input; at 100 TB the input has
-    thousands of splits and this is a no-op.
+    thousands of splits and this is a no-op. ``min_parallelism=0`` never
+    repartitions: a streaming micro-batch's width is its file count.
     """
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
     src = transcripts_df.select(*cols)
@@ -293,8 +295,8 @@ def extract_turns(
                 widen = bool(sizes) and max(sizes) * splits > 2 * sum(sizes)
             if widen:
                 src = src.repartition(min(cores * 2, 256))
-    elif min_parallelism and src.rdd.getNumPartitions() < int(min_parallelism):
-        src = src.repartition(int(min_parallelism))
+    elif min_parallelism != 0:
+        raise ValueError(f"min_parallelism must be 'auto' or 0, not {min_parallelism!r}")
     out = src.mapInPandas(
         _map_batches(markdown, dedup_markdown=True), schema.TURNS_OUT
     )

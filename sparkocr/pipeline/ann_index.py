@@ -17,26 +17,34 @@ probed directories — n_probe/n_cells of the data for IVF, the ≤hamming
 signature ball for LSH — instead of scanning everything and filtering.
 
 Layout under ``path``:
-    vectors/   parquet, partitioned by sig= / cell=
-    meta/      single-row parquet: kind, dim, n_planes|n_cells, seed
-    centroids/ (IVF only) parquet: cell_id, centroid array<double>
-    deltas/    incremental appends (``append_to_index``): one
-               ``deltas/<append_id>/`` parquet dataset per committed
-               append, same partition layout as vectors/, plus a JSON
-               commit marker per append under ``deltas/_commits/``.
-               Probes union the base with every COMMITTED delta (each
-               scan still partition-pruned); ``compact_index`` folds the
-               deltas back into vectors/. An append that dies mid-write
-               leaves no marker → invisible to probes, and retrying the
-               same ``append_id`` overwrites the partial files
-               (idempotent, mirroring the extract job's bucket resume).
+    _index/<v>.json  the versioned manifest: kind, dim, n_planes+seed
+                     (LSH) or n_cells+centroids (IVF), the current
+                     ``generation``, and the committed ``appends`` with
+                     their row counts. Readers take the highest <v>.
+    g<N>/vectors     parquet, partitioned by sig= / cell=
+    g<N>/centroids   (IVF only) parquet: cell_id, centroid array<double>
+    g<N>/deltas/<append_id>/
+                     one ``append_to_index`` increment, same partition
+                     layout as vectors/
+
+Generations are immutable: a build writes a new ``g<N>``, an append adds
+a delta dataset, and ``compact_index`` folds base + deltas into a new
+``g<N>``. Each then commits by renaming a tmp file to the next version
+name, which must not exist yet — that rename is the index's only commit
+point, so a writer that dies before it leaves the previous version (and
+its files) probe-able, and a writer that raced another one refuses to
+publish. After publishing, builds and compactions delete what the new
+version no longer names; a dead append's unlisted delta is reclaimed by
+``vacuum_index``. Probes union the base with every listed non-empty delta
+(each scan still partition-pruned).
 
 Everything needed to probe is read back from the index (planes are re-seeded
-from meta, centroids from their table), so a probe never needs the original
-table — and two clusters probing the same index get identical plans.
-Determinism: planes are seeded; centroids come from the passed trainer
-(``ivf_centroids_kmeans`` by default — hash-ordered sample, fixed Lloyd
-iterations).
+from the manifest, centroids from their table), so a probe never needs the
+original table — and two clusters probing the same index get identical
+plans. Determinism: planes are seeded; centroids come from the passed
+trainer (``ivf_centroids_kmeans`` by default — hash-ordered sample, fixed
+Lloyd iterations); version and generation numbers follow from the versions
+already published.
 
 The writers ``repartition`` on the partition column first, so each
 signature/cell directory holds one file per shuffle partition that owns it
@@ -52,7 +60,9 @@ from itertools import combinations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
+from sparkocr import checkpoint
 from sparkocr.pipeline.similarity import (
     N_PLANES,
     _SEED,
@@ -66,102 +76,133 @@ from sparkocr.pipeline.similarity import (
 )
 from sparkocr.storage import APPEND_ID_RE
 
-
-def _write_meta(spark: SparkSession, path: str, **kv) -> None:
-    spark.createDataFrame([tuple(kv.values())], list(kv.keys())).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
+_VERSION_RE = re.compile(r"^(\d+)\.json$")
 
 
-def _invalidate_meta(spark: SparkSession, path: str) -> None:
-    """Delete meta/ BEFORE a rebuild touches vectors/. meta/ is written
-    last, so a complete meta marks a complete index: without this, a
-    rebuild that dies after overwriting vectors leaves the OLD meta (old
-    n_planes/seed) beside NEW vectors — a probe-able inconsistent index
-    that silently returns near-zero recall (probe signatures computed in
-    a different space than the stored partitions)."""
-    from sparkocr.checkpoint import _fs
-
-    _, fs, jpath = _fs(spark, f"{path}/meta")
-    fs.delete(jpath, True)  # recursive; False (absent) is fine
+def _manifest_path(path: str, version: int) -> str:
+    return f"{path}/_index/{version}.json"
 
 
-def _read_meta(spark: SparkSession, path: str):
-    try:
-        return spark.read.parquet(f"{path}/meta").first()
-    except Exception as e:
-        from sparkocr.checkpoint import _fs
+def _gen(path: str, m: dict) -> str:
+    return f"{path}/g{m['generation']}"
 
-        # a compact that crashed inside its swap window leaves meta/
-        # deleted but a pending marker behind — that state resumes in
-        # seconds; telling the operator to "rebuild the index" here would
-        # cost a full re-shuffle of the corpus (and the rebuild's delta
-        # hygiene would delete the recoverable pending state)
-        try:
-            _, fs, ppath = _fs(spark, f"{path}/compact_pending.json")
-            pending = fs.exists(ppath)
-        except Exception:
-            pending = False
-        if pending:
-            raise ValueError(
-                f"ANN index at {path} is mid-compact (a compact crashed "
-                "inside its swap window): call compact_index(spark, path) "
-                "to resume it — do NOT rebuild"
-            ) from e
+
+def _versions(spark: SparkSession, path: str) -> list[int]:
+    """Published manifest versions; other names (``.tmp`` staging) are not
+    versions."""
+    _, fs, root = checkpoint._fs(spark, f"{path}/_index")
+    if not fs.exists(root):
+        return []
+    return [
+        int(v.group(1))
+        for st in fs.listStatus(root)
+        if (v := _VERSION_RE.match(st.getPath().getName()))
+    ]
+
+
+def _read_manifest(spark: SparkSession, path: str) -> dict:
+    """The newest manifest, with its ``version``. An unparseable newest
+    manifest raises: falling back to an older version would revive
+    generations its successor's writer has already deleted."""
+    versions = _versions(spark, path)
+    if not versions:
         raise ValueError(
-            f"no complete ANN index at {path}: meta/ is missing or "
-            "unreadable — the build failed mid-way, is still in progress, "
-            "or the path is wrong; rebuild the index"
+            f"no complete ANN index at {path}: _index/ holds no manifest — "
+            "the build failed mid-way, is still in progress, or the path is "
+            "wrong; rebuild the index"
+        )
+    v = max(versions)
+    mpath = _manifest_path(path, v)
+    jvm, fs, _ = checkpoint._fs(spark, mpath)
+    try:
+        m = checkpoint.read_json_fs(jvm, fs, mpath)
+    except ValueError as e:
+        raise ValueError(
+            f"ANN index manifest {mpath} is unparseable: restore it or "
+            "rebuild the index"
         ) from e
+    return {**m, "version": v}
 
 
-def _check_vectors_nonempty(spark: SparkSession, path: str, builder: str) -> None:
+def _publish(spark: SparkSession, path: str, m: dict) -> None:
+    """Commit ``m`` as version ``m["version"]``: write a tmp file, then
+    rename it to that version's name. A version that already exists means
+    another writer committed since ``m``'s base was read — publishing would
+    drop that writer's change, so raise instead. Hadoop reports most
+    failures via a false return, so a failed rename raises too."""
+    jvm, fs, final = checkpoint._fs(spark, _manifest_path(path, m["version"]))
+    if fs.exists(final):
+        raise ValueError(
+            f"ANN index at {path} already has version {m['version']}: another "
+            "writer committed while this one ran; nothing was published — "
+            "rerun against the new version"
+        )
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{final}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(json.dumps(m).encode("utf-8")))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise IOError(f"ANN index manifest publish failed: rename {tmp}")
+
+
+def _delete(spark: SparkSession, path_str: str) -> None:
+    _, fs, jpath = checkpoint._fs(spark, path_str)
+    fs.delete(jpath, True)  # recursive; absent → false, fine
+
+
+def _collect(spark: SparkSession, path: str, m: dict) -> None:
+    """Delete what the published manifest ``m`` no longer names: older
+    versions and every entry under ``path`` except ``_index/`` and ``m``'s
+    generation. Idempotent, so a writer that died mid-way is finished by
+    the next build or compact."""
+    for v in _versions(spark, path):
+        if v < m["version"]:
+            _delete(spark, _manifest_path(path, v))
+    _, fs, root = checkpoint._fs(spark, path)
+    keep = {"_index", f"g{m['generation']}"}
+    for st in fs.listStatus(root):
+        if st.getPath().getName() not in keep:
+            fs.delete(st.getPath(), True)
+
+
+def _check_vectors_nonempty(spark: SparkSession, gen: str, builder: str) -> None:
     """partitionBy over zero rows writes only _SUCCESS: a probe would
     later die with an opaque UNABLE_TO_INFER_SCHEMA — fail loudly at
-    build time instead. Detected AFTER the write (a footer-only driver
-    read), not with a pre-write isEmpty(), which is an extra action
-    recomputing the whole upstream DAG just to improve an error message.
-    Only the schema-inference signature is relabelled as empty input; any
-    other read failure (FS, permissions, corruption) propagates as-is."""
+    build time instead, before publishing, so the previous index stays.
+    Detected AFTER the write (a footer-only driver read), not with a
+    pre-write isEmpty(), which is an extra action recomputing the whole
+    upstream DAG just to improve an error message. Only the
+    schema-inference signature is relabelled as empty input; any other
+    read failure (FS, permissions, corruption) propagates as-is."""
     try:
-        spark.read.parquet(f"{path}/vectors")
+        spark.read.parquet(f"{gen}/vectors")
     except Exception as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            _delete(spark, gen)
             raise ValueError(
                 f"{builder}: input table has no rows — nothing was indexed"
             ) from e
         raise
 
 
-_COMMIT_NAME_RE = re.compile(r"^([A-Za-z0-9][A-Za-z0-9._-]{0,127})\.json$")
-
-
-def _commit_dir(path: str) -> str:
-    return f"{path}/deltas/_commits"
-
-
-def _delta_path(path: str, append_id: str) -> str:
-    return f"{path}/deltas/{append_id}"
-
-
-def _delete_dir(spark: SparkSession, path_str: str) -> None:
-    from sparkocr.checkpoint import _fs
-
-    _, fs, jpath = _fs(spark, path_str)
-    fs.delete(jpath, True)  # recursive; absent → false, fine
+def _centroids(spark: SparkSession, path: str, m: dict) -> np.ndarray:
+    rows = spark.read.parquet(f"{path}/{m['centroids']}").orderBy("cell_id").collect()
+    return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
 
 
 def vacuum_index(
     spark: SparkSession, path: str, min_age_hours: float = 24.0
 ) -> dict:
-    """Reclaim markerless orphan delta datasets — appends that died
-    mid-write and were retried under a DIFFERENT append_id (a same-id
-    retry overwrites its own partial files; compaction only drops
-    COMMITTED ids). Orphans are invisible to probes but are full-size
-    parquet that nothing else ever deletes short of a rebuild.
+    """Reclaim orphan delta datasets of the current generation — appends
+    that died before publishing and were retried under a DIFFERENT
+    append_id (a same-id retry overwrites its own partial files). Orphans
+    are invisible to probes but are full-size parquet that nothing else
+    deletes short of the next build or compaction.
 
-    An IN-FLIGHT append is itself a markerless delta, so deleting every
-    markerless dir would destroy a concurrent append's partial write.
+    An IN-FLIGHT append's delta is unlisted too, so deleting every
+    unlisted dir would destroy a concurrent append's partial write.
     Guard: only orphans whose newest modification time (the delta dir
     and its direct partition children — a file landing in ``sig=x/``
     bumps that child dir's mtime) is older than ``min_age_hours`` are
@@ -173,19 +214,16 @@ def vacuum_index(
     Returns ``{"reclaimed": [...], "skipped_recent": [...]}``."""
     import time
 
-    from sparkocr.checkpoint import _fs
-
-    _, fs, droot = _fs(spark, f"{path}/deltas")
+    m = _read_manifest(spark, path)
+    _, fs, droot = checkpoint._fs(spark, f"{_gen(path, m)}/deltas")
     if not fs.exists(droot):
         return {"reclaimed": [], "skipped_recent": []}
-    committed = {mk["append_id"] for mk in _committed_appends(spark, path)}
+    listed = {a["append_id"] for a in m["appends"]}
     cutoff_ms = (time.time() - min_age_hours * 3600.0) * 1000.0
     reclaimed, skipped = [], []
     for st in fs.listStatus(droot):
         name = st.getPath().getName()
-        if name == "_commits" or not st.isDirectory():
-            continue
-        if name in committed:
+        if name in listed or not st.isDirectory():
             continue
         newest = max(
             [st.getModificationTime()]
@@ -199,73 +237,18 @@ def vacuum_index(
     return {"reclaimed": sorted(reclaimed), "skipped_recent": sorted(skipped)}
 
 
-def _write_json_atomic(spark: SparkSession, path_str: str, payload: dict) -> None:
-    """Module-level seam (tests crash it to simulate a death between the
-    delta write and the commit); IO itself is checkpoint.py's shared
-    tmp-write + delete/rename publish discipline."""
-    from sparkocr.checkpoint import publish_json_atomic
-
-    publish_json_atomic(spark, path_str, payload)
-
-
-def _committed_appends(spark: SparkSession, path: str) -> list[dict]:
-    """Commit markers of completed appends, sorted by append_id (stable
-    probe plans). Non-conforming names (editor backups, .tmp staging) are
-    skipped; an UNPARSEABLE marker, or one whose append_id is missing or
-    does not match its file name, raises — silently skipping it would
-    drop that append's rows from every probe, and a mismatched id would
-    make probes scan the wrong delta directory."""
-    from sparkocr.checkpoint import _fs, read_json_fs
-
-    jvm, fs, cdir = _fs(spark, _commit_dir(path))
-    if not fs.exists(cdir):
-        return []
-    out = []
-    for st in fs.listStatus(cdir):
-        name = st.getPath().getName()
-        m = _COMMIT_NAME_RE.match(name)
-        if not m:
-            continue
-        try:
-            payload = read_json_fs(jvm, fs, str(st.getPath()))
-        except ValueError as e:
-            raise ValueError(
-                f"corrupt append commit marker {st.getPath()}: the append's "
-                "rows would silently vanish from probes — delete the marker "
-                "(and its deltas/ dir) or restore it, then retry"
-            ) from e
-        if payload.get("append_id") != m.group(1):
-            raise ValueError(
-                f"append commit marker {st.getPath()} names append_id "
-                f"{payload.get('append_id')!r} but is filed as {m.group(1)!r} "
-                "— a hand-edited or misplaced marker; fix or delete it"
-            )
-        out.append(payload)
-    out.sort(key=lambda d: d["append_id"])
-    return out
-
-
-def _drop_append(spark: SparkSession, path: str, append_id: str) -> None:
-    """Remove one append's delta dataset and its commit marker — marker
-    FIRST: a crash between the two leaves a markerless orphan dataset
-    (invisible to probes, same as an append that died mid-write), never a
-    committed marker pointing at a deleted dataset, which would crash
-    every probe's scan."""
-    _delete_dir(spark, f"{_commit_dir(path)}/{append_id}.json")
-    _delete_dir(spark, _delta_path(path, append_id))
-
-
-def _scan_vectors(spark: SparkSession, path: str, flt) -> DataFrame:
-    """The probe-side scan: base vectors plus every committed non-empty
-    delta, each with the SAME partition filter (pruning applies per scan
-    root — sig=/cell= discovery runs under each delta dir exactly as under
-    vectors/). Uncommitted deltas (no marker: append in progress or died
-    mid-write) are invisible."""
-    base = spark.read.parquet(f"{path}/vectors").filter(flt)
+def _scan_vectors(spark: SparkSession, path: str, m: dict, flt) -> DataFrame:
+    """The probe-side scan of manifest ``m``: base vectors plus every
+    listed non-empty delta, each with the SAME partition filter (pruning
+    applies per scan root — sig=/cell= discovery runs under each delta dir
+    exactly as under vectors/). Unlisted deltas (append in progress or
+    died before publishing) are invisible."""
+    gen = _gen(path, m)
+    base = spark.read.parquet(f"{gen}/vectors").filter(flt)
     frames = [
-        spark.read.parquet(_delta_path(path, mk["append_id"])).filter(flt)
-        for mk in _committed_appends(spark, path)
-        if mk.get("rows", 0) > 0
+        spark.read.parquet(f"{gen}/deltas/{a['append_id']}").filter(flt)
+        for a in m["appends"]
+        if a["rows"] > 0
     ]
     return reduce(DataFrame.unionByName, frames, base)
 
@@ -275,15 +258,17 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
     increment path a 10^9-vector pipeline needs (a full rebuild re-shuffles
     the entire corpus to add 0.1% new rows). Rows are stamped with the
     index's OWN stored parameters (re-seeded planes / persisted centroids,
-    never re-derived from data), written as ``deltas/<append_id>/`` in the
-    same partition layout, then committed with an atomic marker.
+    never re-derived from data), written as ``g<N>/deltas/<append_id>/``
+    in the same partition layout, then committed by publishing the next
+    manifest version with the append listed.
 
-    Semantics: exactly-once per ``append_id`` — re-running a committed id
-    is a no-op (``{"skipped": True}``), re-running a crashed one
-    overwrites its partial files; a delta without a marker is invisible to
-    probes. For IVF the centroids stay fixed (standard for IVF appends):
-    recall degrades if the appended distribution drifts from the trained
-    quantizer — compact + rebuild periodically.
+    Semantics: exactly-once per ``append_id`` while the manifest lists it —
+    re-running a committed id is a no-op (``{"skipped": True}``),
+    re-running a crashed one overwrites its partial files; an unlisted
+    delta is invisible to probes. For IVF the centroids stay fixed
+    (standard for IVF appends): recall degrades if the appended
+    distribution drifts from the trained quantizer — compact + rebuild
+    periodically.
 
     Returns ``{"append_id", "rows", "skipped"}``."""
     if not APPEND_ID_RE.match(append_id or ""):
@@ -292,40 +277,39 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
             "(it names files and directories)"
         )
     spark = emb.sparkSession
-    m = _read_meta(spark, path)  # refuses half-built indexes by design
-    for mk in _committed_appends(spark, path):
-        if mk.get("append_id") == append_id:
-            return {"append_id": append_id, "rows": mk.get("rows", 0), "skipped": True}
+    m = _read_manifest(spark, path)  # refuses half-built indexes by design
+    for a in m["appends"]:
+        if a["append_id"] == append_id:
+            return {"append_id": append_id, "rows": a["rows"], "skipped": True}
     if m["kind"] == "lsh":
         planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
         stamped = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
         pcol = "sig"
     elif m["kind"] == "ivf":
-        cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-        cents = np.asarray([r["centroid"] for r in cent_rows], dtype=np.float64)
+        cents = _centroids(spark, path, m)
         stamped = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
         pcol = "cell"
     else:
         raise ValueError(f"index at {path} has unknown kind={m['kind']}")
-    dpath = _delta_path(path, append_id)
+    dpath = f"{_gen(path, m)}/deltas/{append_id}"
     stamped.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(dpath)
     try:
         rows = spark.read.parquet(dpath).count()  # footer-only metadata count
     except Exception as e:
         if "UNABLE_TO_INFER_SCHEMA" not in str(e):
             raise
-        rows = 0  # empty increment: committed as a zero-row marker
+        rows = 0  # empty increment: listed with zero rows, nothing to scan
+        _delete(spark, dpath)
     if rows:
         delta = spark.read.parquet(dpath)
-        # column-set check BEFORE commit: probes union every committed
-        # delta with unionByName, so a delta whose columns differ from the
-        # base (the daily job added/renamed one) would crash every future
-        # probe — far from the append that caused it — until someone
-        # hand-deletes the marker. Fail the append instead.
-        base_cols = set(spark.read.parquet(f"{path}/vectors").columns)
+        # column-set check BEFORE commit: probes union every listed delta
+        # with unionByName, so a delta whose columns differ from the base
+        # (the daily job added/renamed one) would crash every future
+        # probe — far from the append that caused it. Fail the append.
+        base_cols = set(spark.read.parquet(f"{_gen(path, m)}/vectors").columns)
         delta_cols = set(delta.columns)
         if delta_cols != base_cols:
-            _delete_dir(spark, dpath)
+            _delete(spark, dpath)
             raise ValueError(
                 "append_to_index: increment columns differ from the index "
                 f"(extra: {sorted(delta_cols - base_cols)}, missing: "
@@ -345,97 +329,50 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
         if delta.where(F.col("embedding").isNotNull()).limit(1).count():
             got = detect_dim(delta)
             if got != m["dim"]:
-                _delete_dir(spark, dpath)
+                _delete(spark, dpath)
                 raise ValueError(
                     f"append_to_index: increment dim {got} != index dim "
                     f"{m['dim']} — delta discarded, nothing committed"
                 )
-    _write_json_atomic(
-        spark,
-        f"{_commit_dir(path)}/{append_id}.json",
-        {"append_id": append_id, "kind": m["kind"], "dim": int(m["dim"]), "rows": int(rows)},
-    )
+    appends = m["appends"] + [{"append_id": append_id, "rows": int(rows)}]
+    _publish(spark, path, {**m, "version": m["version"] + 1, "appends": appends})
     return {"append_id": append_id, "rows": int(rows), "skipped": False}
 
 
 def compact_index(spark: SparkSession, path: str) -> dict:
-    """Fold committed deltas back into ``vectors/`` (bounding the probe's
-    scan-root count). Crash-safe via a pending marker: the merged copy is
-    fully written to a side directory FIRST, then the swap runs under the
-    meta-invalidation discipline (probes refuse the index only during the
-    swap window), and a crashed swap resumes from the marker on the next
-    call. The marker records exactly WHICH append_ids the side copy
-    folded, and the swap deletes only those — an append committed after
-    the marker (e.g. the next daily increment landing while the crashed
-    compact waits for its resume) keeps its delta and stays visible; a
-    blanket deltas/ wipe here would silently drop its rows.
+    """Fold the listed deltas into a new generation (bounding the probe's
+    scan-root count) and publish it as the next version; then delete the
+    old generation and versions. A compact that dies before publishing
+    leaves the old version probe-able and its half-written generation is
+    overwritten by the next try; one that dies after publishing is
+    finished by the next call. If another writer published since the
+    fold's base was read (e.g. the next daily append), the publish raises
+    and that writer's version stands — its rows are folded next time.
 
-    Returns ``{"compacted": n_deltas, "rows": total}``."""
-    from sparkocr.checkpoint import _fs, read_json_fs
-
-    pending_path = f"{path}/compact_pending.json"
-    jvm, fs, ppath = _fs(spark, pending_path)
-    tmp_dir = f"{path}/vectors_compacting"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp_dir)
-    vec_p = jvm.org.apache.hadoop.fs.Path(f"{path}/vectors")
-    meta_p = jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-
-    def _swap_and_commit(meta_kv: dict, folded: list[str]) -> None:
-        # steps are individually idempotent; guarded by tmp existence so a
-        # resume can never delete the live vectors without a replacement
-        if fs.exists(tmp_p):
-            _invalidate_meta(spark, path)
-            fs.delete(vec_p, True)
-            if not fs.rename(tmp_p, vec_p):
-                raise IOError(f"compact swap failed: rename {tmp_dir}")
-        for aid in folded:
-            _drop_append(spark, path, aid)
-        if not fs.exists(meta_p):
-            _write_meta(spark, path, **meta_kv)
-        fs.delete(ppath, False)
-
-    if fs.exists(ppath):
-        # resume a crashed compact (or clear a stale marker): the marker
-        # is only ever written AFTER the side copy is complete
-        pend = read_json_fs(jvm, fs, pending_path)
-        if "meta" not in pend or "folded" not in pend:
-            raise ValueError(
-                f"pending compact marker {pending_path} does not record "
-                "which appends its side copy folded (written by an older "
-                "build, or hand-edited) — resuming blindly would either "
-                "drop later appends or double-count folded ones; delete "
-                f"the marker and {tmp_dir}, then re-run compact_index"
+    Returns ``{"compacted": n_deltas, "rows": total}`` (``rows`` is None
+    when no new generation was written)."""
+    m = _read_manifest(spark, path)
+    folded, rows = m["appends"], None
+    if folded:
+        new = {**m, "version": m["version"] + 1, "appends": []}
+        if any(a["rows"] for a in folded):
+            new["generation"] = new["version"]
+            pcol = "sig" if m["kind"] == "lsh" else "cell"
+            merged = _scan_vectors(spark, path, m, F.lit(True))
+            merged.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
+                f"{_gen(path, new)}/vectors"
             )
-        _swap_and_commit(pend["meta"], pend["folded"])
-        return {"compacted": len(pend["folded"]), "rows": None, "resumed": True}
-
-    # a compact that died BEFORE publishing its marker leaves a full-size
-    # orphan side copy; nothing references it, so clear it on every fresh
-    # compact (including the early-return paths below)
-    _delete_dir(spark, tmp_dir)
-
-    m = _read_meta(spark, path)
-    all_marks = _committed_appends(spark, path)
-    marks = [mk for mk in all_marks if mk.get("rows", 0) > 0]
-    if not all_marks:
-        return {"compacted": 0, "rows": None}
-    folded = [mk["append_id"] for mk in all_marks]
-    if not marks:
-        # only zero-row appends: nothing to merge — just clear the markers
-        for aid in folded:
-            _drop_append(spark, path, aid)
-        return {"compacted": len(all_marks), "rows": None}
-    pcol = "sig" if m["kind"] == "lsh" else "cell"
-    base = spark.read.parquet(f"{path}/vectors")
-    frames = [spark.read.parquet(_delta_path(path, mk["append_id"])) for mk in marks]
-    merged = reduce(DataFrame.unionByName, frames, base)
-    merged.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(tmp_dir)
-    _write_json_atomic(
-        spark, pending_path, {"meta": m.asDict(), "folded": folded}
-    )
-    _swap_and_commit(m.asDict(), folded)
-    rows = spark.read.parquet(f"{path}/vectors").count()
-    return {"compacted": len(all_marks), "rows": int(rows)}
+            if m["kind"] == "ivf":
+                new["centroids"] = f"g{new['generation']}/centroids"
+                spark.read.parquet(f"{path}/{m['centroids']}").write.mode(
+                    "overwrite"
+                ).parquet(f"{path}/{new['centroids']}")
+        _publish(spark, path, new)
+        if new["generation"] != m["generation"]:
+            rows = int(spark.read.parquet(f"{_gen(path, new)}/vectors").count())
+        m = new
+    _collect(spark, path, m)
+    return {"compacted": len(folded), "rows": rows}
 
 
 def build_lsh_index(
@@ -445,24 +382,25 @@ def build_lsh_index(
     seed: int = _SEED,
     dim: int | None = None,
 ) -> None:
-    """Materialize ``emb`` partitioned by LSH signature at ``path``."""
+    """Materialize ``emb`` partitioned by LSH signature at ``path`` as a
+    new generation; a previous index at ``path`` stays probe-able until
+    the new one is published, and is then deleted."""
     if dim is None:
         dim = detect_dim(emb)
     planes = hyperplanes(dim, n_planes, seed)
     spark = emb.sparkSession
-    _invalidate_meta(spark, path)  # meta last: no probe-able half-index
-    # a REBUILD over an appended index must not leave stale deltas: the
-    # new base may re-include their rows (duplicates) or carry different
-    # parameters (junk partitions); same for a dead compact's leftovers
-    _delete_dir(spark, f"{path}/deltas")
-    _delete_dir(spark, f"{path}/compact_pending.json")
-    _delete_dir(spark, f"{path}/vectors_compacting")
+    v = max(_versions(spark, path), default=0) + 1
     sigged = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
     sigged.repartition("sig").write.mode("overwrite").partitionBy("sig").parquet(
-        f"{path}/vectors"
+        f"{path}/g{v}/vectors"
     )
-    _check_vectors_nonempty(spark, path, "build_lsh_index")
-    _write_meta(spark, path, kind="lsh", dim=dim, n_planes=n_planes, seed=seed)
+    _check_vectors_nonempty(spark, f"{path}/g{v}", "build_lsh_index")
+    m = {
+        "version": v, "kind": "lsh", "dim": int(dim), "n_planes": int(n_planes),
+        "seed": int(seed), "generation": v, "appends": [],
+    }
+    _publish(spark, path, m)
+    _collect(spark, path, m)
 
 
 def _sig_ball(qsig: int, n_planes: int, hamming: int) -> list[int]:
@@ -488,7 +426,7 @@ def lsh_topk_indexed(
     """Probe a materialized LSH index: exact cosine inside the signature
     ball, reading ONLY the matching sig= partitions (partition pruning —
     the scan never touches the other directories)."""
-    m = _read_meta(spark, path)
+    m = _read_manifest(spark, path)
     if m["kind"] != "lsh":
         raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
     if len(query) != m["dim"]:
@@ -510,6 +448,7 @@ def lsh_topk_indexed(
     vecs = _scan_vectors(
         spark,
         path,
+        m,
         F.col("sig").isin(probe_sigs) & (F.size("embedding") == int(m["dim"])),
     )
     q = F.array(*[F.lit(float(v)) for v in query])
@@ -541,9 +480,9 @@ def near_dups_indexed(
     and self-join the whole 10^9-vector corpus.
 
     New vectors are stamped with the index's STORED planes (re-seeded
-    from meta, never re-derived), the increment's distinct signatures
+    from the manifest, never re-derived), the increment's distinct signatures
     are collected driver-side, and the index scan is partition-pruned to
-    exactly those sig= directories (base + committed deltas). The sig
+    exactly those sig= directories (base + listed deltas). The sig
     collect is bounded by min(n_new, 2^n_planes) — 4,096 at the DEFAULT
     12 planes, but an index built with more planes admits up to n_new
     distinct values, so the collect is guarded by ``max_probe_sigs``
@@ -570,7 +509,7 @@ def near_dups_indexed(
     from sparkocr.pipeline.dedup import _require_cap, cap_hot_buckets, combined_counts
 
     _require_cap(bucket_max, cap_metrics)
-    m = _read_meta(spark, path)
+    m = _read_manifest(spark, path)
     if m["kind"] != "lsh":
         raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
     planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
@@ -587,9 +526,12 @@ def near_dups_indexed(
         for r in sig_new.select("sig").distinct().limit(max_probe_sigs + 1).collect()
     ]
     if not probe_sigs:
-        return spark.createDataFrame(
-            [], "id1 long, id2 long, cosine double"
-        )
+        id_type = new_emb.schema["vec_id"].dataType
+        return spark.createDataFrame([], StructType([
+            StructField("id1", id_type),
+            StructField("id2", id_type),
+            StructField("cosine", DoubleType()),
+        ]))
     if len(probe_sigs) > max_probe_sigs:
         raise ValueError(
             f"near_dups_indexed: the increment touches more than "
@@ -600,7 +542,7 @@ def near_dups_indexed(
         )
     new_ids = sig_new.select("vec_id")
     old = _scan_vectors(
-        spark, path, F.col("sig").isin(probe_sigs) & (F.size("embedding") == dim)
+        spark, path, m, F.col("sig").isin(probe_sigs) & (F.size("embedding") == dim)
     ).join(F.broadcast(new_ids), "vec_id", "left_anti")
     if bucket_max is not None:
         # the cap branch reads `old` twice (counts + join): cache the
@@ -646,28 +588,31 @@ def build_ivf_index(
     n_cells: int = 16,
     trainer=ivf_centroids_kmeans,
 ) -> None:
-    """Materialize ``emb`` partitioned by IVF cell at ``path``; centroids
-    (from ``trainer(emb, n_cells)``) are persisted so probes replay the
-    exact assignment."""
+    """Materialize ``emb`` partitioned by IVF cell at ``path`` as a new
+    generation; centroids (from ``trainer(emb, n_cells)``) are persisted
+    beside the vectors so probes replay the exact assignment. A previous
+    index at ``path`` stays probe-able until the new one is published."""
     cents = np.asarray(trainer(emb, n_cells), dtype=np.float64)
     spark = emb.sparkSession
-    _invalidate_meta(spark, path)  # meta last: no probe-able half-index
-    _delete_dir(spark, f"{path}/deltas")  # same rebuild hygiene as LSH
-    _delete_dir(spark, f"{path}/compact_pending.json")
-    _delete_dir(spark, f"{path}/vectors_compacting")
+    v = max(_versions(spark, path), default=0) + 1
     celled = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
     celled.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/vectors"
+        f"{path}/g{v}/vectors"
     )
     # the default trainer rejects an empty table before anything is
     # written, but a custom trainer with precomputed centroids would
     # otherwise build a complete, probe-crashing empty index
-    _check_vectors_nonempty(spark, path, "build_ivf_index")
-    cent_rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(cents)]
+    _check_vectors_nonempty(spark, f"{path}/g{v}", "build_ivf_index")
+    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
     spark.createDataFrame(cent_rows, "cell_id int, centroid array<double>").coalesce(
         1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    _write_meta(spark, path, kind="ivf", dim=int(cents.shape[1]), n_cells=len(cents))
+    ).write.mode("overwrite").parquet(f"{path}/g{v}/centroids")
+    m = {
+        "version": v, "kind": "ivf", "dim": int(cents.shape[1]), "n_cells": len(cents),
+        "generation": v, "centroids": f"g{v}/centroids", "appends": [],
+    }
+    _publish(spark, path, m)
+    _collect(spark, path, m)
 
 
 def ivf_topk_indexed(
@@ -679,15 +624,14 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """Probe a materialized IVF index: exact cosine inside the ``n_probe``
     cells nearest the query, reading ONLY those cell= partitions."""
-    m = _read_meta(spark, path)
+    m = _read_manifest(spark, path)
     if m["kind"] != "ivf":
         raise ValueError(f"index at {path} is kind={m['kind']}, expected ivf")
     if len(query) != m["dim"]:
         raise ValueError(
             f"ivf_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
         )
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-    cents = np.asarray([r["centroid"] for r in cent_rows], dtype=np.float64)
+    cents = _centroids(spark, path, m)
     qv = np.asarray(query, dtype=np.float64)
     d = ((cents - qv[None, :]) ** 2).sum(axis=1)
     probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
@@ -698,6 +642,7 @@ def ivf_topk_indexed(
     vecs = _scan_vectors(
         spark,
         path,
+        m,
         F.col("cell").isin(probe) & (F.size("embedding") == int(m["dim"])),
     )
     q = F.array(*[F.lit(float(v)) for v in query])

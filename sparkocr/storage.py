@@ -51,7 +51,8 @@ from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 BASE = "base"
 #: The data-table column holding a row's attempt stamp.
 STAMP = "append_id"
-#: Append ids name table rows here and files in ``ann_index``.
+#: Append ids name table rows here, and delta directories and manifest
+#: entries in ``ann_index``.
 APPEND_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
 

@@ -94,7 +94,7 @@ def test_lsh_index_one_file_per_signature(lsh_index):
     # parquet file, not one per input task (the small-files explosion)
     import os
 
-    vdir = f"{lsh_index}/vectors"
+    vdir = f"{lsh_index}/g1/vectors"
     sig_dirs = [d for d in os.listdir(vdir) if d.startswith("sig=")]
     assert sig_dirs
     for d in sig_dirs:
@@ -195,30 +195,35 @@ def test_wrong_query_dim_rejected(spark, query, lsh_index, ivf_index):
         ivf_topk_indexed(spark, ivf_index, short)
 
 
-def test_interrupted_rebuild_leaves_no_probeable_index(spark, emb, query, tmp_path, monkeypatch):
-    """meta/ is written LAST and deleted FIRST: a rebuild that dies after
-    overwriting vectors/ must leave an index that probes REFUSE loudly —
-    with the old write order the stale meta (old n_planes/seed) survived
-    beside the new vectors and probes silently computed signatures in the
-    wrong space (near-zero recall, no error)."""
+def test_interrupted_rebuild_keeps_old_index_probeable(spark, emb, query, tmp_path, monkeypatch):
+    """A rebuild commits only by publishing its manifest: one that dies
+    before that, or one over an empty table, leaves the old index
+    returning its old probe results — never the old planes beside new
+    vectors, and never no index at all."""
     from sparkocr.pipeline import ann_index
 
     path = str(tmp_path / "lsh")
     ann_index.build_lsh_index(emb, path, n_planes=8)
-    assert len(ann_index.lsh_topk_indexed(spark, path, query, k=3).collect()) > 0
+    old = _rows(ann_index.lsh_topk_indexed(spark, path, query, k=10))
+    assert old
 
     def boom(*a, **kw):
-        raise RuntimeError("driver died before meta publish")
+        raise RuntimeError("driver died before the manifest publish")
 
-    monkeypatch.setattr(ann_index, "_write_meta", boom)
-    with pytest.raises(RuntimeError, match="meta publish"):
+    monkeypatch.setattr(ann_index, "_publish", boom)
+    with pytest.raises(RuntimeError, match="manifest publish"):
         ann_index.build_lsh_index(emb, path, n_planes=12)  # rebuild, new space
     monkeypatch.undo()
-    with pytest.raises(ValueError, match="no complete ANN index"):
-        ann_index.lsh_topk_indexed(spark, path, query, k=3)
-    # a clean rebuild recovers
+    assert _rows(ann_index.lsh_topk_indexed(spark, path, query, k=10)) == old
+    with pytest.raises(ValueError, match="no rows"):
+        ann_index.build_lsh_index(emb.filter("vec_id < 0"), path, n_planes=12, dim=len(query))
+    assert _rows(ann_index.lsh_topk_indexed(spark, path, query, k=10)) == old
+    # a clean rebuild publishes the new planes with their own vectors
     ann_index.build_lsh_index(emb, path, n_planes=12)
-    assert len(ann_index.lsh_topk_indexed(spark, path, query, k=3).collect()) > 0
+    fresh = str(tmp_path / "fresh")
+    ann_index.build_lsh_index(emb, fresh, n_planes=12)
+    got = _rows(ann_index.lsh_topk_indexed(spark, path, query, k=10))
+    assert got == _rows(ann_index.lsh_topk_indexed(spark, fresh, query, k=10))
 
 
 def test_empty_input_rejected_even_with_custom_trainer(spark, tmp_path):
@@ -315,8 +320,11 @@ def test_lsh_append_probe_equals_full_build(spark, emb, query, tmp_path):
 def test_ivf_append_finds_appended_vectors(spark, emb, tmp_path):
     """IVF appends keep the trained centroids fixed; an appended vector
     queried for itself must come back as its own top-1 (cell assignment
-    replayed from the persisted centroids, not re-derived)."""
-    from sparkocr.pipeline.ann_index import append_to_index, ivf_topk_indexed
+    replayed from the persisted centroids, not re-derived) — also after
+    a compact, whose new generation carries the centroids along."""
+    import os
+
+    from sparkocr.pipeline.ann_index import append_to_index, compact_index, ivf_topk_indexed
 
     path, rest = _append_fixture(spark, emb, tmp_path, "ivf")
     append_to_index(rest, path, "day-2026.08.18")
@@ -324,12 +332,15 @@ def test_ivf_append_finds_appended_vectors(spark, emb, tmp_path):
     q = [float(v) for v in probe_row["embedding"]]
     top = ivf_topk_indexed(spark, path, q, k=1, n_probe=4).collect()
     assert top and top[0].vec_id == probe_row["vec_id"], top
+    compact_index(spark, path)
+    assert sorted(os.listdir(path)) == ["_index", "g3"]
+    assert ivf_topk_indexed(spark, path, q, k=1, n_probe=4).collect() == top
 
 
 def test_uncommitted_delta_is_invisible(spark, emb, query, tmp_path, monkeypatch):
-    """An append that dies after writing its delta but before the commit
-    marker must leave probe results unchanged — and retrying the same
-    append_id afterwards completes it."""
+    """An append that dies after writing its delta but before publishing
+    its manifest version must leave probe results unchanged — and
+    retrying the same append_id afterwards completes it."""
     from sparkocr.pipeline import ann_index
     from sparkocr.pipeline.ann_index import append_to_index, lsh_topk_indexed
 
@@ -339,7 +350,7 @@ def test_uncommitted_delta_is_invisible(spark, emb, query, tmp_path, monkeypatch
     def boom(*a, **kw):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(ann_index, "_write_json_atomic", boom)
+    monkeypatch.setattr(ann_index, "_publish", boom)
     with pytest.raises(RuntimeError):
         append_to_index(rest, path, "inc-crash")
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == before
@@ -360,10 +371,10 @@ def test_append_rejects_wrong_dim_and_bad_id(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="dim"):
         append_to_index(wrong, path, "inc-wrongdim")
     # the discarded delta must not have been committed
-    from sparkocr.pipeline.ann_index import _committed_appends
+    from sparkocr.pipeline.ann_index import _read_manifest
 
     assert all(
-        mk["append_id"] != "inc-wrongdim" for mk in _committed_appends(spark, path)
+        a["append_id"] != "inc-wrongdim" for a in _read_manifest(spark, path)["appends"]
     )
     with pytest.raises(ValueError, match="append_id"):
         append_to_index(rest, path, "../escape")
@@ -384,13 +395,15 @@ def test_append_probe_still_prunes_partitions(spark, emb, query, tmp_path):
 
 
 def test_compact_folds_deltas_and_resumes(spark, emb, query, tmp_path, monkeypatch):
-    """compact_index merges deltas into vectors/ (probe unchanged, deltas
-    gone) and a compact killed mid-swap resumes losslessly from its
-    pending marker on the next call."""
+    """compact_index merges deltas into a new generation (probe unchanged,
+    old generation and its deltas gone), and a compact killed right
+    before it publishes leaves the old version probe-able and is finished
+    losslessly by the next call."""
     import os
 
     from sparkocr.pipeline import ann_index
     from sparkocr.pipeline.ann_index import (
+        _read_manifest,
         append_to_index,
         compact_index,
         lsh_topk_indexed,
@@ -401,36 +414,28 @@ def test_compact_folds_deltas_and_resumes(spark, emb, query, tmp_path, monkeypat
     want = _rows(lsh_topk_indexed(spark, path, query, k=10))
     r = compact_index(spark, path)
     assert r["compacted"] == 1 and r["rows"] == emb.count()
-    # folded appends fully dropped (dataset + marker); the deltas/ root may
-    # keep empty scaffolding — a blanket wipe would kill in-flight appends
-    from sparkocr.pipeline.ann_index import _committed_appends
-
-    assert _committed_appends(spark, path) == []
-    assert not os.path.exists(f"{path}/deltas/inc-a")
+    assert _read_manifest(spark, path)["appends"] == []
+    assert sorted(os.listdir(path)) == ["_index", "g3"]
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want
 
-    # crash the NEXT compact right after the pending marker is published
-    # (side copy complete, swap not yet run) and resume it
+    # kill the NEXT compact after its new generation is written, right
+    # before it publishes, and run it again
     append_to_index(emb.filter("vec_id < 0"), path, "inc-empty")  # zero rows
     append_to_index(rest.limit(5), path, "inc-b")
     want2 = _rows(lsh_topk_indexed(spark, path, query, k=10))
-    real_write = ann_index._write_json_atomic
 
-    def write_then_boom(spark_, p, payload):
-        real_write(spark_, p, payload)
-        if p.endswith("compact_pending.json"):
-            raise RuntimeError("killed mid-compact")
+    def boom(*a, **kw):
+        raise RuntimeError("killed mid-compact")
 
-    monkeypatch.setattr(ann_index, "_write_json_atomic", write_then_boom)
+    monkeypatch.setattr(ann_index, "_publish", boom)
     with pytest.raises(RuntimeError):
         compact_index(spark, path)
     monkeypatch.undo()
-    # swap did not run: the index still probes (old meta intact) pre-resume
-    resumed = compact_index(spark, path)
-    assert resumed.get("resumed") is True
-    assert _committed_appends(spark, path) == []
-    assert not os.path.exists(f"{path}/deltas/inc-b")
-    assert not os.path.exists(f"{path}/compact_pending.json")
+    assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want2
+    assert compact_index(spark, path)["compacted"] == 2
+    assert _read_manifest(spark, path)["appends"] == []
+    assert sorted(os.listdir(path)) == ["_index", "g6"]
+    assert os.listdir(os.path.join(path, "_index")) == ["6.json"]
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want2
 
 
@@ -452,55 +457,41 @@ def test_rebuild_clears_stale_deltas(spark, emb, query, tmp_path):
     assert got == _rows(lsh_topk_indexed(spark, full_path, query, k=10))
 
 
-def test_append_committed_during_pending_window_survives_resume(
+def test_compact_refuses_to_publish_over_a_concurrent_append(
     spark, emb, query, tmp_path, monkeypatch
 ):
-    """The data-loss scenario a blanket deltas/ wipe would cause: compact
-    crashes right after publishing its pending marker, the NEXT daily
-    append commits normally, and the eventual resume must fold only the
-    appends the marker recorded — the newer append's rows stay probeable."""
-    from pyspark.sql import functions as F
-
+    """An append that commits while a compact is folding must survive:
+    the compact's publish finds its version taken and raises, the
+    append's rows stay probe-able, and the next compact folds both."""
     from sparkocr.pipeline import ann_index
     from sparkocr.pipeline.ann_index import (
+        _read_manifest,
         append_to_index,
+        build_lsh_index,
         compact_index,
         lsh_topk_indexed,
     )
 
     path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
-    first = rest.filter("vec_id % 4 = 1")
-    late = rest.filter("vec_id % 4 = 3")
-    append_to_index(first, path, "inc-early")
+    append_to_index(rest.filter("vec_id % 4 = 1"), path, "inc-early")
+    real_publish = ann_index._publish
 
-    real_write = ann_index._write_json_atomic
+    def append_then_publish(spark_, p, m):
+        monkeypatch.undo()
+        append_to_index(rest.filter("vec_id % 4 = 3"), path, "inc-late")
+        real_publish(spark_, p, m)
 
-    def write_then_boom(spark_, p, payload):
-        real_write(spark_, p, payload)
-        if p.endswith("compact_pending.json"):
-            raise RuntimeError("killed mid-compact")
-
-    monkeypatch.setattr(ann_index, "_write_json_atomic", write_then_boom)
-    with pytest.raises(RuntimeError):
+    monkeypatch.setattr(ann_index, "_publish", append_then_publish)
+    with pytest.raises(ValueError, match="another writer committed"):
         compact_index(spark, path)
-    monkeypatch.undo()
-
-    # the next increment lands while the crashed compact awaits its resume
-    r = append_to_index(late, path, "inc-late")
-    assert r["rows"] == late.count() > 0
-    want = _rows(lsh_topk_indexed(spark, path, query, k=10))
-
-    resumed = compact_index(spark, path)
-    assert resumed.get("resumed") is True
-    # only the folded append was dropped; the late one still probes
-    from sparkocr.pipeline.ann_index import _committed_appends
-
-    left = [mk["append_id"] for mk in _committed_appends(spark, path)]
-    assert left == ["inc-late"]
+    appends = [a["append_id"] for a in _read_manifest(spark, path)["appends"]]
+    assert appends == ["inc-early", "inc-late"]
+    full_path = str(tmp_path / "lsh_full")
+    build_lsh_index(emb, full_path)
+    want = _rows(lsh_topk_indexed(spark, full_path, query, k=10))
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want
-    # a follow-up compact folds the survivor too
-    compact_index(spark, path)
-    assert _committed_appends(spark, path) == []
+    assert compact_index(spark, path)["compacted"] == 2
+    assert _read_manifest(spark, path)["appends"] == []
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want
 
 
@@ -510,7 +501,7 @@ def test_append_rejects_schema_drift_uncommitted(spark, emb, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkocr.pipeline.ann_index import (
-        _committed_appends,
+        _read_manifest,
         append_to_index,
         lsh_topk_indexed,
     )
@@ -520,7 +511,7 @@ def test_append_rejects_schema_drift_uncommitted(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="columns differ"):
         append_to_index(drifted, path, "inc-drift")
     assert all(
-        mk["append_id"] != "inc-drift" for mk in _committed_appends(spark, path)
+        a["append_id"] != "inc-drift" for a in _read_manifest(spark, path)["appends"]
     )
 
 
@@ -543,83 +534,27 @@ def test_all_null_embedding_append_accepted(spark, emb, query, tmp_path):
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == before
 
 
-def test_mismatched_marker_id_raises(spark, emb, tmp_path):
-    """A commit marker filed under one name but naming another append_id
-    (hand-edited / misplaced) must raise loudly, not scan a wrong dir."""
-    import json as _json
-    import os
-
-    from sparkocr.pipeline.ann_index import _committed_appends, append_to_index
-
-    path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
-    append_to_index(rest, path, "inc-real")
-    bad = os.path.join(path, "deltas", "_commits", "inc-fake.json")
-    with open(bad, "w") as f:
-        _json.dump({"append_id": "somewhere-else", "rows": 5}, f)
-    with pytest.raises(ValueError, match="filed as"):
-        _committed_appends(spark, path)
-
-
-def test_probe_error_during_swap_window_points_to_resume(
-    spark, emb, query, tmp_path
-):
-    """A compact crash INSIDE the swap (meta deleted, pending marker
-    present) must tell the operator to resume, not to rebuild — and the
-    resume must restore a probeable index."""
-    from sparkocr.pipeline import ann_index
-    from sparkocr.pipeline.ann_index import (
-        _write_json_atomic,
-        append_to_index,
-        compact_index,
-        lsh_topk_indexed,
-    )
-
-    path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
-    append_to_index(rest, path, "inc-swap")
-    want = _rows(lsh_topk_indexed(spark, path, query, k=10))
-    # reproduce the crashed-swap state: side copy complete, pending marker
-    # published, meta invalidated, vectors swap not yet finished
-    m = ann_index._read_meta(spark, path)
-    base = spark.read.parquet(f"{path}/vectors")
-    delta = spark.read.parquet(f"{path}/deltas/inc-swap")
-    base.unionByName(delta).repartition("sig").write.mode("overwrite").partitionBy(
-        "sig"
-    ).parquet(f"{path}/vectors_compacting")
-    _write_json_atomic(
-        spark,
-        f"{path}/compact_pending.json",
-        {"meta": m.asDict(), "folded": ["inc-swap"]},
-    )
-    ann_index._invalidate_meta(spark, path)
-    with pytest.raises(ValueError, match="compact_index"):
-        lsh_topk_indexed(spark, path, query, k=10)
-    resumed = compact_index(spark, path)
-    assert resumed.get("resumed") is True
-    assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want
-
-
 def test_fresh_compact_clears_orphan_side_copy(spark, emb, query, tmp_path):
-    """A compact that died BEFORE publishing its marker leaves a full-size
-    orphan vectors_compacting/; the next fresh compact must remove it even
-    when it takes an early-return path."""
+    """A compact or build that died before publishing leaves a full-size
+    orphan generation; the next compact must remove it even when it has
+    nothing to fold."""
     import os
 
     from sparkocr.pipeline.ann_index import compact_index
 
     path, _ = _append_fixture(spark, emb, tmp_path, "lsh")
-    orphan = os.path.join(path, "vectors_compacting")
-    os.makedirs(orphan, exist_ok=True)
+    orphan = os.path.join(path, "g2", "vectors")
+    os.makedirs(orphan)
     with open(os.path.join(orphan, "junk"), "w") as f:
         f.write("dead compact leftovers")
-    r = compact_index(spark, path)  # no committed appends: early return
-    assert r["compacted"] == 0
-    assert not os.path.exists(orphan)
+    assert compact_index(spark, path) == {"compacted": 0, "rows": None}
+    assert sorted(os.listdir(path)) == ["_index", "g1"]
 
 
 def test_vacuum_reclaims_markerless_orphans_only(spark, emb, query, tmp_path):
     """A delta that died mid-write under a never-retried append_id is
     invisible but leaks storage; vacuum_index deletes exactly those —
-    committed deltas and the _commits dir are spared, probes unchanged."""
+    listed deltas are spared, probes unchanged."""
     import os
 
     from sparkocr.pipeline.ann_index import (
@@ -631,11 +566,11 @@ def test_vacuum_reclaims_markerless_orphans_only(spark, emb, query, tmp_path):
     path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
     append_to_index(rest, path, "inc-live")
     want = _rows(lsh_topk_indexed(spark, path, query, k=10))
-    orphan = os.path.join(path, "deltas", "inc-dead")
+    orphan = os.path.join(path, "g1", "deltas", "inc-dead")
     os.makedirs(orphan)
     with open(os.path.join(orphan, "part-junk.parquet"), "w") as f:
         f.write("partial write")
-    # the age guard: a FRESH markerless delta is indistinguishable from
+    # the age guard: a FRESH unlisted delta is indistinguishable from
     # an in-flight append, so the default vacuum must spare it
     r = vacuum_index(spark, path)
     assert r["reclaimed"] == [] and r["skipped_recent"] == ["inc-dead"]
@@ -643,28 +578,9 @@ def test_vacuum_reclaims_markerless_orphans_only(spark, emb, query, tmp_path):
     r = vacuum_index(spark, path, min_age_hours=0)
     assert r["reclaimed"] == ["inc-dead"] and r["skipped_recent"] == []
     assert not os.path.exists(orphan)
-    assert os.path.exists(os.path.join(path, "deltas", "inc-live"))
+    assert os.path.exists(os.path.join(path, "g1", "deltas", "inc-live"))
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want
     assert vacuum_index(spark, path, min_age_hours=0)["reclaimed"] == []
-
-
-def test_old_format_pending_marker_refused_with_named_error(
-    spark, emb, query, tmp_path
-):
-    """A pending compact marker lacking the folded-append record (older
-    build / hand-edited) cannot be resumed safely in either direction —
-    the resume must raise the remediation error, not KeyError."""
-    from sparkocr.pipeline.ann_index import (
-        _read_meta,
-        _write_json_atomic,
-        compact_index,
-    )
-
-    path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
-    m = _read_meta(spark, path)
-    _write_json_atomic(spark, f"{path}/compact_pending.json", m.asDict())
-    with pytest.raises(ValueError, match="folded"):
-        compact_index(spark, path)
 
 
 def test_near_dups_indexed_matches_full_operator(spark, emb, tmp_path):
@@ -836,15 +752,109 @@ def test_near_dups_cap_counts_valid_rows_only(spark, emb, tmp_path):
         caching.release_all()
 
 
-# ---- crash matrix: every write of append_to_index and compact_index ------
+def test_near_dups_indexed_empty_increment_keeps_id_type(spark, emb, tmp_path):
+    """An increment with no valid embeddings returns the schema a
+    non-empty one does: the ids take vec_id's type (int here), not a
+    hard-coded long."""
+    from pyspark.sql import functions as F
 
-#: the delta parquet write, then the commit marker's publish (tmp create,
-#: final delete, rename)
-_APPEND_WRITES = 4
-#: the side-copy sweep, the side-copy write, the pending marker's publish
-#: (3), the swap (meta delete, vectors delete, rename), the folded
-#: append's drop (marker, delta), the meta write, the pending delete
-_COMPACT_WRITES = 12
+    from sparkocr.pipeline import caching
+    from sparkocr.pipeline.ann_index import build_lsh_index, near_dups_indexed
+
+    base = emb.filter("vec_id % 2 = 0 and embedding is not null").select(
+        F.col("vec_id").cast("int").alias("vec_id"), "embedding"
+    )
+    inc = base.filter("vec_id <= 20").select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+    )
+    invalid = inc.withColumn(
+        "embedding", F.lit(None).cast(inc.schema["embedding"].dataType)
+    )
+    path = str(tmp_path / "nd_int")
+    build_lsh_index(base, path)
+    try:
+        full = near_dups_indexed(spark, path, inc)
+        empty = near_dups_indexed(spark, path, invalid)
+        assert full.count() > 0 and empty.count() == 0
+        assert empty.schema.simpleString() == full.schema.simpleString()
+        assert full.schema.simpleString() == "struct<id1:int,id2:int,cosine:double>"
+    finally:
+        caching.release_all()
+
+
+def test_unparseable_newest_manifest_raises(spark, emb, query, tmp_path):
+    """A corrupt newest manifest is an error for every reader and writer —
+    never skipped in favour of the older version, whose generation may
+    already be gone. A rebuild is the remedy and needs no manifest."""
+    import os
+
+    from sparkocr.pipeline.ann_index import (
+        append_to_index,
+        build_lsh_index,
+        compact_index,
+        lsh_topk_indexed,
+    )
+
+    path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
+    append_to_index(rest, path, "inc-a")
+    with open(os.path.join(path, "_index", "2.json"), "w") as f:
+        f.write('{"kind": "lsh", "dim"')
+    with pytest.raises(ValueError, match="unparseable"):
+        lsh_topk_indexed(spark, path, query)
+    with pytest.raises(ValueError, match="unparseable"):
+        append_to_index(rest, path, "inc-b")
+    with pytest.raises(ValueError, match="unparseable"):
+        compact_index(spark, path)
+    build_lsh_index(emb, path)
+    assert sorted(os.listdir(os.path.join(path, "_index"))) == ["3.json"]
+    assert lsh_topk_indexed(spark, path, query).count() > 0
+
+
+def test_meta_layout_refused_until_rebuilt(spark, emb, query, tmp_path):
+    """The meta-last layout (meta/ + vectors/ + deltas/_commits/, no
+    _index/) is not an index: probes and appends refuse it with the
+    rebuild error, and a build at that path probes correctly and leaves
+    only _index/ and its generation."""
+    import json
+    import os
+
+    from sparkocr.pipeline.ann_index import (
+        append_to_index,
+        build_lsh_index,
+        lsh_topk_indexed,
+    )
+    from sparkocr.pipeline.similarity import lsh_topk
+
+    path = str(tmp_path / "meta_layout")
+    emb.write.parquet(f"{path}/vectors/sig=0")
+    spark.createDataFrame(
+        [("lsh", len(query), 12, 42)], "kind string, dim int, n_planes int, seed int"
+    ).write.parquet(f"{path}/meta")
+    os.makedirs(f"{path}/deltas/_commits")
+    with open(f"{path}/deltas/_commits/inc-a.json", "w") as f:
+        json.dump({"append_id": "inc-a", "kind": "lsh", "dim": len(query), "rows": 0}, f)
+    with pytest.raises(ValueError, match="no complete ANN index .*rebuild"):
+        lsh_topk_indexed(spark, path, query)
+    with pytest.raises(ValueError, match="no complete ANN index .*rebuild"):
+        append_to_index(emb, path, "inc-b")
+    build_lsh_index(emb, path)
+    assert sorted(os.listdir(path)) == ["_index", "g1"]
+    assert os.listdir(f"{path}/_index") == ["1.json"]
+    got = _rows(lsh_topk_indexed(spark, path, query, k=10))
+    assert got == _rows(lsh_topk(emb, query, k=10))
+
+
+# ---- crash matrix: every write of append_to_index, compact_index and a
+# ---- rebuild
+
+#: the delta parquet write, the manifest's tmp create and its rename
+_APPEND_WRITES = 3
+#: from the appended index (versions 1-2, generation g1): the new
+#: generation's parquet write, the manifest's tmp create and rename, then
+#: deleting versions 1 and 2 and generation g1
+_COMPACT_WRITES = 6
+#: the same writes as the compact, for a rebuild of that appended index
+_REBUILD_WRITES = 6
 
 
 class _WriteCountingFs:
@@ -896,20 +906,17 @@ def _fail_kth_write(monkeypatch, k):
 
 
 def _view(spark, path):
-    """Every vec_id a probe sees (sorted, duplicates kept), or None while
-    the index refuses probes mid-compact — which must then point the
-    operator at the resume."""
+    """What a probe sees: the newest manifest's planes and every
+    (vec_id, sig) of its scan (sorted, duplicates kept) — a mix of one
+    version's planes with another's vectors reads as a third view."""
     from pyspark.sql import functions as F
 
     from sparkocr.pipeline import ann_index
 
-    try:
-        ann_index._read_meta(spark, path)
-    except ValueError as e:
-        assert "compact_index" in str(e), e
-        return None
-    scan = ann_index._scan_vectors(spark, path, F.lit(True))
-    return sorted(r.vec_id for r in scan.select("vec_id").collect())
+    m = ann_index._read_manifest(spark, path)
+    scan = ann_index._scan_vectors(spark, path, m, F.lit(True))
+    rows = sorted((r.vec_id, r.sig) for r in scan.select("vec_id", "sig").collect())
+    return m["n_planes"], m["seed"], rows
 
 
 def _tree(path):
@@ -924,44 +931,60 @@ def _tree(path):
     )
 
 
+def _renumbered(tree):
+    """``tree`` with version and generation numbers blanked: a rebuild
+    rerun after its publish is a second build, one version later."""
+    return sorted(re.sub(r"^(g|_index/)\d+", r"\1#", p) for p in tree)
+
+
 @pytest.fixture(scope="module")
 def crash_emb(emb):
     """48 vectors: every sig= directory is a file write, and the matrix
-    runs each write sequence 17 times."""
+    runs each write sequence 16 times."""
     return emb.filter("vec_id < 48")
 
 
 @pytest.fixture(scope="module")
 def crash_index(spark, crash_emb, tmp_path_factory):
     """An LSH index over the even vec_ids; a copy with the odd ones
-    appended as ``inc-a``; the tree a clean compact of that copy leaves."""
+    appended as ``inc-a``; the tree a clean compact of that copy leaves;
+    and a clean 8-plane rebuild of that copy over every vector."""
     import shutil
 
     from sparkocr.pipeline.ann_index import append_to_index, build_lsh_index, compact_index
 
     root = tmp_path_factory.mktemp("ann_crash")
-    base, appended, compacted = (str(root / n) for n in ("base", "appended", "compacted"))
+    base, appended, compacted, rebuilt = (
+        str(root / n) for n in ("base", "appended", "compacted", "rebuilt")
+    )
     build_lsh_index(crash_emb.filter("vec_id % 2 = 0"), base)
     shutil.copytree(base, appended)
     append_to_index(crash_emb.filter("vec_id % 2 = 1"), appended, "inc-a")
     shutil.copytree(appended, compacted)
     compact_index(spark, compacted)
-    return base, appended, _tree(compacted)
+    shutil.copytree(appended, rebuilt)
+    build_lsh_index(crash_emb, rebuilt, n_planes=8)
+    return base, appended, _tree(compacted), rebuilt
 
 
 def test_crash_matrix_covers_every_write(spark, crash_emb, crash_index, tmp_path, monkeypatch):
     import shutil
 
-    from sparkocr.pipeline.ann_index import append_to_index, compact_index
+    from sparkocr.pipeline.ann_index import append_to_index, build_lsh_index, compact_index
 
-    path = str(tmp_path / "idx")
-    shutil.copytree(crash_index[0], path)
+    base, appended, _, _ = crash_index
+    path, rebuilt = str(tmp_path / "idx"), str(tmp_path / "rebuilt")
+    shutil.copytree(base, path)
+    shutil.copytree(appended, rebuilt)
     ran = _fail_kth_write(monkeypatch, None)
     append_to_index(crash_emb.filter("vec_id % 2 = 1"), path, "inc-a")
     assert len(ran) == _APPEND_WRITES, ran
     ran.clear()
     compact_index(spark, path)
     assert len(ran) == _COMPACT_WRITES, ran
+    ran.clear()
+    build_lsh_index(crash_emb, rebuilt, n_planes=8)
+    assert len(ran) == _REBUILD_WRITES, ran
 
 
 @pytest.mark.parametrize("k", range(1, _APPEND_WRITES + 1))
@@ -973,9 +996,9 @@ def test_crashed_append_keeps_old_view_and_retry_lands_once(
     retry is a skipped no-op."""
     import shutil
 
-    from sparkocr.pipeline.ann_index import _committed_appends, append_to_index
+    from sparkocr.pipeline.ann_index import _read_manifest, append_to_index
 
-    base, appended, _ = crash_index
+    base, appended, _, _ = crash_index
     path = str(tmp_path / "idx")
     shutil.copytree(base, path)
     rest = crash_emb.filter("vec_id % 2 = 1")
@@ -990,7 +1013,8 @@ def test_crashed_append_keeps_old_view_and_retry_lands_once(
     assert not r["skipped"] and r["rows"] == rest.count()
     assert _view(spark, path) == _view(spark, appended)
     assert append_to_index(rest, path, "inc-a")["skipped"]
-    assert [mk["append_id"] for mk in _committed_appends(spark, path)] == ["inc-a"]
+    assert [a["append_id"] for a in _read_manifest(spark, path)["appends"]] == ["inc-a"]
+    assert _tree(path) == _tree(appended)
 
 
 @pytest.mark.parametrize("k", range(1, _COMPACT_WRITES + 1))
@@ -998,14 +1022,14 @@ def test_crashed_compact_keeps_view_and_resume_lands_once(
     spark, crash_index, tmp_path, monkeypatch, k
 ):
     """A death at the k-th write of a compact leaves probes on the same
-    rows (compaction moves rows, never changes them) or refusing with the
-    resume instruction, never a mix; the next compact_index call finishes
-    the fold once and leaves exactly what a clean compact leaves."""
+    rows (compaction moves rows, never changes them); the next
+    compact_index call finishes the fold once and leaves exactly what a
+    clean compact leaves."""
     import shutil
 
-    from sparkocr.pipeline.ann_index import _committed_appends, compact_index
+    from sparkocr.pipeline.ann_index import _read_manifest, compact_index
 
-    _, appended, clean_tree = crash_index
+    _, appended, clean_tree, _ = crash_index
     path = str(tmp_path / "idx")
     shutil.copytree(appended, path)
     want = _view(spark, path)
@@ -1013,10 +1037,38 @@ def test_crashed_compact_keeps_view_and_resume_lands_once(
     with pytest.raises(RuntimeError, match="simulated"):
         compact_index(spark, path)
     monkeypatch.undo()
-    assert _view(spark, path) in (want, None)
+    assert _view(spark, path) == want
 
     compact_index(spark, path)
     assert _view(spark, path) == want
-    assert _committed_appends(spark, path) == []
+    assert _read_manifest(spark, path)["appends"] == []
     assert _tree(path) == clean_tree
     assert compact_index(spark, path) == {"compacted": 0, "rows": None}
+
+
+@pytest.mark.parametrize("k", range(1, _REBUILD_WRITES + 1))
+def test_crashed_rebuild_keeps_a_whole_view_and_rerun_lands_once(
+    spark, crash_emb, crash_index, tmp_path, monkeypatch, k
+):
+    """A death at the k-th write of a rebuild (new planes, over an
+    appended index) leaves probes on the old index or the new one, never
+    old planes beside new vectors; rerunning the rebuild leaves what a
+    clean rebuild leaves, with one version and one generation."""
+    import shutil
+
+    from sparkocr.pipeline.ann_index import build_lsh_index
+
+    _, appended, _, rebuilt = crash_index
+    path = str(tmp_path / "idx")
+    shutil.copytree(appended, path)
+    before, after = _view(spark, path), _view(spark, rebuilt)
+    assert before != after
+    _fail_kth_write(monkeypatch, k)
+    with pytest.raises(RuntimeError, match="simulated"):
+        build_lsh_index(crash_emb, path, n_planes=8)
+    monkeypatch.undo()
+    assert _view(spark, path) in (before, after)
+
+    build_lsh_index(crash_emb, path, n_planes=8)
+    assert _view(spark, path) == after
+    assert _renumbered(_tree(path)) == _renumbered(_tree(rebuilt))
