@@ -10,17 +10,21 @@ probed fraction of storage. This module persists the bucketed layout once:
 - ``build_ivf_index``: vectors partitioned by ``cell`` (nearest-centroid
   id), centroids persisted beside them;
 
-and probe paths that read ONLY the probed partitions: the ``isin`` filter
-on the partition column becomes a `PartitionFilters` entry on the parquet
-scan (asserted in tests/test_plans.py), so Spark lists and reads just the
+and probe paths that read ONLY the probed partitions. The probes run
+``similarity``'s probe algebra (the same probe keys, dimension rule,
+scoring tail and near-dup pair kernel as the recompute operators) over the
+index scan instead of over a re-signed table: the ``isin`` filter on the
+partition column becomes a `PartitionFilters` entry on every parquet scan
+(asserted in tests/test_ann_index.py), so Spark lists and reads just the
 probed directories — n_probe/n_cells of the data for IVF, the ≤hamming
 signature ball for LSH — instead of scanning everything and filtering.
 
 Layout under ``path``:
     _index/<v>.json  the versioned manifest: kind, dim, n_planes+seed
-                     (LSH) or n_cells+centroids (IVF), the current
-                     ``generation``, and the committed ``appends`` with
-                     their row counts. Readers take the highest <v>.
+                     (LSH) or n_cells (IVF), the current ``generation``,
+                     the committed ``appends`` not yet compacted and the
+                     ``folded`` ones, each with its row count. Readers
+                     take the highest <v>.
     g<N>/vectors     parquet, partitioned by sig= / cell=
     g<N>/centroids   (IVF only) parquet: cell_id, centroid array<double>
     g<N>/deltas/<append_id>/
@@ -29,14 +33,14 @@ Layout under ``path``:
 
 Generations are immutable: a build writes a new ``g<N>``, an append adds
 a delta dataset, and ``compact_index`` folds base + deltas into a new
-``g<N>``. Each then commits by renaming a tmp file to the next version
-name, which must not exist yet — that rename is the index's only commit
-point, so a writer that dies before it leaves the previous version (and
-its files) probe-able, and a writer that raced another one refuses to
-publish. After publishing, builds and compactions delete what the new
-version no longer names; a dead append's unlisted delta is reclaimed by
-``vacuum_index``. Probes union the base with every listed non-empty delta
-(each scan still partition-pruned).
+``g<N>``, moving their entries from ``appends`` to ``folded``. Each then
+commits by renaming a tmp file to the next version name, which must not
+exist yet — that rename is the index's only commit point, so a writer that
+dies before it leaves the previous version (and its files) probe-able, and
+a writer that raced another one refuses to publish. After publishing,
+builds and compactions delete what the new version no longer names; a dead
+append's unlisted delta is reclaimed by ``vacuum_index``. Probes union the
+base with every non-empty delta in ``appends``.
 
 Everything needed to probe is read back from the index (planes are re-seeded
 from the manifest, centroids from their table), so a probe never needs the
@@ -56,18 +60,21 @@ from __future__ import annotations
 import json
 import re
 from functools import reduce
-from itertools import combinations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from sparkocr import checkpoint
+from sparkocr.pipeline import caching
 from sparkocr.pipeline.similarity import (
     N_PLANES,
     _SEED,
-    _as_double,
-    cosine_expr,
+    _cosine_pairs,
+    _ivf_keys,
+    _lsh_keys,
+    _of_dim,
+    _probe_topk,
     detect_dim,
     hyperplanes,
     ivf_cell_col,
@@ -77,6 +84,8 @@ from sparkocr.pipeline.similarity import (
 from sparkocr.storage import APPEND_ID_RE
 
 _VERSION_RE = re.compile(r"^(\d+)\.json$")
+#: each kind's partition column
+_PCOL = {"lsh": "sig", "ivf": "cell"}
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -100,10 +109,11 @@ def _versions(spark: SparkSession, path: str) -> list[int]:
     ]
 
 
-def _read_manifest(spark: SparkSession, path: str) -> dict:
-    """The newest manifest, with its ``version``. An unparseable newest
-    manifest raises: falling back to an older version would revive
-    generations its successor's writer has already deleted."""
+def _read_manifest(spark: SparkSession, path: str, kind: str | None = None) -> dict:
+    """The newest manifest, with its ``version``. An index of an unknown
+    kind raises, and so does one of another ``kind`` when it is given. An
+    unparseable newest manifest raises: falling back to an older version
+    would revive generations its successor's writer has already deleted."""
     versions = _versions(spark, path)
     if not versions:
         raise ValueError(
@@ -121,7 +131,11 @@ def _read_manifest(spark: SparkSession, path: str) -> dict:
             f"ANN index manifest {mpath} is unparseable: restore it or "
             "rebuild the index"
         ) from e
-    return {**m, "version": v}
+    if m["kind"] not in _PCOL or kind not in (None, m["kind"]):
+        want = kind or " or ".join(_PCOL)
+        raise ValueError(f"index at {path} is kind={m['kind']}, expected {want}")
+    # a manifest written without ``folded`` records no folded appends
+    return {"folded": [], **m, "version": v}
 
 
 def _publish(spark: SparkSession, path: str, m: dict) -> None:
@@ -167,29 +181,48 @@ def _collect(spark: SparkSession, path: str, m: dict) -> None:
             fs.delete(st.getPath(), True)
 
 
-def _check_vectors_nonempty(spark: SparkSession, gen: str, builder: str) -> None:
-    """partitionBy over zero rows writes only _SUCCESS: a probe would
-    later die with an opaque UNABLE_TO_INFER_SCHEMA — fail loudly at
-    build time instead, before publishing, so the previous index stays.
-    Detected AFTER the write (a footer-only driver read), not with a
-    pre-write isEmpty(), which is an extra action recomputing the whole
-    upstream DAG just to improve an error message. Only the
-    schema-inference signature is relabelled as empty input; any other
-    read failure (FS, permissions, corruption) propagates as-is."""
+def _read_written(spark: SparkSession, written: str, drop: str) -> DataFrame | None:
+    """The parquet just written at ``written``, or None (after deleting
+    ``drop``) when the write held no rows: partitionBy over zero rows
+    writes only _SUCCESS, which reads as UNABLE_TO_INFER_SCHEMA. Detected
+    AFTER the write (a footer-only driver read), not with a pre-write
+    isEmpty(), which is an extra action recomputing the whole upstream
+    DAG. Any other read failure (FS, permissions, corruption) propagates
+    as-is."""
     try:
-        spark.read.parquet(f"{gen}/vectors")
+        return spark.read.parquet(written)
     except Exception as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            _delete(spark, gen)
-            raise ValueError(
-                f"{builder}: input table has no rows — nothing was indexed"
-            ) from e
-        raise
+        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+            raise
+        _delete(spark, drop)
+        return None
 
 
 def _centroids(spark: SparkSession, path: str, m: dict) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/{m['centroids']}").orderBy("cell_id").collect()
+    rows = spark.read.parquet(f"{_gen(path, m)}/centroids").orderBy("cell_id").collect()
     return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
+
+
+def _planes(m: dict) -> np.ndarray:
+    return hyperplanes(m["dim"], m["n_planes"], m["seed"])
+
+
+def _stamp(spark: SparkSession, path: str, m: dict, emb: DataFrame) -> DataFrame:
+    """``emb`` with the index's partition column, computed from the
+    index's OWN stored parameters (re-seeded planes / persisted centroids),
+    never re-derived from data."""
+    if m["kind"] == "lsh":
+        col = lsh_signature_col(F.col("embedding"), _planes(m))
+    else:
+        col = ivf_cell_col(F.col("embedding"), _centroids(spark, path, m))
+    return emb.withColumn(_PCOL[m["kind"]], col)
+
+
+def _check_query_dim(query: list[float], m: dict, caller: str) -> None:
+    # same caller bug ivf_topk names: without this the probe dies in numpy
+    # with an opaque shapes-not-aligned / broadcast error
+    if len(query) != m["dim"]:
+        raise ValueError(f"{caller}: query dim {len(query)} != index dim {m['dim']}")
 
 
 def vacuum_index(
@@ -237,38 +270,37 @@ def vacuum_index(
     return {"reclaimed": sorted(reclaimed), "skipped_recent": sorted(skipped)}
 
 
-def _scan_vectors(spark: SparkSession, path: str, m: dict, flt) -> DataFrame:
-    """The probe-side scan of manifest ``m``: base vectors plus every
-    listed non-empty delta, each with the SAME partition filter (pruning
-    applies per scan root — sig=/cell= discovery runs under each delta dir
-    exactly as under vectors/). Unlisted deltas (append in progress or
-    died before publishing) are invisible."""
+def _scan_vectors(spark: SparkSession, path: str, m: dict) -> DataFrame:
+    """Manifest ``m``'s rows: base vectors plus every non-empty delta in
+    ``appends``. A probe filters the union; Spark pushes the filter into
+    each scan, so the partition filter prunes every scan root (sig=/cell=
+    discovery runs under each delta dir exactly as under vectors/).
+    Unlisted deltas (append in progress or died before publishing) are
+    invisible."""
     gen = _gen(path, m)
-    base = spark.read.parquet(f"{gen}/vectors").filter(flt)
     frames = [
-        spark.read.parquet(f"{gen}/deltas/{a['append_id']}").filter(flt)
+        spark.read.parquet(f"{gen}/deltas/{a['append_id']}")
         for a in m["appends"]
         if a["rows"] > 0
     ]
-    return reduce(DataFrame.unionByName, frames, base)
+    return reduce(DataFrame.unionByName, frames, spark.read.parquet(f"{gen}/vectors"))
 
 
 def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
     """Incrementally add ``emb``'s rows to a built index — the daily-
     increment path a 10^9-vector pipeline needs (a full rebuild re-shuffles
     the entire corpus to add 0.1% new rows). Rows are stamped with the
-    index's OWN stored parameters (re-seeded planes / persisted centroids,
-    never re-derived from data), written as ``g<N>/deltas/<append_id>/``
+    index's stored parameters, written as ``g<N>/deltas/<append_id>/``
     in the same partition layout, then committed by publishing the next
     manifest version with the append listed.
 
-    Semantics: exactly-once per ``append_id`` while the manifest lists it —
-    re-running a committed id is a no-op (``{"skipped": True}``),
-    re-running a crashed one overwrites its partial files; an unlisted
-    delta is invisible to probes. For IVF the centroids stay fixed
-    (standard for IVF appends): recall degrades if the appended
-    distribution drifts from the trained quantizer — compact + rebuild
-    periodically.
+    Semantics: exactly-once per ``append_id`` until the next build —
+    re-running a committed id is a no-op (``{"skipped": True}``), also
+    after ``compact_index`` has folded it; re-running a crashed one
+    overwrites its partial files; an unlisted delta is invisible to
+    probes. For IVF the centroids stay fixed (standard for IVF appends):
+    recall degrades if the appended distribution drifts from the trained
+    quantizer — compact + rebuild periodically.
 
     Returns ``{"append_id", "rows", "skipped"}``."""
     if not APPEND_ID_RE.match(append_id or ""):
@@ -278,30 +310,17 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
         )
     spark = emb.sparkSession
     m = _read_manifest(spark, path)  # refuses half-built indexes by design
-    for a in m["appends"]:
+    for a in m["folded"] + m["appends"]:
         if a["append_id"] == append_id:
             return {"append_id": append_id, "rows": a["rows"], "skipped": True}
-    if m["kind"] == "lsh":
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        stamped = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-        pcol = "sig"
-    elif m["kind"] == "ivf":
-        cents = _centroids(spark, path, m)
-        stamped = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-        pcol = "cell"
-    else:
-        raise ValueError(f"index at {path} has unknown kind={m['kind']}")
+    pcol = _PCOL[m["kind"]]
     dpath = f"{_gen(path, m)}/deltas/{append_id}"
-    stamped.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(dpath)
-    try:
-        rows = spark.read.parquet(dpath).count()  # footer-only metadata count
-    except Exception as e:
-        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        rows = 0  # empty increment: listed with zero rows, nothing to scan
-        _delete(spark, dpath)
+    _stamp(spark, path, m, emb).repartition(pcol).write.mode("overwrite").partitionBy(
+        pcol
+    ).parquet(dpath)
+    delta = _read_written(spark, dpath, dpath)
+    rows = 0 if delta is None else delta.count()  # footer-only metadata count
     if rows:
-        delta = spark.read.parquet(dpath)
         # column-set check BEFORE commit: probes union every listed delta
         # with unionByName, so a delta whose columns differ from the base
         # (the daily job added/renamed one) would crash every future
@@ -324,8 +343,7 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
         # Guarded on a non-null embedding existing: an all-null increment
         # has no dimension (detect_dim would return its global fallback
         # and fail spuriously) and is accepted exactly like build does —
-        # its rows sit in sig 0 / a junk cell and every probe's
-        # size(embedding)==dim restriction already screens them out.
+        # probes never read its rows.
         if delta.where(F.col("embedding").isNotNull()).limit(1).count():
             got = detect_dim(delta)
             if got != m["dim"]:
@@ -334,45 +352,69 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
                     f"append_to_index: increment dim {got} != index dim "
                     f"{m['dim']} — delta discarded, nothing committed"
                 )
-    appends = m["appends"] + [{"append_id": append_id, "rows": int(rows)}]
+    appends = m["appends"] + [{"append_id": append_id, "rows": rows}]
     _publish(spark, path, {**m, "version": m["version"] + 1, "appends": appends})
-    return {"append_id": append_id, "rows": int(rows), "skipped": False}
+    return {"append_id": append_id, "rows": rows, "skipped": False}
 
 
 def compact_index(spark: SparkSession, path: str) -> dict:
     """Fold the listed deltas into a new generation (bounding the probe's
-    scan-root count) and publish it as the next version; then delete the
-    old generation and versions. A compact that dies before publishing
-    leaves the old version probe-able and its half-written generation is
-    overwritten by the next try; one that dies after publishing is
-    finished by the next call. If another writer published since the
-    fold's base was read (e.g. the next daily append), the publish raises
-    and that writer's version stands — its rows are folded next time.
+    scan-root count) and publish it as the next version, with the folded
+    appends moved to ``folded``; then delete the old generation and
+    versions. A compact that dies before publishing leaves the old
+    version probe-able and its half-written generation is overwritten by
+    the next try; one that dies after publishing is finished by the next
+    call. If another writer published since the fold's base was read
+    (e.g. the next daily append), the publish raises and that writer's
+    version stands — its rows are folded next time.
 
     Returns ``{"compacted": n_deltas, "rows": total}`` (``rows`` is None
     when no new generation was written)."""
     m = _read_manifest(spark, path)
     folded, rows = m["appends"], None
     if folded:
-        new = {**m, "version": m["version"] + 1, "appends": []}
+        new = {
+            **m, "version": m["version"] + 1, "appends": [],
+            "folded": m["folded"] + folded,
+        }
         if any(a["rows"] for a in folded):
             new["generation"] = new["version"]
-            pcol = "sig" if m["kind"] == "lsh" else "cell"
-            merged = _scan_vectors(spark, path, m, F.lit(True))
-            merged.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
-                f"{_gen(path, new)}/vectors"
-            )
+            pcol = _PCOL[m["kind"]]
+            _scan_vectors(spark, path, m).repartition(pcol).write.mode(
+                "overwrite"
+            ).partitionBy(pcol).parquet(f"{_gen(path, new)}/vectors")
             if m["kind"] == "ivf":
-                new["centroids"] = f"g{new['generation']}/centroids"
-                spark.read.parquet(f"{path}/{m['centroids']}").write.mode(
+                spark.read.parquet(f"{_gen(path, m)}/centroids").write.mode(
                     "overwrite"
-                ).parquet(f"{path}/{new['centroids']}")
+                ).parquet(f"{_gen(path, new)}/centroids")
         _publish(spark, path, new)
         if new["generation"] != m["generation"]:
             rows = int(spark.read.parquet(f"{_gen(path, new)}/vectors").count())
         m = new
     _collect(spark, path, m)
     return {"compacted": len(folded), "rows": rows}
+
+
+def _build(
+    stamped: DataFrame, path: str, builder: str, params: dict, centroids=None
+) -> None:
+    """Write ``stamped`` (rows carrying the kind's partition column) as a
+    new generation, plus the IVF ``centroids`` frame, and publish it with
+    ``params``; then delete the previous index. An empty input raises
+    before publishing, so the previous index stays."""
+    spark = stamped.sparkSession
+    v = max(_versions(spark, path), default=0) + 1
+    m = {"version": v, "generation": v, "appends": [], "folded": [], **params}
+    gen, pcol = _gen(path, m), _PCOL[m["kind"]]
+    stamped.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
+        f"{gen}/vectors"
+    )
+    if _read_written(spark, f"{gen}/vectors", gen) is None:
+        raise ValueError(f"{builder}: input table has no rows — nothing was indexed")
+    if centroids is not None:
+        centroids.coalesce(1).write.mode("overwrite").parquet(f"{gen}/centroids")
+    _publish(spark, path, m)
+    _collect(spark, path, m)
 
 
 def build_lsh_index(
@@ -388,32 +430,12 @@ def build_lsh_index(
     if dim is None:
         dim = detect_dim(emb)
     planes = hyperplanes(dim, n_planes, seed)
-    spark = emb.sparkSession
-    v = max(_versions(spark, path), default=0) + 1
-    sigged = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-    sigged.repartition("sig").write.mode("overwrite").partitionBy("sig").parquet(
-        f"{path}/g{v}/vectors"
+    _build(
+        emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes)),
+        path,
+        "build_lsh_index",
+        {"kind": "lsh", "dim": int(dim), "n_planes": int(n_planes), "seed": int(seed)},
     )
-    _check_vectors_nonempty(spark, f"{path}/g{v}", "build_lsh_index")
-    m = {
-        "version": v, "kind": "lsh", "dim": int(dim), "n_planes": int(n_planes),
-        "seed": int(seed), "generation": v, "appends": [],
-    }
-    _publish(spark, path, m)
-    _collect(spark, path, m)
-
-
-def _sig_ball(qsig: int, n_planes: int, hamming: int) -> list[int]:
-    """All signatures within ``hamming`` bit flips of ``qsig`` —
-    1 + C(n,1) + ... + C(n,hamming) values (79 at n=12, h=2)."""
-    out = [qsig]
-    for h in range(1, hamming + 1):
-        for bits in combinations(range(n_planes), h):
-            s = qsig
-            for b in bits:
-                s ^= 1 << b
-            out.append(s)
-    return out
 
 
 def lsh_topk_indexed(
@@ -426,40 +448,10 @@ def lsh_topk_indexed(
     """Probe a materialized LSH index: exact cosine inside the signature
     ball, reading ONLY the matching sig= partitions (partition pruning —
     the scan never touches the other directories)."""
-    m = _read_manifest(spark, path)
-    if m["kind"] != "lsh":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
-    if len(query) != m["dim"]:
-        # same caller bug ivf_topk names: without this the probe dies in
-        # np.dot with an opaque shapes-not-aligned error
-        raise ValueError(
-            f"lsh_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
-        )
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-    qv = np.asarray(query, dtype=float)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qv, p)) > 0:
-            qsig |= 1 << i
-    probe_sigs = _sig_ball(qsig, m["n_planes"], hamming)
-    # size==dim mirrors lsh_topk: null / wrong-dim rows are zero-filled
-    # into sig 0 at build, so a ball containing 0 would surface them as
-    # null-cosine junk whenever k exceeds the real match count
-    vecs = _scan_vectors(
-        spark,
-        path,
-        m,
-        F.col("sig").isin(probe_sigs) & (F.size("embedding") == int(m["dim"])),
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        vecs.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    m = _read_manifest(spark, path, "lsh")
+    _check_query_dim(query, m, "lsh_topk_indexed")
+    keys = _lsh_keys(query, _planes(m), hamming)
+    return _probe_topk(_scan_vectors(spark, path, m), "sig", keys, query, k)
 
 
 def near_dups_indexed(
@@ -490,10 +482,9 @@ def near_dups_indexed(
     ran): past the bound, chunk the increment or run the full operator.
     Index copies of the increment's vec_ids are excluded from the old
     side, so the operator is correct before or after ``append_to_index``
-    of the same increment. Wrong-dim / null embeddings on either side
-    are screened by the same ``size(embedding) == dim`` restriction as
-    every probe (and as ``embedding_near_dups`` itself applies), so the
-    two paths see identical bucket membership.
+    of the same increment. Both sides keep only rows of the index's
+    dimension, as ``embedding_near_dups`` does, and both paths join with
+    the same pair kernel, so they see identical bucket membership.
 
     Output ``(id1, id2, cosine)`` with id1 < id2 — agrees exactly with
     ``embedding_near_dups`` over old∪new restricted to pairs touching a
@@ -509,18 +500,9 @@ def near_dups_indexed(
     from sparkocr.pipeline.dedup import _require_cap, cap_hot_buckets, combined_counts
 
     _require_cap(bucket_max, cap_metrics)
-    m = _read_manifest(spark, path)
-    if m["kind"] != "lsh":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-    dim = int(m["dim"])
-    from sparkocr.pipeline import caching
-
-    sig_new = caching.register(
-        new_emb.filter(F.size("embedding") == dim).withColumn(
-            "sig", lsh_signature_col(F.col("embedding"), planes)
-        )
-    )
+    m = _read_manifest(spark, path, "lsh")
+    dim = m["dim"]
+    sig_new = caching.register(_stamp(spark, path, m, new_emb.filter(_of_dim(dim))))
     probe_sigs = [
         r["sig"]
         for r in sig_new.select("sig").distinct().limit(max_probe_sigs + 1).collect()
@@ -541,9 +523,11 @@ def near_dups_indexed(
             "similarity.embedding_near_dups over the combined corpus"
         )
     new_ids = sig_new.select("vec_id")
-    old = _scan_vectors(
-        spark, path, m, F.col("sig").isin(probe_sigs) & (F.size("embedding") == dim)
-    ).join(F.broadcast(new_ids), "vec_id", "left_anti")
+    old = (
+        _scan_vectors(spark, path, m)
+        .filter(F.col("sig").isin(probe_sigs) & _of_dim(dim))
+        .join(F.broadcast(new_ids), "vec_id", "left_anti")
+    )
     if bucket_max is not None:
         # the cap branch reads `old` twice (counts + join): cache the
         # pruned scan so the partition listing + anti-join run once
@@ -552,33 +536,8 @@ def near_dups_indexed(
             sig_new, ["sig"], bucket_max, cap_metrics,
             counts=combined_counts(sig_new, old, ["sig"]), broadcast_small=True,
         )
-
-    def _pairs(a, b, strict):
-        cond = F.col("a.sig") == F.col("b.sig")
-        cond = cond & (
-            (F.col("a.vec_id") < F.col("b.vec_id"))
-            if strict
-            else (F.col("a.vec_id") != F.col("b.vec_id"))
-        )
-        return (
-            a.alias("a")
-            .join(b.alias("b"), cond)
-            .select(
-                F.least("a.vec_id", "b.vec_id").alias("id1"),
-                F.greatest("a.vec_id", "b.vec_id").alias("id2"),
-                F.round(
-                    cosine_expr(
-                        _as_double(F.col("a.embedding")),
-                        _as_double(F.col("b.embedding")),
-                    ),
-                    6,
-                ).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    new_new = _pairs(sig_new, sig_new, strict=True)
-    new_old = _pairs(sig_new, old, strict=False)
+    new_new = _cosine_pairs(sig_new, sig_new, threshold, strict=True)
+    new_old = _cosine_pairs(sig_new, old, threshold, strict=False)
     return new_new.unionByName(new_old)
 
 
@@ -591,28 +550,18 @@ def build_ivf_index(
     """Materialize ``emb`` partitioned by IVF cell at ``path`` as a new
     generation; centroids (from ``trainer(emb, n_cells)``) are persisted
     beside the vectors so probes replay the exact assignment. A previous
-    index at ``path`` stays probe-able until the new one is published."""
+    index at ``path`` stays probe-able until the new one is published.
+    The default trainer rejects an empty table before anything is
+    written; the build's own empty check catches a custom trainer's."""
     cents = np.asarray(trainer(emb, n_cells), dtype=np.float64)
-    spark = emb.sparkSession
-    v = max(_versions(spark, path), default=0) + 1
-    celled = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-    celled.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/g{v}/vectors"
-    )
-    # the default trainer rejects an empty table before anything is
-    # written, but a custom trainer with precomputed centroids would
-    # otherwise build a complete, probe-crashing empty index
-    _check_vectors_nonempty(spark, f"{path}/g{v}", "build_ivf_index")
     cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    spark.createDataFrame(cent_rows, "cell_id int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/g{v}/centroids")
-    m = {
-        "version": v, "kind": "ivf", "dim": int(cents.shape[1]), "n_cells": len(cents),
-        "generation": v, "centroids": f"g{v}/centroids", "appends": [],
-    }
-    _publish(spark, path, m)
-    _collect(spark, path, m)
+    _build(
+        emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents)),
+        path,
+        "build_ivf_index",
+        {"kind": "ivf", "dim": int(cents.shape[1]), "n_cells": len(cents)},
+        emb.sparkSession.createDataFrame(cent_rows, "cell_id int, centroid array<double>"),
+    )
 
 
 def ivf_topk_indexed(
@@ -624,33 +573,7 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """Probe a materialized IVF index: exact cosine inside the ``n_probe``
     cells nearest the query, reading ONLY those cell= partitions."""
-    m = _read_manifest(spark, path)
-    if m["kind"] != "ivf":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected ivf")
-    if len(query) != m["dim"]:
-        raise ValueError(
-            f"ivf_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
-        )
-    cents = _centroids(spark, path, m)
-    qv = np.asarray(query, dtype=np.float64)
-    d = ((cents - qv[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
-    # same size==dim restriction ivf_topk applies: zero-filled null /
-    # wrong-dim rows got a garbage cell at build time and would surface
-    # as null-cosine rows whenever k exceeds the matching-row count —
-    # without it the indexed and recompute probes diverge on dirty tables
-    vecs = _scan_vectors(
-        spark,
-        path,
-        m,
-        F.col("cell").isin(probe) & (F.size("embedding") == int(m["dim"])),
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        vecs.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    m = _read_manifest(spark, path, "ivf")
+    _check_query_dim(query, m, "ivf_topk_indexed")
+    keys = _ivf_keys(query, _centroids(spark, path, m), n_probe)
+    return _probe_topk(_scan_vectors(spark, path, m), "cell", keys, query, k)

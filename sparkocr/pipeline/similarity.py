@@ -1,18 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the correctness baseline (pure JVM:
-``aggregate``/``zip_with`` — no Python in the scoring loop), plus an
-LSH-bucketed variant (random-hyperplane signatures) as the scale path:
-at 100 TB you never brute-force 10^9 vectors against a query — you bucket
-by signature, probe the query's bucket(s), and brute-force only the bucket.
+``aggregate``/``zip_with`` — no Python in the scoring loop), plus
+LSH-bucketed (random-hyperplane signatures) and IVF (coarse-quantizer
+cells) variants as the scale path: at 100 TB you never brute-force 10^9
+vectors against a query — you bucket, probe the query's bucket(s), and
+brute-force only those.
 
-Hyperplanes are derived deterministically (seeded numpy) and injected as
-literal arrays, so results are reproducible and the same plan runs on any
-cluster size. Embedding near-dup (cosine ≥ τ pairs) reuses the bucketed
-join.
+Hyperplanes are derived deterministically (seeded numpy) and applied by an
+Arrow-batched pandas UDF (one matrix multiply per batch), so results are
+reproducible and the same plan runs on any cluster size.
+
+This module is the one home of the embedding-probe algebra, shared with
+the materialized index (``ann_index``): a probe picks partition keys (the
+query signature's hamming ball, ``_lsh_keys``, or the nearest IVF cells,
+``_ivf_keys``), keeps the candidate rows of those keys and of the query's
+dimension, and scores them with ``cosine_topk``; near-dup pairs (cosine ≥ τ
+inside a full-signature bucket) come from one join kernel,
+``_cosine_pairs``.
 """
 
 from __future__ import annotations
+
+from itertools import combinations
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -62,7 +72,8 @@ def _as_double(col):
 
 
 def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
-    """Brute-force top-k by cosine to a literal query vector."""
+    """Brute-force top-k by cosine to a literal query vector — the one
+    scoring tail: every probe builds its candidate frame and ends here."""
     q = F.array(*[F.lit(float(v)) for v in query])
     e = _as_double(F.col("embedding"))
     return (
@@ -70,6 +81,27 @@ def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
+
+
+def _of_dim(dim: int):
+    """The row rule of every probe and pair join: the embedding has the
+    index's (query's) dimension. The signature and cell UDFs zero-fill
+    null / wrong-dim rows (``_embedding_matrix``) into sig 0 or an
+    arbitrary cell, where they would surface as null-cosine rows whenever
+    k exceeds the real match count and count toward a near-dup bucket's
+    ``bucket_max``; applied on both the recompute and the indexed path,
+    the two agree on dirty tables."""
+    return F.size("embedding") == int(dim)
+
+
+def _probe_topk(
+    cands: DataFrame, col: str, keys: list[int], query: list[float], k: int
+) -> DataFrame:
+    """``cosine_topk`` over the rows of ``cands`` whose ``col`` (sig / cell)
+    is one of the probed ``keys``. On an index scan ``col`` is the
+    partition column, so the ``isin`` lands in every scan root's
+    PartitionFilters."""
+    return cosine_topk(cands.filter(F.col(col).isin(keys) & _of_dim(len(query))), query, k)
 
 
 def hyperplanes(dim: int = DIM, n_planes: int = N_PLANES, seed: int = _SEED) -> np.ndarray:
@@ -89,18 +121,41 @@ def lsh_signature_col(emb_col, planes: np.ndarray):
     from pyspark.sql.pandas.functions import pandas_udf
     import pandas as pd
 
-    planes_t = planes.T.copy()  # [dim, n_planes]
     dim = planes.shape[1]
-    weights = (1 << np.arange(planes.shape[0], dtype=np.int64))
 
     def _sig(embs):
         if not len(embs):
             return pd.Series([], dtype="int64")
-        mat = _embedding_matrix(embs, dim)
-        bits = (mat @ planes_t) > 0
-        return pd.Series(bits @ weights, dtype="int64")
+        return pd.Series(_signatures(_embedding_matrix(embs, dim), planes), dtype="int64")
 
     return pandas_udf(_sig, "long")(emb_col)
+
+
+def _signatures(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Bit-packed signature of each row of ``mat``: bit i is set when the
+    row lies on the positive side of hyperplane i. Rows and queries are
+    signed by this one function, so a vector always probes its own bucket."""
+    bits = (mat @ planes.T) > 0
+    return bits @ (1 << np.arange(planes.shape[0], dtype=np.int64))
+
+
+def _sig_ball(qsig: int, n_planes: int, hamming: int) -> list[int]:
+    """All signatures within ``hamming`` bit flips of ``qsig`` —
+    1 + C(n,1) + ... + C(n,hamming) values (79 at n=12, h=2)."""
+    out = [qsig]
+    for h in range(1, hamming + 1):
+        for bits in combinations(range(n_planes), h):
+            s = qsig
+            for b in bits:
+                s ^= 1 << b
+            out.append(s)
+    return out
+
+
+def _lsh_keys(query: list[float], planes: np.ndarray, hamming: int) -> list[int]:
+    """The LSH probe's keys: the query signature's ``hamming`` ball."""
+    qsig = int(_signatures(np.asarray([query], dtype=np.float64), planes)[0])
+    return _sig_ball(qsig, planes.shape[0], hamming)
 
 
 def lsh_topk(emb: DataFrame, query: list[float], k: int = 10, n_planes: int = N_PLANES) -> DataFrame:
@@ -108,30 +163,8 @@ def lsh_topk(emb: DataFrame, query: list[float], k: int = 10, n_planes: int = N_
     hamming ≤ 2 of the query's signature (bucket probe), then exact cosine.
     Recall < 1 by design; the scale path for 10^9-vector tables."""
     planes = hyperplanes(len(query), n_planes)
-    qv = np.asarray(query, dtype=float)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qv, p)) > 0:
-            qsig |= 1 << i
     sigged = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-    # size==dim keeps null / wrong-dim rows out of the probe: they are
-    # zero-filled into sig 0 by the signature UDF, so a ball containing 0
-    # would surface them as null-cosine junk whenever k exceeds the real
-    # match count (mirrors ivf_topk, and ann_index probes apply the same
-    # restriction so indexed ≡ recompute holds on dirty tables)
-    probe = sigged.filter(
-        (F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= 2)
-        & (F.size("embedding") == len(query))
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        probe.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _probe_topk(sigged, "sig", _lsh_keys(query, planes, 2), query, k)
 
 
 def _hash_sample(emb: DataFrame, n: int, seed: int) -> DataFrame:
@@ -266,6 +299,14 @@ def ivf_cell_col(emb_col, centroids: np.ndarray):
     return pandas_udf(_cell, "int")(emb_col)
 
 
+def _ivf_keys(query: list[float], centroids: np.ndarray, n_probe: int) -> list[int]:
+    """The IVF probe's keys: the ``n_probe`` cells nearest the query. The
+    sort is stable because duplicate centroids (first-n seeding over
+    exact-dup embeddings) tie on distance."""
+    d = ((centroids - np.asarray(query, dtype=np.float64)[None, :]) ** 2).sum(axis=1)
+    return [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+
+
 def ivf_topk(
     emb: DataFrame, query: list[float], k: int = 10,
     n_cells: int = 16, n_probe: int = 4, dim: int | None = None,
@@ -279,7 +320,6 @@ def ivf_topk(
     same table): it skips ``detect_dim``'s sample scan, leaving one
     driver-blocking job (the centroid prefix) before the probe."""
     cents = ivf_centroids(emb, n_cells, dim=dim)
-    qv = np.asarray(query, dtype=np.float64)
     if cents.shape[1] != len(query):
         # a numpy broadcast error here would surface as an opaque task
         # failure; the mismatch is a caller bug (querying a table of a
@@ -287,31 +327,8 @@ def ivf_topk(
         raise ValueError(
             f"ivf_topk: query dim {len(query)} != table majority dim {cents.shape[1]}"
         )
-    d = ((cents - qv[None, :]) ** 2).sum(axis=1)
-    # stable sort: duplicate centroids (first-n seeding over exact-dup
-    # embeddings) tie on distance, and the probe set must match
-    # ann_index.ivf_topk_indexed's cell choice bit-for-bit
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
     celled = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-    q = F.array(*[F.lit(float(v)) for v in query])
-    # restrict the probe to rows of the centroid dimension: null /
-    # wrong-dim rows get a garbage cell from the zero-filled projection
-    # and a null cosine from the length-mismatched zip_with — without the
-    # filter they surface as null-cosine rows whenever k exceeds the
-    # matching-row count, and an explicit dim= that matches the query but
-    # only a junk minority of the table would "succeed" on junk alone
-    return (
-        celled.filter(
-            F.col("cell").isin(probe)
-            & (F.size("embedding") == int(cents.shape[1]))
-        )
-        .select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _probe_topk(celled, "cell", _ivf_keys(query, cents, n_probe), query, k)
 
 
 def detect_dim(emb: DataFrame, sample_size: int = 4096, seed: int = _SEED) -> int:
@@ -369,18 +386,29 @@ def embedding_near_dups(
     # products are the expensive projection; registered with caching —
     # consumers call caching.release_all() after the action (dedup.py note)
     sigged = caching.register(
-        emb.filter(F.size("embedding") == int(dim)).withColumn(
+        emb.filter(_of_dim(dim)).withColumn(
             "sig", lsh_signature_col(F.col("embedding"), planes)
         )
     )
     if bucket_max is not None:
         sigged = cap_hot_buckets(sigged, ["sig"], bucket_max, cap_metrics)
-    a, b = sigged.alias("a"), sigged.alias("b")
+    return _cosine_pairs(sigged, sigged, threshold, strict=True)
+
+
+def _cosine_pairs(a: DataFrame, b: DataFrame, threshold: float, strict: bool) -> DataFrame:
+    """The near-dup pair kernel: rows of ``a`` and ``b`` sharing a full
+    signature, with rounded cosine ≥ ``threshold``, as ``(id1, id2,
+    cosine)`` with id1 < id2. ``strict`` joins ``a.vec_id < b.vec_id``
+    (a self-join, each pair once); otherwise ``a.vec_id != b.vec_id``
+    (two disjoint sides, either id order)."""
+    a_id, b_id = F.col("a.vec_id"), F.col("b.vec_id")
+    ids = (a_id < b_id) if strict else (a_id != b_id)
     return (
-        a.join(b, (F.col("a.sig") == F.col("b.sig")) & (F.col("a.vec_id") < F.col("b.vec_id")))
+        a.alias("a")
+        .join(b.alias("b"), (F.col("a.sig") == F.col("b.sig")) & ids)
         .select(
-            F.col("a.vec_id").alias("id1"),
-            F.col("b.vec_id").alias("id2"),
+            F.least("a.vec_id", "b.vec_id").alias("id1"),
+            F.greatest("a.vec_id", "b.vec_id").alias("id2"),
             F.round(
                 cosine_expr(_as_double(F.col("a.embedding")), _as_double(F.col("b.embedding"))), 6
             ).alias("cosine"),

@@ -55,6 +55,28 @@ def test_lsh_indexed_matches_operator(spark, emb, query, lsh_index):
     assert got == want
 
 
+@pytest.mark.parametrize("hamming", [0, 1])
+def test_lsh_indexed_small_hamming_ball(spark, query, lsh_index, hamming):
+    """Below the default ball of 2, the probe scores exactly the stored
+    rows whose sig is within ``hamming`` bits of the query's signature
+    (signed here plane by plane, independently of the probe)."""
+    from pyspark.sql import functions as F
+
+    from sparkocr.pipeline.ann_index import _read_manifest, _scan_vectors, lsh_topk_indexed
+    from sparkocr.pipeline.similarity import cosine_topk, hyperplanes
+
+    m = _read_manifest(spark, lsh_index)
+    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
+    qsig = sum(1 << i for i, p in enumerate(planes) if float(np.dot(query, p)) > 0)
+    within = _scan_vectors(spark, lsh_index, m).filter(
+        F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= hamming
+    )
+    k = within.count() + 5  # every row in the ball, none cut by the limit
+    want = _rows(cosine_topk(within, query, k=k))
+    got = _rows(lsh_topk_indexed(spark, lsh_index, query, k=k, hamming=hamming))
+    assert got == want and want
+
+
 def test_ivf_indexed_matches_operator(spark, emb, query, ivf_index):
     from sparkocr.pipeline.ann_index import ivf_topk_indexed
     from sparkocr.pipeline.similarity import ivf_topk
@@ -437,6 +459,36 @@ def test_compact_folds_deltas_and_resumes(spark, emb, query, tmp_path, monkeypat
     assert sorted(os.listdir(path)) == ["_index", "g6"]
     assert os.listdir(os.path.join(path, "_index")) == ["6.json"]
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == want2
+
+
+def test_folded_append_id_stays_skipped_across_compaction(spark, emb, tmp_path):
+    """Exactly-once per append_id survives compaction: re-appending an id
+    that a compact has folded is skipped and lands no rows; only a build
+    starts the id list afresh."""
+    from sparkocr.pipeline.ann_index import (
+        _read_manifest,
+        _scan_vectors,
+        append_to_index,
+        build_lsh_index,
+        compact_index,
+    )
+
+    def scan():
+        return _scan_vectors(spark, path, _read_manifest(spark, path))
+
+    path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
+    first = append_to_index(rest, path, "inc-a")
+    compact_index(spark, path)
+    n = scan().count()
+    assert n == emb.count()
+    r = append_to_index(rest, path, "inc-a")
+    assert r == {"append_id": "inc-a", "rows": first["rows"], "skipped": True}
+    after = scan()
+    assert after.count() == n
+    assert after.select("vec_id").distinct().count() == n
+    build_lsh_index(emb.filter("vec_id % 2 = 0"), path)
+    assert _read_manifest(spark, path)["folded"] == []
+    assert append_to_index(rest, path, "inc-a")["skipped"] is False
 
 
 def test_rebuild_clears_stale_deltas(spark, emb, query, tmp_path):
@@ -909,12 +961,10 @@ def _view(spark, path):
     """What a probe sees: the newest manifest's planes and every
     (vec_id, sig) of its scan (sorted, duplicates kept) — a mix of one
     version's planes with another's vectors reads as a third view."""
-    from pyspark.sql import functions as F
-
     from sparkocr.pipeline import ann_index
 
     m = ann_index._read_manifest(spark, path)
-    scan = ann_index._scan_vectors(spark, path, m, F.lit(True))
+    scan = ann_index._scan_vectors(spark, path, m)
     rows = sorted((r.vec_id, r.sig) for r in scan.select("vec_id", "sig").collect())
     return m["n_planes"], m["seed"], rows
 
@@ -1019,15 +1069,15 @@ def test_crashed_append_keeps_old_view_and_retry_lands_once(
 
 @pytest.mark.parametrize("k", range(1, _COMPACT_WRITES + 1))
 def test_crashed_compact_keeps_view_and_resume_lands_once(
-    spark, crash_index, tmp_path, monkeypatch, k
+    spark, crash_emb, crash_index, tmp_path, monkeypatch, k
 ):
     """A death at the k-th write of a compact leaves probes on the same
     rows (compaction moves rows, never changes them); the next
     compact_index call finishes the fold once and leaves exactly what a
-    clean compact leaves."""
+    clean compact leaves, and re-appending the folded id is skipped."""
     import shutil
 
-    from sparkocr.pipeline.ann_index import _read_manifest, compact_index
+    from sparkocr.pipeline.ann_index import _read_manifest, append_to_index, compact_index
 
     _, appended, clean_tree, _ = crash_index
     path = str(tmp_path / "idx")
@@ -1044,6 +1094,8 @@ def test_crashed_compact_keeps_view_and_resume_lands_once(
     assert _read_manifest(spark, path)["appends"] == []
     assert _tree(path) == clean_tree
     assert compact_index(spark, path) == {"compacted": 0, "rows": None}
+    assert append_to_index(crash_emb.filter("vec_id % 2 = 1"), path, "inc-a")["skipped"]
+    assert _view(spark, path) == want
 
 
 @pytest.mark.parametrize("k", range(1, _REBUILD_WRITES + 1))
