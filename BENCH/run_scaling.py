@@ -154,6 +154,9 @@ class Child:
         import tempfile
         import time
 
+        sys.path.insert(0, REPO)
+        from sparkocr.session import default_driver_memory
+
         self.ctrl = tempfile.mkdtemp(prefix=f"sparkocr_scaling_{cpus}_")
         self._k = 0
         child_py = os.path.join(self.ctrl, "child.py")
@@ -168,7 +171,8 @@ class Child:
             _spark_submit(),
             "--master", f"local[{cpus}]",
             "--py-files", zip_path,
-            "--driver-memory", os.environ.get("SPARKOCR_DRIVER_MEM", "24g"),
+            "--driver-memory",
+            os.environ.get("SPARKOCR_DRIVER_MEM", default_driver_memory()),
             child_py, str(cpus), data, self.ctrl,
         ]
         self.errlog = f"/tmp/sparkocr_scaling_child_{cpus}.log"

@@ -9,11 +9,12 @@ plain Parquet (SURVEY.md §7, "Iceberg absence" risk):
 - the output table ``<out_dir>/data`` is partitioned by
   ``bucket = pmod(xxhash64(conv_id), N)`` (the Parquet stand-in for Iceberg
   ``bucket(conv_id, N)``);
-- one JSON file, ``<out_dir>/_manifest.json``, holds the extractor version
-  once and one entry per completed bucket: its input fingerprint (row
-  count, and the SUM of xxhash64 over conv_id, turn_idx, role, text and
-  tool, from a single aggregate pass) plus its rows out. Like an Iceberg
-  manifest list it is rewritten whole, at most once per run;
+- one versioned JSON file, ``<out_dir>/_manifest/<v>.json``, holds the
+  extractor version once and one entry per completed bucket: its input
+  fingerprint (row count, and the SUM of xxhash64 over conv_id, turn_idx,
+  role, text and tool, from a single aggregate pass) plus its rows out.
+  Like an Iceberg manifest list it is rewritten whole, as the next
+  version, at most once per run;
 - on start, buckets whose entry matches the current fingerprint under the
   current extractor version are skipped; only pending buckets are
   filtered, extracted, and (dynamically) overwritten;
@@ -27,87 +28,30 @@ plain Parquet (SURVEY.md §7, "Iceberg absence" risk):
   the manifest still has its entry.
 
 All fingerprinting is JVM expressions; no data leaves the executors except
-the per-bucket aggregate rows. Manifest IO goes through the Hadoop
-FileSystem API (not python ``open``), so ``out_dir`` may be any filesystem
-the cluster can reach — hdfs://, s3a://, or a plain local path — exactly
-like the data writes beside it. The manifest is published after the data
-write and its read-back, so a crash before the publish leaves the previous
-manifest, whose entries never cover a bucket this run rewrote with new
-content. A crash between delete and rename of the publish leaves the
-manifest missing, which the resume treats as every bucket pending: never
-wrong, at worst one full recompute.
+the per-bucket aggregate rows. The manifest is committed through
+``sparkocr.manifest`` (Hadoop FileSystem IO, so ``out_dir`` may be on any
+filesystem the cluster reaches): it is published after the data write and
+its read-back, then the data of vanished buckets is deleted, then the older
+versions. A crash before the publish's rename leaves the previous version,
+whose entries never cover a bucket this run rewrote with new content, so
+the rerun skips that version's matching buckets and recomputes the rest.
+A crash after it is finished by the next run, which deletes what the
+crashed one did not. A run that finds its version already published by a
+concurrent run raises instead of overwriting that run's lineage.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from sparkocr import manifest
 from sparkocr.extract.dispatch import EXTRACTOR_VERSION, extract_turns
 
 _ENTRY = ("input_rows", "input_hash", "rows_out")
 _PARTITION_RE = re.compile(r"bucket=(\d+)")
-
-
-def _fs(spark: SparkSession, path_str: str):
-    """(jvm, FileSystem, Path) for ``path_str`` under the session's Hadoop
-    conf. On the local filesystem the cached instance is a checksummed
-    wrapper that shadows every file with a .crc sidecar; we use its RAW
-    inner filesystem for manifest IO instead of flipping checksum flags on
-    the SHARED cached instance (which would silently disable corruption
-    detection for every other reader in the session, Spark's own parquet
-    scans included). Remote filesystems (hdfs/s3a) have no such wrapper
-    and are used as-is."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    try:
-        fs = fs.getRawFileSystem()  # only ChecksumFileSystem has it
-    except Exception:
-        pass
-    return jvm, fs, jpath
-
-
-def read_json_fs(jvm, fs, path_str: str) -> dict:
-    """Read and parse one small JSON file through an already-resolved
-    FileSystem. LOUD: missing file / IO error / bad JSON all raise —
-    callers that want swallow-to-None semantics (manifest resume) wrap it.
-    Shared by the manifest reader here and the ANN index's versioned
-    manifests (one copy of the bulk-copy stream discipline to maintain)."""
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    stream = fs.open(p)
-    try:
-        bos = jvm.java.io.ByteArrayOutputStream()
-        # one bulk copy instead of a py4j round trip per line
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 65536, False)
-    finally:
-        stream.close()
-    return json.loads(bytes(bos.toByteArray()).decode("utf-8"))
-
-
-def publish_json_atomic(spark: SparkSession, path_str: str, payload: dict) -> None:
-    """Write a small JSON file with the manifest publish discipline:
-    write to ``.tmp`` then delete+rename. HDFS/S3 rename refuses an
-    existing destination; a crash in the gap leaves the file missing,
-    which every caller treats as "not committed" (safe). Hadoop reports
-    most failures via a false RETURN, not an exception — a silent failed
-    publish would wedge the caller's resume logic forever, so raise
-    loudly instead."""
-    jvm, fs, final = _fs(spark, path_str)
-    fs.mkdirs(final.getParent())
-    tmp = jvm.org.apache.hadoop.fs.Path(path_str + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-    fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"json publish failed: rename {path_str}.tmp")
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -146,18 +90,19 @@ def input_fingerprints(df: DataFrame, n_buckets: int) -> dict[int, tuple[int, in
     return {r["bucket"]: (r["n"], int(r["h"])) for r in rows}
 
 
-def _read_manifest(jvm, fs, path_str: str) -> tuple[str | None, dict[int, tuple]]:
-    """(extractor_version, {bucket: (input_rows, input_hash, rows_out)}) of
-    the published manifest. Only the read/parse is error-swallowed: a
-    missing, unparseable or malformed manifest reads as (None, {}), i.e.
-    every bucket pending; FS resolution stays loud in the caller."""
+def _read_manifest(spark: SparkSession, directory: str) -> tuple[int, str | None, dict]:
+    """(newest version, its extractor_version, {bucket: (input_rows,
+    input_hash, rows_out)}). No version, or an unparseable or malformed
+    newest one, reads as (v, None, {}): every bucket pending, and the next
+    publish still numbers after v."""
+    v = max(manifest.versions(spark, directory), default=0)
     try:
-        m = read_json_fs(jvm, fs, path_str)
-        return m["extractor_version"], {
+        m = manifest.read_json(spark, f"{directory}/{v}.json")
+        return v, m["extractor_version"], {
             int(b): tuple(int(e[k]) for k in _ENTRY) for b, e in m["buckets"].items()
         }
     except Exception:
-        return None, {}
+        return v, None, {}
 
 
 def _bucket_partitions(jvm, fs, data: str) -> set[int]:
@@ -179,16 +124,16 @@ def run_extract_job(
     force: bool = False,
 ) -> dict:
     """Resumable extraction: transcripts parquet → ``<out_dir>/data``
-    parquet partitioned by bucket, lineage in ``<out_dir>/_manifest.json``.
+    parquet partitioned by bucket, lineage in ``<out_dir>/_manifest/<v>.json``.
 
     Returns {"processed": [...], "skipped": [...], "rows_out": int}.
     """
     df = spark.read.parquet(input_path)
     fps = input_fingerprints(df, n_buckets)
-    manifest = os.path.join(out_dir, "_manifest.json")
+    lineage = os.path.join(out_dir, "_manifest")
     data = os.path.join(out_dir, "data")
-    jvm, fs, _ = _fs(spark, manifest)
-    version, entries = _read_manifest(jvm, fs, manifest)
+    jvm, fs, _ = manifest.resolve(spark, data)
+    v, extractor, entries = _read_manifest(spark, lineage)
     on_disk = _bucket_partitions(jvm, fs, data)
     # blast-radius guard: an EMPTY input (transient producer bug, empty
     # snapshot, typo'd path resolving to a _SUCCESS-only dir) makes every
@@ -205,7 +150,7 @@ def run_extract_job(
     skipped = [
         b
         for b, fp in sorted(fps.items())
-        if not force and version == EXTRACTOR_VERSION and entries.get(b, ())[:2] == fp
+        if not force and extractor == EXTRACTOR_VERSION and entries.get(b, ())[:2] == fp
     ]
     pending = sorted(set(fps) - set(skipped))
     # a bucket VANISHED from the input (all rows deleted) is neither
@@ -241,9 +186,11 @@ def run_extract_job(
         for b in pending:
             committed[b] = (*fps[b], int(counts.get(b, 0)))
     if pending or vanished:
-        publish_json_atomic(
+        v += 1
+        manifest.publish(
             spark,
-            manifest,
+            lineage,
+            v,
             {
                 "extractor_version": EXTRACTOR_VERSION,
                 "buckets": {str(b): dict(zip(_ENTRY, committed[b])) for b in sorted(committed)},
@@ -254,6 +201,8 @@ def run_extract_job(
     # never skipped over deleted data
     for b in vanished:
         fs.delete(jvm.org.apache.hadoop.fs.Path(os.path.join(data, f"bucket={b}")), True)
+    # every run collects, publish or not: it finishes one that died first
+    manifest.collect(spark, lineage, v)
     return {
         "processed": pending,
         "skipped": skipped,

@@ -116,14 +116,18 @@ _INC_SPAN = 1 << 47
 
 
 def _write_summary(spark, out_dir: str, counts: dict) -> None:
-    """Persist the run's counts beside its corpus (atomic tmp+rename,
-    through the Hadoop filesystem so any ``--out`` URI works) — the
-    job-level lineage artifact, the corpus counterpart of extract_job's
-    ``_manifest.json``. A consumer auditing a corpus directory reads
-    the funnel that produced it without the driver log."""
-    from sparkocr.checkpoint import publish_json_atomic
+    """Persist the run's counts beside its corpus as ``_summary.json``
+    (through the Hadoop filesystem, so any ``--out`` URI works): the
+    job-level lineage artifact, the corpus counterpart of the extract
+    job's manifest. A consumer auditing a corpus directory reads the
+    funnel that produced it without the driver log. The previous run's
+    file is removed first, then the new one is renamed into place."""
+    from sparkocr import manifest
 
-    publish_json_atomic(spark, f"{out_dir}/_summary.json", counts)
+    path = f"{out_dir}/_summary.json"
+    _, fs, jpath = manifest.resolve(spark, path)
+    fs.delete(jpath, False)
+    manifest.write_json(spark, path, counts)
 
 
 def _thresholded_pairs(pair_fn, near_threshold: float):

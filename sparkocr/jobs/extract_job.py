@@ -7,8 +7,8 @@ Usage:
 
 Stage 1: resumable per-bucket extraction (sparkocr.checkpoint) — scan →
 MapInPandas extractor → exchange on bucket → bucket-partitioned parquet,
-one file per bucket, + ``out/_manifest.json`` (one lineage entry per
-bucket).
+one file per bucket, + the newest ``out/_manifest/<v>.json`` (one lineage
+entry per bucket).
 Stage 2 (--docs): per-conversation assembly (pure JVM) → docs parquet.
 Prints a one-line JSON metrics summary.
 """
@@ -52,9 +52,9 @@ def main(argv=None) -> dict:
             # documents of a corpus that no longer exists (stage 1 with
             # force=True just emptied data/); delete it so data/ and
             # docs/ can never disagree
-            from sparkocr.checkpoint import _fs
+            from sparkocr.manifest import resolve
 
-            _, fs, jpath = _fs(spark, docs_path)
+            _, fs, jpath = resolve(spark, docs_path)
             fs.delete(jpath, True)  # False (absent) is fine
     elapsed = time.monotonic() - t0
     summary = {

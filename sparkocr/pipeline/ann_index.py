@@ -34,13 +34,14 @@ Layout under ``path``:
 Generations are immutable: a build writes a new ``g<N>``, an append adds
 a delta dataset, and ``compact_index`` folds base + deltas into a new
 ``g<N>``, moving their entries from ``appends`` to ``folded``. Each then
-commits by renaming a tmp file to the next version name, which must not
-exist yet — that rename is the index's only commit point, so a writer that
-dies before it leaves the previous version (and its files) probe-able, and
-a writer that raced another one refuses to publish. After publishing,
-builds and compactions delete what the new version no longer names; a dead
-append's unlisted delta is reclaimed by ``vacuum_index``. Probes union the
-base with every non-empty delta in ``appends``.
+commits through ``sparkocr.manifest``, by renaming a tmp file to the next
+version name, which must not exist yet — that rename is the index's only
+commit point, so a writer that dies before it leaves the previous version
+(and its files) probe-able, and a writer that raced another one refuses
+to publish. After publishing, builds and compactions delete what the new
+version no longer names; a dead append's unlisted delta is reclaimed by
+``vacuum_index``. Probes union the base with every non-empty delta in
+``appends``.
 
 Everything needed to probe is read back from the index (planes are re-seeded
 from the manifest, centroids from their table), so a probe never needs the
@@ -57,15 +58,13 @@ signature/cell directory holds one file per shuffle partition that owns it
 
 from __future__ import annotations
 
-import json
-import re
 from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from sparkocr import checkpoint
+from sparkocr import manifest
 from sparkocr.pipeline import caching
 from sparkocr.pipeline.similarity import (
     N_PLANES,
@@ -83,30 +82,17 @@ from sparkocr.pipeline.similarity import (
 )
 from sparkocr.storage import APPEND_ID_RE
 
-_VERSION_RE = re.compile(r"^(\d+)\.json$")
 #: each kind's partition column
 _PCOL = {"lsh": "sig", "ivf": "cell"}
 
 
-def _manifest_path(path: str, version: int) -> str:
-    return f"{path}/_index/{version}.json"
+def _index(path: str) -> str:
+    """The index's manifest directory."""
+    return f"{path}/_index"
 
 
 def _gen(path: str, m: dict) -> str:
     return f"{path}/g{m['generation']}"
-
-
-def _versions(spark: SparkSession, path: str) -> list[int]:
-    """Published manifest versions; other names (``.tmp`` staging) are not
-    versions."""
-    _, fs, root = checkpoint._fs(spark, f"{path}/_index")
-    if not fs.exists(root):
-        return []
-    return [
-        int(v.group(1))
-        for st in fs.listStatus(root)
-        if (v := _VERSION_RE.match(st.getPath().getName()))
-    ]
 
 
 def _read_manifest(spark: SparkSession, path: str, kind: str | None = None) -> dict:
@@ -114,55 +100,27 @@ def _read_manifest(spark: SparkSession, path: str, kind: str | None = None) -> d
     kind raises, and so does one of another ``kind`` when it is given. An
     unparseable newest manifest raises: falling back to an older version
     would revive generations its successor's writer has already deleted."""
-    versions = _versions(spark, path)
-    if not versions:
+    try:
+        v, m = manifest.latest(spark, _index(path))
+    except ValueError as e:
+        raise ValueError(
+            f"the newest ANN index manifest in {_index(path)} is unparseable: "
+            "restore it or rebuild the index"
+        ) from e
+    if m is None:
         raise ValueError(
             f"no complete ANN index at {path}: _index/ holds no manifest — "
             "the build failed mid-way, is still in progress, or the path is "
             "wrong; rebuild the index"
         )
-    v = max(versions)
-    mpath = _manifest_path(path, v)
-    jvm, fs, _ = checkpoint._fs(spark, mpath)
-    try:
-        m = checkpoint.read_json_fs(jvm, fs, mpath)
-    except ValueError as e:
-        raise ValueError(
-            f"ANN index manifest {mpath} is unparseable: restore it or "
-            "rebuild the index"
-        ) from e
     if m["kind"] not in _PCOL or kind not in (None, m["kind"]):
         want = kind or " or ".join(_PCOL)
         raise ValueError(f"index at {path} is kind={m['kind']}, expected {want}")
-    # a manifest written without ``folded`` records no folded appends
-    return {"folded": [], **m, "version": v}
-
-
-def _publish(spark: SparkSession, path: str, m: dict) -> None:
-    """Commit ``m`` as version ``m["version"]``: write a tmp file, then
-    rename it to that version's name. A version that already exists means
-    another writer committed since ``m``'s base was read — publishing would
-    drop that writer's change, so raise instead. Hadoop reports most
-    failures via a false return, so a failed rename raises too."""
-    jvm, fs, final = checkpoint._fs(spark, _manifest_path(path, m["version"]))
-    if fs.exists(final):
-        raise ValueError(
-            f"ANN index at {path} already has version {m['version']}: another "
-            "writer committed while this one ran; nothing was published — "
-            "rerun against the new version"
-        )
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{final}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(m).encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"ANN index manifest publish failed: rename {tmp}")
+    return {**m, "version": v}
 
 
 def _delete(spark: SparkSession, path_str: str) -> None:
-    _, fs, jpath = checkpoint._fs(spark, path_str)
+    _, fs, jpath = manifest.resolve(spark, path_str)
     fs.delete(jpath, True)  # recursive; absent → false, fine
 
 
@@ -171,10 +129,8 @@ def _collect(spark: SparkSession, path: str, m: dict) -> None:
     versions and every entry under ``path`` except ``_index/`` and ``m``'s
     generation. Idempotent, so a writer that died mid-way is finished by
     the next build or compact."""
-    for v in _versions(spark, path):
-        if v < m["version"]:
-            _delete(spark, _manifest_path(path, v))
-    _, fs, root = checkpoint._fs(spark, path)
+    manifest.collect(spark, _index(path), m["version"])
+    _, fs, root = manifest.resolve(spark, path)
     keep = {"_index", f"g{m['generation']}"}
     for st in fs.listStatus(root):
         if st.getPath().getName() not in keep:
@@ -248,7 +204,7 @@ def vacuum_index(
     import time
 
     m = _read_manifest(spark, path)
-    _, fs, droot = checkpoint._fs(spark, f"{_gen(path, m)}/deltas")
+    _, fs, droot = manifest.resolve(spark, f"{_gen(path, m)}/deltas")
     if not fs.exists(droot):
         return {"reclaimed": [], "skipped_recent": []}
     listed = {a["append_id"] for a in m["appends"]}
@@ -353,7 +309,8 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
                     f"{m['dim']} — delta discarded, nothing committed"
                 )
     appends = m["appends"] + [{"append_id": append_id, "rows": rows}]
-    _publish(spark, path, {**m, "version": m["version"] + 1, "appends": appends})
+    v = m["version"] + 1
+    manifest.publish(spark, _index(path), v, {**m, "version": v, "appends": appends})
     return {"append_id": append_id, "rows": rows, "skipped": False}
 
 
@@ -387,7 +344,7 @@ def compact_index(spark: SparkSession, path: str) -> dict:
                 spark.read.parquet(f"{_gen(path, m)}/centroids").write.mode(
                     "overwrite"
                 ).parquet(f"{_gen(path, new)}/centroids")
-        _publish(spark, path, new)
+        manifest.publish(spark, _index(path), new["version"], new)
         if new["generation"] != m["generation"]:
             rows = int(spark.read.parquet(f"{_gen(path, new)}/vectors").count())
         m = new
@@ -403,7 +360,7 @@ def _build(
     ``params``; then delete the previous index. An empty input raises
     before publishing, so the previous index stays."""
     spark = stamped.sparkSession
-    v = max(_versions(spark, path), default=0) + 1
+    v = max(manifest.versions(spark, _index(path)), default=0) + 1
     m = {"version": v, "generation": v, "appends": [], "folded": [], **params}
     gen, pcol = _gen(path, m), _PCOL[m["kind"]]
     stamped.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
@@ -413,7 +370,7 @@ def _build(
         raise ValueError(f"{builder}: input table has no rows — nothing was indexed")
     if centroids is not None:
         centroids.coalesce(1).write.mode("overwrite").parquet(f"{gen}/centroids")
-    _publish(spark, path, m)
+    manifest.publish(spark, _index(path), v, m)
     _collect(spark, path, m)
 
 

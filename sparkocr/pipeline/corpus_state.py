@@ -56,7 +56,8 @@ def tables(store: str) -> storage.TableStore:
     """The state's tables: ``{store}_content_byhash``,
     ``{store}_content_byid``, its commit log and meta row."""
     return storage.TableStore(
-        f"{store}_content", f"content state {store!r}", "build_content_state"
+        f"{store}_content", f"content state {store!r}", "build_content_state",
+        ("byhash", "byid"),
     )
 
 
@@ -199,7 +200,7 @@ def check_content_state(spark: SparkSession, store: str) -> dict:
     counts differ (a broken append — rebuild)."""
     read_content_meta(spark, store)
     ts = tables(store)
-    orphans = storage.orphan_rows(spark, ts, ("byhash", "byid"))
+    orphans = storage.orphan_rows(spark, ts)
     h = (
         storage.committed_rows(spark, ts, "byhash")
         .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_h"))

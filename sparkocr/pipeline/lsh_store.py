@@ -77,7 +77,9 @@ from sparkocr.pipeline.dedup import (
 def tables(store: str) -> storage.TableStore:
     """The store's tables: ``{store}_sigs``, ``{store}_bands``, its
     commit log and meta row (see module docstring)."""
-    return storage.TableStore(store, f"LSH store {store!r}", "build_lsh_store")
+    return storage.TableStore(
+        store, f"LSH store {store!r}", "build_lsh_store", ("sigs", "bands")
+    )
 
 
 def _meta_max_chars(m: dict) -> int | None:
@@ -305,7 +307,7 @@ def check_lsh_store(spark: SparkSession, store: str) -> dict:
         ).alias("band_mismatch_docs"),
     ).first()
     out = {k: int(v) for k, v in row.asDict().items()}
-    out["orphan_rows"] = storage.orphan_rows(spark, ts, ("sigs", "bands"))
+    out["orphan_rows"] = storage.orphan_rows(spark, ts)
     return out
 
 

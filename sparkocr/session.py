@@ -2,10 +2,12 @@
 
 Arrow on (all hot-path Python crosses as Arrow batches), AQE on (runtime
 coalesce + skew-join splitting), UTC session timezone (timestamps in
-fixtures are UTC), shuffle partitions scaled to parallelism. Iceberg is used
-when its runtime jar is present; otherwise the Parquet fallback with an
-explicit bucket column + a JSON lineage manifest (sparkocr.checkpoint)
-provides the same resume surface (SURVEY.md §7).
+fixtures are UTC), shuffle partitions scaled to parallelism, and a driver
+heap sized from the machine's physical memory (``default_driver_memory``;
+``SPARKOCR_DRIVER_MEM`` overrides it). Iceberg is used when its runtime jar
+is present; otherwise the Parquet fallback with an explicit bucket column +
+a versioned JSON lineage manifest (sparkocr.checkpoint) provides the same
+resume surface (SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -27,6 +29,16 @@ def iceberg_available() -> bool:
         return bool(glob.glob(os.path.join(jars, "iceberg-spark-runtime*.jar")))
     except Exception:
         return False
+
+
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARKOCR_DRIVER_MEM`` is unset: 40% of
+    physical memory in whole GB, at most 24g. A local-mode driver hosts
+    every executor thread, so an 8g heap GC-thrashes under 32 concurrent
+    parquet writers and Arrow buffers (3-4x slower on the write stage),
+    while a heap sized past the machine gets the JVM OOM-killed."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, int(0.4 * phys / 2**30)))}g"
 
 
 def bench_session(app_name: str, cpus: int) -> SparkSession:
@@ -87,10 +99,10 @@ def build_session(
         # output) — at 100 TB the smaller intermediate tables also cut
         # every downstream scan
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # local-mode driver hosts all executor threads: an 8g heap GC-thrashes
-        # under 32 concurrent parquet writers + arrow buffers (measured 3-4x
-        # slowdown on the write stage); 24g is comfortable in this 128G box.
-        .config("spark.driver.memory", os.environ.get("SPARKOCR_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARKOCR_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     if iceberg_available():

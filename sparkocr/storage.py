@@ -97,16 +97,23 @@ def save_turns_bucketed(
 
 @dataclass(frozen=True)
 class TableStore:
-    """The tables of one state store: data tables ``{prefix}_<name>``,
-    the commit log ``{prefix}_commits`` and the meta row
-    ``{prefix}_meta``. ``label`` and ``builder`` word its errors."""
+    """The tables of one state store: data tables ``{prefix}_<name>`` for
+    each name in ``data``, the commit log ``{prefix}_commits`` and the
+    meta row ``{prefix}_meta``. ``label`` and ``builder`` word its
+    errors."""
 
     prefix: str
     label: str
     builder: str
+    data: tuple[str, ...]
 
     def table(self, name: str) -> str:
         return f"{self.prefix}_{name}"
+
+    @property
+    def tables(self) -> tuple[str, ...]:
+        """Every table the store owns."""
+        return (*map(self.table, self.data), self.commits, self.meta)
 
     @property
     def commits(self) -> str:
@@ -218,10 +225,10 @@ def committed_rows(spark: SparkSession, ts: TableStore, name: str) -> DataFrame:
     )
 
 
-def orphan_rows(spark: SparkSession, ts: TableStore, names: tuple[str, ...]) -> int:
-    """Uncommitted rows across the data tables ``names``."""
+def orphan_rows(spark: SparkSession, ts: TableStore) -> int:
+    """Uncommitted rows across the store's data tables."""
     attempts = [r.attempt for r in commits(spark, ts)]
     return sum(
         spark.table(ts.table(n)).filter(~F.col(STAMP).isin(attempts)).count()
-        for n in names
+        for n in ts.data
     )

@@ -47,6 +47,7 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from sparkocr.pipeline import corpus_state, lsh_store
 from sparkocr.streaming.extract_stream import _transcript_stream
 
 
@@ -127,12 +128,7 @@ def run_corpus_stream(
     # keep serving the PRE-STREAM file listing, and a subsequent batch
     # increment_corpus here would dedup against stale state and re-admit
     # the stream's docs. Refresh every state table this stream touches.
-    for t in (
-        f"{store}_sigs", f"{store}_bands", f"{store}_meta",
-        f"{store}_commits", f"{store}_content_byhash",
-        f"{store}_content_byid", f"{store}_content_commits",
-        f"{store}_content_meta",
-    ):
+    for t in lsh_store.tables(store).tables + corpus_state.tables(store).tables:
         if spark.catalog.tableExists(t):
             spark.catalog.refreshTable(t)
     return summaries

@@ -222,6 +222,7 @@ def test_interrupted_rebuild_keeps_old_index_probeable(spark, emb, query, tmp_pa
     before that, or one over an empty table, leaves the old index
     returning its old probe results — never the old planes beside new
     vectors, and never no index at all."""
+    from sparkocr import manifest
     from sparkocr.pipeline import ann_index
 
     path = str(tmp_path / "lsh")
@@ -232,7 +233,7 @@ def test_interrupted_rebuild_keeps_old_index_probeable(spark, emb, query, tmp_pa
     def boom(*a, **kw):
         raise RuntimeError("driver died before the manifest publish")
 
-    monkeypatch.setattr(ann_index, "_publish", boom)
+    monkeypatch.setattr(manifest, "publish", boom)
     with pytest.raises(RuntimeError, match="manifest publish"):
         ann_index.build_lsh_index(emb, path, n_planes=12)  # rebuild, new space
     monkeypatch.undo()
@@ -363,7 +364,7 @@ def test_uncommitted_delta_is_invisible(spark, emb, query, tmp_path, monkeypatch
     """An append that dies after writing its delta but before publishing
     its manifest version must leave probe results unchanged — and
     retrying the same append_id afterwards completes it."""
-    from sparkocr.pipeline import ann_index
+    from sparkocr import manifest
     from sparkocr.pipeline.ann_index import append_to_index, lsh_topk_indexed
 
     path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
@@ -372,7 +373,7 @@ def test_uncommitted_delta_is_invisible(spark, emb, query, tmp_path, monkeypatch
     def boom(*a, **kw):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(ann_index, "_publish", boom)
+    monkeypatch.setattr(manifest, "publish", boom)
     with pytest.raises(RuntimeError):
         append_to_index(rest, path, "inc-crash")
     assert _rows(lsh_topk_indexed(spark, path, query, k=10)) == before
@@ -423,7 +424,7 @@ def test_compact_folds_deltas_and_resumes(spark, emb, query, tmp_path, monkeypat
     losslessly by the next call."""
     import os
 
-    from sparkocr.pipeline import ann_index
+    from sparkocr import manifest
     from sparkocr.pipeline.ann_index import (
         _read_manifest,
         append_to_index,
@@ -449,7 +450,7 @@ def test_compact_folds_deltas_and_resumes(spark, emb, query, tmp_path, monkeypat
     def boom(*a, **kw):
         raise RuntimeError("killed mid-compact")
 
-    monkeypatch.setattr(ann_index, "_publish", boom)
+    monkeypatch.setattr(manifest, "publish", boom)
     with pytest.raises(RuntimeError):
         compact_index(spark, path)
     monkeypatch.undo()
@@ -515,7 +516,7 @@ def test_compact_refuses_to_publish_over_a_concurrent_append(
     """An append that commits while a compact is folding must survive:
     the compact's publish finds its version taken and raises, the
     append's rows stay probe-able, and the next compact folds both."""
-    from sparkocr.pipeline import ann_index
+    from sparkocr import manifest
     from sparkocr.pipeline.ann_index import (
         _read_manifest,
         append_to_index,
@@ -526,14 +527,14 @@ def test_compact_refuses_to_publish_over_a_concurrent_append(
 
     path, rest = _append_fixture(spark, emb, tmp_path, "lsh")
     append_to_index(rest.filter("vec_id % 4 = 1"), path, "inc-early")
-    real_publish = ann_index._publish
+    real_publish = manifest.publish
 
-    def append_then_publish(spark_, p, m):
+    def append_then_publish(*a):
         monkeypatch.undo()
         append_to_index(rest.filter("vec_id % 4 = 3"), path, "inc-late")
-        real_publish(spark_, p, m)
+        real_publish(*a)
 
-    monkeypatch.setattr(ann_index, "_publish", append_then_publish)
+    monkeypatch.setattr(manifest, "publish", append_then_publish)
     with pytest.raises(ValueError, match="another writer committed"):
         compact_index(spark, path)
     appends = [a["append_id"] for a in _read_manifest(spark, path)["appends"]]
@@ -933,7 +934,7 @@ def _fail_kth_write(monkeypatch, k):
     order (``k=None`` never dies). Returns the writes that ran."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from sparkocr import checkpoint
+    from sparkocr import manifest
 
     ran = []
 
@@ -942,7 +943,7 @@ def _fail_kth_write(monkeypatch, k):
             raise RuntimeError(f"simulated death at write {k}: {what}")
         ran.append(what)
 
-    real_fs, real_parquet = checkpoint._fs, DataFrameWriter.parquet
+    real_fs, real_parquet = manifest.resolve, DataFrameWriter.parquet
 
     def fs(spark, path_str):
         jvm, inner, jpath = real_fs(spark, path_str)
@@ -952,7 +953,7 @@ def _fail_kth_write(monkeypatch, k):
         hit(f"parquet {path}")
         return real_parquet(self, path, *a, **kw)
 
-    monkeypatch.setattr(checkpoint, "_fs", fs)
+    monkeypatch.setattr(manifest, "resolve", fs)
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     return ran
 

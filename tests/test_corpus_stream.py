@@ -7,15 +7,11 @@ from datetime import datetime
 
 import pytest
 
-from test_incremental_corpus import BASE_TEXTS, _text
+from test_incremental_corpus import BASE_TEXTS, _text, state_tables
 
 STORE = "stream_state_t"
 
-_STATE_TABLES = (
-    "_sigs", "_bands", "_meta", "_commits",
-    "_content_byhash", "_content_byid", "_content_commits",
-    "_content_meta",
-)
+_STATE_TABLES = state_tables(STORE)
 
 
 def _write_file(path: str, convs: dict) -> None:
@@ -70,8 +66,8 @@ def stream_env(spark, tmp_path_factory):
     )
     yield {"root": root, "in": str(in_dir)}
     caching.release_all()
-    for suf in _STATE_TABLES:
-        spark.sql(f"DROP TABLE IF EXISTS {STORE}{suf}")
+    for t in _STATE_TABLES:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _corpus_rows(spark, out_root):

@@ -12,11 +12,12 @@ from pyspark.sql import functions as F
 
 STORE = "inc_state_t"
 
-_STATE_TABLES = (
-    "_sigs", "_bands", "_meta", "_commits",
-    "_content_byhash", "_content_byid", "_content_commits",
-    "_content_meta",
-)
+
+def state_tables(store: str) -> tuple[str, ...]:
+    """Every table of ``store``'s LSH store and content state."""
+    from sparkocr.pipeline import corpus_state, lsh_store
+
+    return lsh_store.tables(store).tables + corpus_state.tables(store).tables
 
 
 def _text(seed: int, mutate: int = 0) -> str:
@@ -60,8 +61,8 @@ def base_built(spark, tmp_path_factory):
     caching.release_all()
     yield {"root": root, "counts": counts}
     caching.release_all()
-    for suf in _STATE_TABLES:
-        spark.sql(f"DROP TABLE IF EXISTS {STORE}{suf}")
+    for t in state_tables(STORE):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _corpus(spark, out_dir):
@@ -419,3 +420,20 @@ def test_state_side_joins_are_exchange_free(spark, base_built):
                     break
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+
+
+def test_catalog_holds_exactly_the_stores_tables(spark, base_built, tmp_path):
+    """The two stores name every table they own: after the build and an
+    increment, the catalog's ``{STORE}_*`` tables are exactly the union
+    of their lists."""
+    from sparkocr.jobs.corpus_job import increment_corpus
+    from sparkocr.pipeline import caching
+
+    inc_in = _write(spark, str(tmp_path / "catalog_in.parquet"), {"cat0": _text(77)})
+    increment_corpus(
+        spark, inc_in, str(tmp_path / "catalog_out"), STORE, "day_catalog", min_words=1
+    )
+    caching.release_all()
+    listed = {t.name for t in spark.catalog.listTables() if t.name.startswith(f"{STORE}_")}
+    assert listed == set(state_tables(STORE))
+    assert len(listed) == 8

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
 import pytest
 
@@ -21,15 +23,22 @@ def first_run(spark, tiny_transcripts, tmp_path_factory):
     return out, result
 
 
+def _newest(out):
+    """The newest manifest version's path under ``out``."""
+    d = os.path.join(out, "_manifest")
+    v = max(int(n[: -len(".json")]) for n in os.listdir(d) if re.fullmatch(r"\d+\.json", n))
+    return os.path.join(d, f"{v}.json")
+
+
 def _manifest(out):
-    with open(os.path.join(out, "_manifest.json")) as f:
+    with open(_newest(out)) as f:
         return json.load(f)
 
 
 def _edit_manifest(out, edit):
     m = _manifest(out)
     edit(m)
-    with open(os.path.join(out, "_manifest.json"), "w") as f:
+    with open(_newest(out), "w") as f:
         json.dump(m, f)
 
 
@@ -116,8 +125,9 @@ def test_manifest_io_leaves_no_crc_sidecars(first_run):
     # wrapper (which would both litter .crc files and, if checksums were
     # instead globally disabled, kill corruption detection session-wide)
     out, _ = first_run
-    assert os.path.exists(os.path.join(out, "_manifest.json"))
-    assert not [f for f in os.listdir(out) if f.endswith(".crc")]
+    mdir = os.path.join(out, "_manifest")
+    assert os.path.exists(_newest(out))
+    assert not [f for f in os.listdir(out) + os.listdir(mdir) if f.endswith(".crc")]
 
 
 def test_fingerprint_detects_even_multiplicity_change(spark):
@@ -160,11 +170,11 @@ def test_empty_input_refuses_to_wipe_completed_output(spark, tiny_transcripts, t
         run_extract_job(spark, empty, out, n_buckets=N_BUCKETS)
 
     # a torn publish attempt is NOT completed output: an out dir whose
-    # only manifest file is a torn _manifest.json.tmp must not trigger
+    # only manifest file is a torn _manifest/1.json.tmp must not trigger
     # the refusal
     out2 = str(tmp_path / "out_tmp_only")
-    os.makedirs(out2)
-    with open(os.path.join(out2, "_manifest.json.tmp"), "w") as f:
+    os.makedirs(os.path.join(out2, "_manifest"))
+    with open(os.path.join(out2, "_manifest", "1.json.tmp"), "w") as f:
         f.write('{"extractor_version": ')
     r0 = run_extract_job(spark, empty, out2, n_buckets=N_BUCKETS)
     assert not r0["processed"] and not r0["skipped"]
@@ -184,32 +194,36 @@ def test_empty_input_refuses_to_wipe_completed_output(spark, tiny_transcripts, t
 def test_one_manifest_publish_per_run(
     spark, tiny_transcripts, tiny_transcripts_without, tmp_path, monkeypatch
 ):
-    """Manifest traffic: a run publishes one file, and only when its
+    """Manifest traffic: a run publishes one version, and only when its
     commit changes the manifest — not one file per bucket."""
-    from sparkocr import checkpoint
+    from sparkocr import manifest
 
     out = str(tmp_path / "out")
-    real = checkpoint.publish_json_atomic
+    real = manifest.publish
     calls = []
 
     def counting(*a):
-        calls.append(a[1])
+        calls.append(a[1:3])
         real(*a)
 
-    monkeypatch.setattr(checkpoint, "publish_json_atomic", counting)
+    monkeypatch.setattr(manifest, "publish", counting)
 
     def publishes(input_path):
         calls.clear()
         return run_extract_job(spark, input_path, out, n_buckets=N_BUCKETS), len(calls)
 
+    mdir = os.path.join(out, "_manifest")
     r, n = publishes(tiny_transcripts)
     assert len(r["processed"]) == N_BUCKETS and n == 1
+    assert calls == [(mdir, 1)]
     r, n = publishes(tiny_transcripts)
     assert r["processed"] == [] and n == 0
     # one bucket vanished, nothing pending: the pruned manifest only
     r, n = publishes(tiny_transcripts_without([0]))
     assert r["processed"] == [] and len(r["skipped"]) == N_BUCKETS - 1 and n == 1
-    assert set(calls) == {os.path.join(out, "_manifest.json")}
+    assert calls == [(mdir, 2)]
+    # the older version is collected once the newer one is published
+    assert os.listdir(mdir) == ["2.json"]
 
 
 @pytest.fixture(scope="module")
@@ -281,7 +295,7 @@ def test_empty_input_refuses_to_wipe_partitions_without_manifest(
 
     out = str(tmp_path / "out")
     run_extract_job(spark, tiny_transcripts, out, n_buckets=N_BUCKETS)
-    os.remove(os.path.join(out, "_manifest.json"))
+    shutil.rmtree(os.path.join(out, "_manifest"))
     before = _part_files(out)
     empty = str(tmp_path / "empty.parquet")
     pq.write_table(datagen.SCHEMA.empty_table(), empty)
